@@ -4,7 +4,8 @@ import graft.analyzer._
 import graft.parser.{Ast, Parser}
 import graft.parser.Ast._
 import graft.planner.{CatalogTable, Planner}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,10 +18,12 @@ final case class CommandOk(message: String) extends ExecResult
 
 /** Session + catalog for the mutable dialect: databases → tables
   * (ref include/mutable/catalog/Catalog.hpp / Schema.hpp §1.1 of
-  * SURVEY.md). Tables live as DataFrames — created empty by DDL,
-  * populated by INSERT VALUES / IMPORT DSV, or registered externally
-  * (parquet-backed) for scale. One database is "in use" at a time
-  * (`USE db`), like the reference. */
+  * SURVEY.md). A table made by CREATE TABLE is an immutable row store
+  * on the driver, like the reference's in-memory store: INSERT VALUES
+  * and IMPORT DSV convert their batch when they run and append it, and
+  * the planner sees the rows as one `LocalRelation`. A table added by
+  * `registerExternal` (parquet-backed, for scale) keeps its DataFrame.
+  * One database is "in use" at a time (`USE db`), like the reference. */
 final class EngineSession(val spark: SparkSession,
     val refParity: Boolean = false) {
   import EngineSession.TableDef
@@ -37,8 +40,8 @@ final class EngineSession(val spark: SparkSession,
   def currentDatabase: Option[String] = currentDb
 
   /** Cheap copy-on-write clone: new catalog maps, shared (immutable)
-    * DataFrames. Used by the golden-corpus harness to give every spec
-    * file a fresh catalog over the same cached fixture tables. */
+    * row stores and DataFrames. Used by the golden-corpus harness to
+    * give every spec file a fresh catalog over the same fixture tables. */
   def fork(): EngineSession = {
     val s = new EngineSession(spark, refParity)
     databases.foreach { case (dbName, tables) =>
@@ -65,7 +68,7 @@ final class EngineSession(val spark: SparkSession,
   def registerExternal(name: String, df: DataFrame): Unit = {
     val fields = df.schema.fields.toSeq.map(f =>
       f.name -> MTypes.fromSpark(f.dataType))
-    db().put(name.toLowerCase, TableDef(name, fields, Map.empty, df))
+    db().put(name.toLowerCase, TableDef(name, fields, Map.empty, df, None))
   }
 
   private def lookup(name: String): Option[CatalogTable] =
@@ -108,7 +111,7 @@ final class EngineSession(val spark: SparkSession,
         throw new SemaError(s"cannot drop database '$name' while it is in use")
       if (databases.remove(name.toLowerCase).isEmpty && !ifExists)
         throw new SemaError(s"no database '$name'")
-      dbIndexes.remove(name.toLowerCase)
+      dbIndexes.remove(name.toLowerCase).foreach(_.values.foreach(release))
       CommandOk(s"dropped database $name")
 
     case UseDatabase(name) =>
@@ -149,13 +152,10 @@ final class EngineSession(val spark: SparkSession,
             throw new SemaError(s"CHECK constraint on '${c.name}' is not boolean")
         }
       }
-      val schema = StructType(fields.map { case (n, t) =>
-        StructField(n, MTypes.toSpark(t))
-      })
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
       db().put(name.toLowerCase, TableDef(name, fields,
-        cols.map(c => c.name -> c.constraints).toMap, empty))
+        cols.map(c => c.name -> c.constraints).toMap,
+        GraftShim.localRelation(spark, sparkSchema(fields), Vector.empty),
+        Some(Vector.empty)))
       CommandOk(s"created table $name")
 
     case DropTable(names, ifExists) =>
@@ -165,7 +165,7 @@ final class EngineSession(val spark: SparkSession,
         // indexes do not outlive their table
         for (dbName <- currentDb; idx <- dbIndexes.get(dbName)) {
           idx.filterInPlace { (_, d) =>
-            if (d.table == n.toLowerCase) { d.built.foreach(_.unpersist()); false }
+            if (d.table == n.toLowerCase) { release(d); false }
             else true
           }
         }
@@ -214,17 +214,17 @@ final class EngineSession(val spark: SparkSession,
       val indexes = dbIndexes(currentDb.getOrElse(
         throw new SemaError("no database in use")))
       names.foreach { n =>
-        if (indexes.remove(n.toLowerCase).isEmpty && !ifExists)
-          throw new SemaError(s"no index '$n'")
+        indexes.remove(n.toLowerCase) match {
+          case Some(d) => release(d)
+          case None => if (!ifExists) throw new SemaError(s"no index '$n'")
+        }
       }
       CommandOk(s"dropped index ${names.mkString(", ")}")
 
     case InsertStmt(table, rows) =>
       val t = db().getOrElse(table.toLowerCase,
         throw new SemaError(s"no table '$table'"))
-      val schema = StructType(t.fields.map { case (n, tp) =>
-        StructField(n, MTypes.toSpark(tp))
-      })
+      val schema = sparkSchema(t.fields)
       // NOT NULL / PRIMARY KEY enforcement (ref Sema validates tuple
       // shape; a NULL in a non-nullable attribute is a sema error)
       val notNull: Set[String] = t.constraints.collect {
@@ -242,20 +242,19 @@ final class EngineSession(val spark: SparkSession,
           v
         })
       }
-      val newDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(data), schema)
-      // CHECK enforcement: every inserted row must satisfy every CHECK
-      // (evaluated distributed as a filter — no driver loop)
-      val checks = t.constraints.toSeq.flatMap { case (cn, cs) =>
-        cs.collect { case Ast.Check(e) => (cn, e) }
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      val batch = data.map(r => toCatalyst(r).asInstanceOf[InternalRow])
+      // CHECK enforcement: every inserted row must satisfy every CHECK,
+      // evaluated over the batch alone; the filter folds into the
+      // batch's LocalRelation on the driver, so `isEmpty` runs no job
+      val newDf = GraftShim.localRelation(spark, schema, batch)
+      t.constraints.foreach { case (cn, cs) =>
+        cs.collect { case Ast.Check(e) =>
+          if (!newDf.filter(!coalesce(checkColumn(e, t.fields), lit(true))).isEmpty)
+            throw new SemaError(s"CHECK constraint on '$cn' violated by INSERT")
+        }
       }
-      checks.foreach { case (cn, e) =>
-        val cond = checkColumn(e, t.fields)
-        if (newDf.filter(!coalesce(cond, lit(true))).limit(1).count() > 0)
-          throw new SemaError(s"CHECK constraint on '$cn' violated by INSERT")
-      }
-      t.df = t.df.unionByName(newDf)
-      invalidateIndexes(table)
+      append(t, schema, batch)
       CommandOk(s"inserted ${rows.length} rows into $table")
 
     // instructions (ref DatabaseCommand.cpp:23-48): learn_spns trains
@@ -407,9 +406,38 @@ final class EngineSession(val spark: SparkSession,
             regexp_extract(col(n), p, 6).cast("decimal(8,6)")).as(n)
         case (n, _) => col(n)
       }
-      t.df = t.df.unionByName(df.select(converted: _*))
-      invalidateIndexes(table)
+      // the file is read once, here: the table keeps the rows, not the
+      // file (ref DSVReader loads into the store at IMPORT time)
+      val tableSchema = sparkSchema(t.fields)
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(tableSchema)
+      append(t, tableSchema, df.select(converted: _*).collect().toSeq
+        .map(r => toCatalyst(r).asInstanceOf[InternalRow]))
       CommandOk(s"imported $path into $table")
+  }
+
+  private def sparkSchema(fields: Seq[(String, MType)]): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, MTypes.toSpark(t)) })
+
+  /** Append one converted batch, O(batch): a dialect table's store
+    * grows by it and its plan stays one LocalRelation; an external
+    * table unions it onto its DataFrame. Indexes on the table are
+    * invalidated. */
+  private def append(t: TableDef, schema: StructType, batch: Seq[InternalRow]): Unit = {
+    t.rows match {
+      case Some(rows) =>
+        val all = rows ++ batch
+        t.rows = Some(all)
+        t.df = GraftShim.localRelation(spark, schema, all)
+      case None =>
+        t.df = t.df.unionByName(GraftShim.localRelation(spark, schema, batch))
+    }
+    invalidateIndexes(t.name)
+  }
+
+  /** Drop an index's built structure, releasing what it persisted. */
+  private def release(d: EngineSession.IndexDef): Unit = {
+    d.built.foreach(_.unpersist())
+    d.built = None
   }
 
   /** Drop the built structure (keep the definition) for every index on
@@ -420,10 +448,7 @@ final class EngineSession(val spark: SparkSession,
       dbName <- currentDb
       idx <- dbIndexes.get(dbName)
       d <- idx.values if d.table == table.toLowerCase
-    } {
-      d.built.foreach(_.unpersist())
-      d.built = None
-    }
+    } release(d)
 
   /** The IndexScan access path (ref physical operator pattern
     * Filter(Scan) → IndexScan, WasmOperator.hpp:397-406): for a
@@ -517,7 +542,16 @@ final class EngineSession(val spark: SparkSession,
                 val m =
                   if (entry.method == "rmi") graft.storage.Indexes.RmiMethod
                   else graft.storage.Indexes.ArrayMethod
-                val b = graft.storage.Indexes.build(t.df, entry.keyCol, m)
+                // a dialect table's rows are on the driver already: sort
+                // them there instead of range-shuffling the DataFrame
+                val b = t.rows match {
+                  case Some(rows) =>
+                    val schema = sparkSchema(t.fields)
+                    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+                    graft.storage.Indexes.buildLocal(spark, schema,
+                      rows.map(r => toRow(r).asInstanceOf[Row]), entry.keyCol, m)
+                  case None => graft.storage.Indexes.build(t.df, entry.keyCol, m)
+                }
                 entry.built = Some(b)
                 b
               }
@@ -710,11 +744,15 @@ final class EngineSession(val spark: SparkSession,
 }
 
 object EngineSession {
+  /** A catalog table. `rows` is the driver-resident store of a table
+    * made by CREATE TABLE (`df` is its LocalRelation); it is None for a
+    * table added by `registerExternal`, whose rows live only in `df`. */
   final case class TableDef(
       name: String,
       fields: Seq[(String, MType)],
       constraints: Map[String, Seq[Ast.Constraint]],
-      var df: DataFrame)
+      var df: DataFrame,
+      var rows: Option[Vector[InternalRow]])
 
   /** A named index: definition from CREATE INDEX plus the lazily
     * bulkloaded structure (None until first use / after

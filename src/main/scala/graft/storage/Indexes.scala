@@ -3,6 +3,7 @@ package graft.storage
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Physical-access research surface: sorted-array and learned (RMI)
@@ -27,10 +28,17 @@ import org.apache.spark.storage.StorageLevel
   * A range lookup prunes partitions on the driver via the fences
   * (`PartitionPruningRDD` — non-matching partitions are never
   * scheduled), then each surviving partition answers with
-  * lowerBound/upperBound over its local array. Build cost is one
-  * range-exchange + sort, the same work as writing a sorted table;
-  * the cached index partitions play the role of the reference's
-  * in-memory store.
+  * lowerBound/upperBound over its local array.
+  *
+  * Two bulkloads build the same leaves and fences:
+  *  - `build`, over a DataFrame (an externally registered parquet
+  *    table): one range exchange + sort, the same work as writing a
+  *    sorted table; the leaves are persisted and the fences collected.
+  *  - `buildLocal`, over rows already on the driver (a dialect table
+  *    filled by INSERT / IMPORT): sort on the driver, cut into
+  *    `defaultParallelism` leaves, compute the fences locally, and hand
+  *    the leaves over as an un-persisted `parallelize` RDD — no job,
+  *    shuffle or persist.
   */
 object Indexes {
 
@@ -265,6 +273,13 @@ object Indexes {
       throw new IllegalArgumentException(s"unindexable key type: ${other.getClass}")
   }
 
+  /** One leaf over key-sorted rows: the key array and, for the RMI
+    * method, the models trained over it. Both bulkloads build their
+    * leaves with it. */
+  private def leaf(keys: Array[Long], rows: Array[Row],
+      method: IndexMethod): IndexPartition =
+    new IndexPartition(keys, rows, if (method == RmiMethod) trainRmi(keys) else null)
+
   /** Bulkload (ref ArrayIndex::bulkload): one range exchange + local
     * sort, then each partition materializes its sorted leaf. Integer
     * and DATE keys are mapped to longs on extraction (keyToLong). */
@@ -276,24 +291,41 @@ object Indexes {
       else spark.sparkContext.defaultParallelism
     val keyIdx = df.schema.fieldIndex(keyCol)
     val sorted = df.repartitionByRange(parts, col(keyCol)).sortWithinPartitions(keyCol)
-    val schema = df.schema
-    val wantModels = method == RmiMethod
     val leafRdd = sorted.rdd.mapPartitions { it =>
       // NULL keys are not indexed (ref ArrayIndex::bulkload loads only
       // non-null keys); a lookup predicate can never match NULL anyway
       val rows = it.filter(_.get(keyIdx) != null).toArray
       if (rows.isEmpty) Iterator.empty
-      else {
-        val keys = rows.map(r => keyToLong(r.get(keyIdx)))
-        val models = if (wantModels) trainRmi(keys) else null
-        Iterator.single(new IndexPartition(keys, rows, models))
-      }
+      else Iterator.single(leaf(rows.map(r => keyToLong(r.get(keyIdx))), rows, method))
     }.persist(StorageLevel.MEMORY_AND_DISK)
     val fences = leafRdd
       .mapPartitionsWithIndex { (pid, it) =>
         it.map(p => Fence(pid, p.minKey, p.maxKey, p.n.toLong))
       }
       .collect()
+    new DistributedIndex(spark, df.schema, leafRdd, fences, method)
+  }
+
+  /** Bulkload over rows held on the driver: sort (key, row) on the
+    * driver, skipping NULL keys as `build` does, cut the sorted rows
+    * into `defaultParallelism` non-empty leaves and compute their
+    * fences locally. Leaf i is partition i of an un-persisted
+    * `parallelize` RDD, so building runs no job, shuffle or persist. */
+  def buildLocal(spark: SparkSession, schema: StructType, rows: Seq[Row],
+      keyCol: String, method: IndexMethod = ArrayMethod): DistributedIndex = {
+    val keyIdx = schema.fieldIndex(keyCol)
+    val sorted = rows.iterator.filter(!_.isNullAt(keyIdx))
+      .map(r => (keyToLong(r.get(keyIdx)), r)).toArray.sortBy(_._1)
+    val n = sorted.length
+    val parts = math.min(spark.sparkContext.defaultParallelism, n)
+    val leaves = (0 until parts).map { p =>
+      val part = sorted.slice((p.toLong * n / parts).toInt, ((p + 1).toLong * n / parts).toInt)
+      leaf(part.map(_._1), part.map(_._2), method)
+    }
+    val fences = leaves.zipWithIndex.map { case (l, pid) =>
+      Fence(pid, l.minKey, l.maxKey, l.n.toLong)
+    }.toArray
+    val leafRdd = spark.sparkContext.parallelize(leaves, math.max(1, parts))
     new DistributedIndex(spark, schema, leafRdd, fences, method)
   }
 }

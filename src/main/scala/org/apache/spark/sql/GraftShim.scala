@@ -26,6 +26,16 @@ object GraftShim {
   def integralDivide(l: Column, r: Column): Column =
     column(catalyst.expressions.IntegralDivide(expression(l), expression(r)))
 
+  /** A DataFrame over rows held on the driver: one LocalRelation node,
+    * so the plan stays one node however many batches filled the rows,
+    * and a driver-side action over it (`isEmpty`, `collect`) runs no
+    * job. */
+  def localRelation(spark: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(
+        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Per-session UUID (`sessionUUID` is private[sql]): the stable
     * cache key for session-scoped state — unlike an identity hash it
     * can never be recycled onto a different live session. */

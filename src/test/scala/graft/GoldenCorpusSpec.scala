@@ -211,6 +211,8 @@ class GoldenCorpusSpec extends AnyFunSuite {
   }
 
   if (!available) {
+    // the ignore alone is easy to miss in the log: say that no spec ran
+    info("golden corpus: 0 specs ran (reference absent)")
     ignore("reference corpus present") {}
   } else {
     val files = specFiles

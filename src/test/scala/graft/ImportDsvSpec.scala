@@ -48,6 +48,23 @@ class ImportDsvSpec extends AnyFunSuite {
     }
   }
 
+  test("IMPORT copies the file: rewriting or deleting it later changes nothing") {
+    val p = Files.createTempFile("graft_dsv", ".csv")
+    try {
+      Files.writeString(p, "1,alpha,1.5\n2,beta,2.5\n")
+      val s = fresh()
+      s.execute(s"""IMPORT INTO T DSV "$p";""")
+      def rows: Seq[Seq[Any]] =
+        s.query("SELECT id, name, score FROM T ORDER BY id;").collect().toSeq.map(_.toSeq)
+      val imported = Seq(Seq(1, "alpha", 1.5), Seq(2, "beta", 2.5))
+      assert(rows == imported)
+      Files.writeString(p, "9,rewritten,9.5\n")
+      assert(rows == imported)
+      Files.delete(p)
+      assert(rows == imported)
+    } finally Files.deleteIfExists(p)
+  }
+
   test("import appends to existing rows") {
     withCsv("7,seven,7.0\n") { path =>
       val s = fresh()

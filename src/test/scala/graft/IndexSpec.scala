@@ -84,25 +84,87 @@ class IndexSpec extends AnyFunSuite {
     s.execute("""CREATE DATABASE ixdb; USE ixdb;
       CREATE TABLE ix (k INT(4), v INT(4));
       INSERT INTO ix VALUES (1, 10), (5, 50), (9, 90), (12, 120), (20, 200);""")
-    def rows(sql: String): Seq[Seq[Any]] =
-      s.query(sql).collect().toSeq.map(_.toSeq)
+    def rows(sql: String, on: EngineSession = s): Seq[Seq[Any]] =
+      on.query(sql).collect().toSeq.map(_.toSeq).sortBy(_.mkString(","))
+    /** Rows of a SELECT the index must serve. */
+    def routed(sql: String, on: EngineSession = s): Seq[Seq[Any]] = {
+      val before = graft.storage.Indexes.rangeScans.get()
+      val got = rows(sql, on)
+      assert(graft.storage.Indexes.rangeScans.get() > before, s"index not used: $sql")
+      got
+    }
     val unindexed = rows("SELECT k, v FROM ix WHERE k >= 5 AND k < 13;")
     s.execute("CREATE INDEX ixk ON ix USING array (k);")
-    val before = graft.storage.Indexes.rangeScans.get()
-    val indexed = rows("SELECT k, v FROM ix WHERE k >= 5 AND k < 13;")
-    assert(graft.storage.Indexes.rangeScans.get() > before, "index not used")
-    assert(indexed.sortBy(_.head.asInstanceOf[Int]) ==
-      unindexed.sortBy(_.head.asInstanceOf[Int]))
+    assert(routed("SELECT k, v FROM ix WHERE k >= 5 AND k < 13;") == unindexed)
     // point lookup + residual non-key predicate stays correct
     assert(rows("SELECT v FROM ix WHERE k = 12 AND v > 100;") == Seq(Seq(120)))
     assert(rows("SELECT v FROM ix WHERE k = 12 AND v > 500;").isEmpty)
     // INSERT invalidates: new row must be visible through the index path
     s.execute("INSERT INTO ix VALUES (7, 70);")
-    assert(rows("SELECT v FROM ix WHERE k = 7;") == Seq(Seq(70)))
+    assert(routed("SELECT v FROM ix WHERE k = 7;") == Seq(Seq(70)))
     // rmi method works through the dialect too
     s.execute("CREATE INDEX ixk2 ON ix USING rmi (v);")
     assert(rows("SELECT k FROM ix WHERE v >= 50 AND v <= 90;")
       .map(_.head).toSet == Set(5, 7, 9))
+    // duplicate keys come back whole; a NULL key is not indexed and
+    // never matches
+    s.execute("INSERT INTO ix VALUES (12, 121), (NULL, 0), (30, NULL);")
+    assert(routed("SELECT v FROM ix WHERE k = 12;") == Seq(Seq(120), Seq(121)))
+    assert(routed("SELECT k FROM ix WHERE k <= 5;") == Seq(Seq(1), Seq(5)))
+    assert(routed("SELECT k FROM ix WHERE v <= 10;") == Seq(Seq(1), Seq(null)))
+    // rows fed by IMPORT are indexed like inserted ones
+    val csv = java.nio.file.Files.createTempFile("graft_ix", ".csv")
+    try {
+      java.nio.file.Files.writeString(csv, "3,30\n12,122\n")
+      s.execute(s"""IMPORT INTO ix DSV "$csv";""")
+    } finally java.nio.file.Files.delete(csv)
+    assert(routed("SELECT v FROM ix WHERE k = 12;") == Seq(Seq(120), Seq(121), Seq(122)))
+    assert(routed("SELECT k FROM ix WHERE v >= 30 AND v <= 50;") == Seq(Seq(3), Seq(5)))
+    // a DATE key fed by IMPORT, with a duplicate and a NULL date
+    val dcsv = java.nio.file.Files.createTempFile("graft_ixd", ".csv")
+    try {
+      java.nio.file.Files.writeString(dcsv,
+        "2024-01-05,1\n2024-03-15,2\n2024-03-15,3\n,4\n-0100-06-01,5\n")
+      s.execute(s"""CREATE TABLE ev (d DATE, v INT(4));
+        CREATE INDEX evd ON ev (d);
+        IMPORT INTO ev DSV "$dcsv";""")
+    } finally java.nio.file.Files.delete(dcsv)
+    assert(routed("SELECT v FROM ev WHERE d = d'2024-03-15';") == Seq(Seq(2), Seq(3)))
+    assert(routed("SELECT v FROM ev WHERE d < d'2024-03-01';") == Seq(Seq(1), Seq(5)))
+    // an index over an empty table answers empty, then sees the first rows
+    s.execute("CREATE TABLE e (k INT(4)); CREATE INDEX ek ON e (k);")
+    assert(routed("SELECT k FROM e WHERE k >= 0;").isEmpty)
+    s.execute("INSERT INTO e VALUES (4);")
+    assert(routed("SELECT k FROM e WHERE k >= 0;") == Seq(Seq(4)))
+    // a fork's INSERT leaves the parent session's rows unchanged
+    val f = s.fork()
+    f.execute("INSERT INTO ix VALUES (12, 999);")
+    assert(routed("SELECT v FROM ix WHERE k = 12;", f) ==
+      Seq(Seq(120), Seq(121), Seq(122), Seq(999)))
+    assert(routed("SELECT v FROM ix WHERE k = 12;") == Seq(Seq(120), Seq(121), Seq(122)))
+    assert(rows("SELECT COUNT(*) FROM ix;") == Seq(Seq(11L)))
+  }
+
+  test("DROP INDEX and DROP DATABASE release a persisted index") {
+    val sc = spark.sparkContext
+    val s = new EngineSession(spark)
+    s.execute("CREATE DATABASE ixleak; USE ixleak;")
+    // a parquet-backed table: the one whose index persists its leaves
+    s.registerExternal("o", orders)
+    def build(name: String): Unit = {
+      s.execute(s"CREATE INDEX $name ON o (o_orderkey);")
+      s.query("SELECT o_orderkey FROM o WHERE o_orderkey = 1;").collect()
+    }
+    def pins: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val before = pins
+    build("ok1")
+    assert((pins -- before).nonEmpty, "index leaves were not persisted")
+    s.execute("DROP INDEX ok1;")
+    assert((pins -- before).isEmpty, "DROP INDEX left its leaves persisted")
+    build("ok2")
+    assert((pins -- before).nonEmpty, "index leaves were not persisted")
+    s.execute("CREATE DATABASE ixother; USE ixother; DROP DATABASE ixleak;")
+    assert((pins -- before).isEmpty, "DROP DATABASE left its index leaves persisted")
   }
 
   test("temporal-key index: epoch-milli mapping matches a filter scan") {

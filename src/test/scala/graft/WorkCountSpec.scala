@@ -1,0 +1,61 @@
+package graft
+
+import graft.analyzer.SemaError
+import org.apache.spark.ListenerBusShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Work counts of the dialect write and index paths: Spark jobs per job
+  * group and analyzed-plan sizes, which host load cannot move (no wall
+  * time is asserted). */
+class WorkCountSpec extends AnyFunSuite {
+  import TestSession._
+
+  /** Jobs started per job group. */
+  private final class JobCounter extends SparkListener {
+    private val byGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach(g => byGroup.merge(g, 1, (a, b) => a + b))
+    def apply(group: String): Int = byGroup.getOrDefault(group, 0)
+  }
+
+  test("dialect writes run no job, the first indexed read after one runs one, " +
+      "and the table plan does not grow with writes") {
+    val sc = spark.sparkContext
+    val s = new EngineSession(spark)
+    s.execute("""CREATE DATABASE wc; USE wc;
+      CREATE TABLE acct (id INT(8) NOT NULL PRIMARY KEY,
+        amount INT(8) NOT NULL CHECK (amount >= 0));
+      CREATE INDEX acct_id ON acct USING array (id);""")
+    val counter = new JobCounter
+    var groups = 0
+    /** Jobs `body` ran, counted after the listener bus drained. */
+    def jobs(body: => Any): Int = {
+      groups += 1
+      val g = s"workcount-$groups"
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+      ListenerBusShim.drain(sc)
+      counter(g)
+    }
+    def planNodes: Int =
+      s.query("SELECT * FROM acct;").queryExecution.analyzed.collect { case p => p }.size
+    sc.addSparkListener(counter)
+    try {
+      assert(jobs(s.execute("INSERT INTO acct VALUES (1, 10), (2, 20);")) == 0,
+        "INSERT with a CHECK ran a job")
+      assert(jobs(intercept[SemaError](s.execute("INSERT INTO acct VALUES (3, -1);"))) == 0,
+        "a CHECK violation ran a job")
+      val afterOne = planNodes
+      var got: Seq[Seq[Any]] = Nil
+      assert(jobs {
+        got = s.query("SELECT id, amount FROM acct WHERE id = 2;").collect().toSeq.map(_.toSeq)
+      } == 1, "the first indexed read after a write ran more than its lookup")
+      assert(got == Seq(Seq(2L, 20L)))
+      (3 to 11).foreach(i => s.execute(s"INSERT INTO acct VALUES ($i, $i);"))
+      assert(planNodes == afterOne, "the table plan grew with writes")
+      assert(s.query("SELECT COUNT(*) FROM acct;").collect()(0).getLong(0) == 11)
+    } finally sc.removeSparkListener(counter)
+  }
+}
