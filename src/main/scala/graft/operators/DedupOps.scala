@@ -393,13 +393,14 @@ object DedupOps {
     //    only pin the op keeps.
     //  - PASS 2: the shingle stream re-derived as bare fixed-width
     //    (doc_id, k) rows — 16 B/row, radix-sortable, no strings. The
-    //    probe, sizes and corpus subtrees all consume the SAME
-    //    select(doc_id, k) → Exchange(k) subtree, which is left
-    //    UNCACHED precisely so ReusedExchange dedupes it (three
-    //    canonically-equal exchanges → one executed + two reused; a
-    //    cache boundary would hide the partitioning and force three).
-    //    The corpus mention side then arrives at the mentions join
-    //    already partitioned on k — no further exchange.
+    //    probe, sizes and corpus subtrees all consume the same
+    //    select(doc_id, k) subtree, left UNCACHED (a cache boundary
+    //    would hide any partitioning from the joins above it). When
+    //    those joins stay shuffled, the three canonically-equal
+    //    Exchange(k) nodes collapse to one executed + two reused. At
+    //    sf0.1 they do not: AQE turns all three `st` joins into
+    //    broadcast joins against the small dfCool side, so no
+    //    Exchange(k) exists and no reuse happens.
     // df semantics are unchanged: with no collisions (nv == 1 for every
     // k — the production xxhash64 case, expected colliding pairs
     // ~V²/2⁶⁵), per-k df ≡ per-string df and min(shingle) ≡ the row's
@@ -443,7 +444,9 @@ object DedupOps {
     } else {
       // STRING-KEYED SLOW BRANCH — genuinely colliding vocabularies
       // only (the spec's weak-key fixture): round 13's window shape
-      // verbatim, exact per-(k, shingle) df and the 4-join split.
+      // verbatim, exact per-(k, shingle) df and the 4-join split. It
+      // never reads dfTab again, so the vocabulary-sized pin goes.
+      dfTab.unpersist()
       val sh = shinglesSetFrom(sp, docsIn)
         .select(col("doc_id"), keyFn(col("shingle")).as("k"), col("shingle"))
         .withColumn("df", count(lit(1))

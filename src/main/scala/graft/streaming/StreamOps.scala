@@ -28,11 +28,12 @@ object StreamOps {
   /** Unbounded events stream from a directory of parquet files.
     * The corpus has shipped as either TIMESTAMP(NANOS) or
     * TIMESTAMP(MICROS) parquet across testdata generations (see
-    * Engine.table); probe the footer once and declare the matching
+    * Engine.table); read the footer's schema on the driver
+    * (Engine.parquetSchema, no job) and declare the matching
     * file-source schema — both normalize to µs TimestampType. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType = Engine.parquetSchema(spark, s"$dir/events.parquet")("ts").dataType
     if (tsType == LongType)
       spark.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet") // file source wants a dir

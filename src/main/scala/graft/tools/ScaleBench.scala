@@ -184,8 +184,8 @@ object ScaleBench {
           if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
               .forall(_ != "true"))
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(s"$baseDir/events.parquet")
-        case _ => spark.read.parquet(s"$baseDir/$name.parquet")
+          Engine.parquet(spark, s"$baseDir/events.parquet")
+        case _ => Engine.parquet(spark, s"$baseDir/$name.parquet")
       }
       (0 until copies).map(i => copy(base, i))
         .reduce(_ unionByName _)
@@ -234,7 +234,7 @@ object ScaleBench {
         java.nio.file.Paths.get(s"$outDir/documents.parquet"))) return
     new java.io.File(outDir).mkdirs()
     val Off = 10_000_000L
-    val base = spark.read.parquet(s"$baseDir/documents.parquet")
+    val base = Engine.parquet(spark, s"$baseDir/documents.parquet")
     (0 until copies).map(i => base.select(
         (col("doc_id") + i * Off).as("doc_id"), col("text"),
         col("lang"), col("source"), col("n_chars")))

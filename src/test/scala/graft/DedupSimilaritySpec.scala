@@ -41,11 +41,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(triples(DedupOps.ngramJaccardKeyed(spark, sf, weak)) == refJ,
       "jaccard rows diverge under a colliding shingle key")
     val docs = Engine.table(spark, sf, "documents")
+    val sc = spark.sparkContext
+    var pinned = Set.empty[Int]
     for (pk <- Seq(Some(DedupOps.ContainmentProbeK), None)) {
       val ref = triples(DedupOps.containmentFrom(spark, docs, pk))
+      val before = sc.getPersistentRDDs.keySet
       assert(triples(DedupOps.containmentKeyed(spark, docs, pk, weak)) == ref,
         s"containment (probeK=$pk) rows diverge under a colliding shingle key")
+      pinned ++= sc.getPersistentRDDs.keySet -- before
     }
+    // the slow branch keeps its string-keyed `sh` (the same plan for
+    // both probe caps) and releases the vocabulary-sized dfTab it
+    // never reads
+    assert(pinned.size == 1, s"slow branch left ${pinned.size} cached plans, not 1")
   }
 
   test("binary-quantization ANN: exact twins rank first and the word packing is boundary-exact") {
