@@ -90,17 +90,17 @@ object DedupOps {
     * (doc_id, k) — radix-sortable, 2-3× fewer shuffle bytes.
     *
     * Why it stays EXACT (the oracle is string-keyed): joining on a hash
-    * alone could merge two different shingles that collide. Instead the
-    * stream is SPLIT on the measured collision set: the per-(k, shingle)
-    * aggregate the ops already need for document frequency also yields,
-    * per hash, how many distinct strings share it. Hashes carrying one
-    * string (all of them, in practice — expected colliding pairs
-    * ~V²/2⁶⁵) join on the 8-byte key alone; rows under a collided hash
-    * take a (k, shingle)-keyed side join — exact by construction, ~zero
-    * rows by probability, and AQE collapses the empty side at runtime.
-    * The split is injectable ([[ngramJaccardKeyed]]) so the spec can
-    * force collisions with a deliberately weak key and pin row identity
-    * against the string-keyed semantics. */
+    * alone could merge two different shingles that collide. The
+    * per-(k, shingle) aggregate the ops already need for document
+    * frequency also shows, per hash, how many distinct strings share
+    * it. One collision policy covers both keyed ops: if any hash
+    * carries two or more strings (expected colliding pairs ~V²/2⁶⁵, so
+    * never on a real corpus), the op drops its hash-keyed table and
+    * runs again keyed on the shingle string itself — strings never
+    * collide, so that run is the string-keyed semantics exactly. The
+    * key is injectable ([[ngramJaccardKeyed]], [[containmentKeyed]]) so
+    * the spec can force collisions with a deliberately weak key and pin
+    * row identity against the production output. */
   private def shingleKey(shingle: Column): Column = xxhash64(shingle)
 
   /** Document-frequency cap for the inverted-index self-join: a
@@ -150,9 +150,8 @@ object DedupOps {
     ngramJaccardKeyed(sp, dir, shingleKey)
 
   /** [[ngramJaccard]] with an injectable shingle-key function — the
-    * production key is xxhash64; the spec passes a deliberately
-    * colliding key (e.g. hash mod 7) to exercise the collision-split
-    * path and pin row identity against the string-keyed semantics. */
+    * production key is [[shingleKey]]; the spec passes a deliberately
+    * colliding key to pin row identity under the re-key policy. */
   private[graft] def ngramJaccardKeyed(sp: SparkSession, dir: String,
       keyFn: Column => Column): DataFrame = {
     // NEGATIVE RESULT (round 14): repartitioning the shingle stream on
@@ -165,87 +164,54 @@ object DedupOps {
     // downstream ENSURE_REQUIREMENTS exchange and merely ADDED the
     // repartition.
     //
-    // ROUND 14 (the [[containmentKeyed]] technique, guide §1.2/§2.3):
     // df per shingle STRING by hash aggregate over an UNCACHED stream
-    // pass — strings cross the wire exactly once, into a partial
-    // aggregate, and the round-13 corpus-sized 26M-row string cache is
-    // gone. The vocabulary-sized per-string table is the only string
-    // pin; the collision split is then branched at RUNTIME like
-    // containment's: multiK is ~V²/2⁶⁵ ≈ empty on any real corpus, so
-    // the fast path drops the two multiK anti-joins, the collided
-    // mention stream and the union — round 13 paid two corpus-sized
-    // cache-read exchanges on the coll self-join just to produce ZERO
-    // rows. A genuinely colliding vocabulary (the spec's weak-key
-    // fixture) takes the string-keyed slow branch, round 13's shape
-    // verbatim.
+    // pass (round 14, guide §1.2/§2.3): strings cross the wire exactly
+    // once, into a partial aggregate. The vocabulary-sized per-string
+    // table is the only string pin.
     val perStr = shingles(sp, dir)
       .select(keyFn(col("shingle")).as("k"), col("shingle"))
       .groupBy(col("k"), col("shingle"))
       .agg(count(lit(1)).as("df"))
       .cache()
-    // hashes shared by 2+ distinct shingles; the one driver action
+    // the one driver action: a hash shared by 2+ distinct shingles
+    // re-runs the op keyed on the string itself ([[shingleKey]])
     val multiK = perStr.groupBy(col("k"))
       .agg(count(lit(1)).as("nv"))
       .filter(col("nv") > 1).select(col("k"))
-    val (safe, coll) = if (multiK.isEmpty) {
-      // hot shingles are a tiny, bounded set (each needs > DfCap
-      // docs); the anti-join is AQE-broadcast at runtime — no driver
-      // collect. With no collisions a hash IS a string: drop by k.
-      val hotK = perStr.filter(col("df") > ShingleDfCap).select(col("k"))
-      // the heavy stream: fixed-width (doc_id, k) rows — this is what
-      // the self-join shuffles (cached: read by x, y and sizes)
-      val safe = shingles(sp, dir)
-        .select(col("doc_id"), keyFn(col("shingle")).as("k"))
-        .join(hotK, Seq("k"), "left_anti")
-        .cache()
-      (safe, None)
-    } else {
-      val shK = shingles(sp, dir)
-        .select(col("doc_id"), keyFn(col("shingle")).as("k"), col("shingle"))
-        .cache()
-      // collision-free hot hashes drop by k alone; a collided hash
-      // where only ONE string is hot must drop per string (hotColl)
-      val hotK = perStr.join(multiK, Seq("k"), "left_anti")
-        .filter(col("df") > ShingleDfCap).select(col("k"))
-      val hotColl = perStr.join(multiK, Seq("k"), "left_semi")
-        .filter(col("df") > ShingleDfCap).select(col("k"), col("shingle"))
-      val safe = shK.join(multiK, Seq("k"), "left_anti")
-        .join(hotK, Seq("k"), "left_anti")
-        .select(col("doc_id"), col("k"))
-        .cache()
-      // rows under a collided hash keep the string, join on BOTH keys
-      val coll = shK.join(multiK, Seq("k"), "left_semi")
-        .join(hotColl, Seq("k", "shingle"), "left_anti")
-        .select(col("doc_id"), col("k"), col("shingle"))
-        .cache()
-      (safe, Some(coll))
+    if (!multiK.isEmpty) {
+      perStr.unpersist()
+      return ngramJaccardKeyed(sp, dir, identity)
     }
-    val sizes = coll.map(c => safe.select(col("doc_id"))
-        .union(c.select(col("doc_id"))))
-      .getOrElse(safe.select(col("doc_id")))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // a safe row's hash is never a collided hash, so the two mention
-    // streams can never pair the same shingle twice — union, then one
-    // aggregate counts |A∩B| exactly
-    val safeMentions = safe.as("x").join(safe.as("y"),
+    // hot shingles are a tiny, bounded set (each needs > DfCap docs);
+    // the anti-join is AQE-broadcast at runtime — no driver collect.
+    // With no collisions a hash IS a string: drop by k.
+    val hotK = perStr.filter(col("df") > ShingleDfCap).select(col("k"))
+    // the heavy stream: fixed-width (doc_id, k) rows — this is what the
+    // self-join shuffles (cached: read by x, y and sizes)
+    val st = shingles(sp, dir)
+      .select(col("doc_id"), keyFn(col("shingle")).as("k"))
+      .join(hotK, Seq("k"), "left_anti")
+      .cache()
+    val sizes = st.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val inter = st.as("x").join(st.as("y"),
         col("x.k") === col("y.k") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val mentions = coll.map(c => safeMentions.union(
-        c.as("x").join(c.as("y"),
-          col("x.k") === col("y.k") && col("x.shingle") === col("y.shingle") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))))
-      .getOrElse(safeMentions)
-    val inter = mentions.groupBy(col("doc_a"), col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("c"))
-    val j = inter
+    jaccardPairs(inter, sizes)
+  }
+
+  /** The pairs of `inter` (doc_a, doc_b, intersection count c) whose
+    * exact Jaccard c / (|A| + |B| − c) is ≥ 0.5, with set sizes from
+    * `sizes` (doc_id, n_sh). Exact int/int division → oracle-safe. */
+  private def jaccardPairs(inter: DataFrame, sizes: DataFrame): DataFrame =
+    inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
       .withColumn("jaccard",
         col("c").cast("double") / (col("na") + col("nb") - col("c")))
-    j.filter(col("jaccard") >= 0.5)
+      .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
 
   val ngramJaccardOracle: String = """
     WITH words AS (
@@ -328,7 +294,8 @@ object DedupOps {
     * re-verification, the aggregate still counts only rows that
     * actually share a shingle.) */
   def containment(sp: SparkSession, dir: String): DataFrame =
-    containmentImpl(sp, dir, Some(ContainmentProbeK))
+    containmentFrom(sp, Engine.table(sp, dir, "documents"),
+      Some(ContainmentProbeK))
 
   /** [[containment]] over an explicit documents frame — the spec's
     * entry point for planting adversarial corpora where the rarest-K
@@ -347,30 +314,20 @@ object DedupOps {
     * scale sweep: its pair-mention volume is the full Σ df² (the
     * measured 97 s / 280M-mention row the cap exists to avoid). */
   def containmentExact(sp: SparkSession, dir: String): DataFrame =
-    containmentImpl(sp, dir, None)
-
-  private def containmentImpl(sp: SparkSession, dir: String,
-      probeK: Option[Int]): DataFrame =
-    containmentKeyed(sp, Engine.table(sp, dir, "documents"), probeK,
-      shingleKey)
+    containmentFrom(sp, Engine.table(sp, dir, "documents"), None)
 
   /** Core of [[containment]]/[[containmentExact]] with an injectable
     * shingle-key function — the probe ⋈ corpus join is keyed on the
-    * 8-byte [[shingleKey]], with an exact collision split like
-    * [[ngramJaccardKeyed]]'s, BUT branched at runtime: `multiK` (the
-    * vocabulary-sized set of hashes carrying 2+ distinct surviving
-    * strings) is materialized once and checked with a driver-side
-    * `isEmpty`. Under a 64-bit key it is empty with probability
-    * ~1−V²/2⁶⁵ — so the common path joins on the bare 8-byte key with
-    * NO anti/semi splits and no union, and only a genuinely colliding
-    * vocabulary (the spec's weak-key fixture) pays the 4-join split.
-    * The unconditional split was a measured 3.3× regression at sf0.1
-    * (1.12 → 3.67 s) for rows that never exist. History of the 100×
-    * sub-sweep record (committed SCALEBENCH_100x*.json — an earlier
-    * in-code "25.2 s" figure came from a dev window that did not match
-    * the committed record and is retired): r12 unconditional split
-    * 96.4 s → r13 runtime-branched fast path 58.3 s → round 14
-    * re-measured and rebuilt (see the in-method comment; numbers in
+    * 8-byte [[shingleKey]] under its re-key policy: the vocabulary-
+    * sized df table also counts the distinct strings per hash, and one
+    * driver-side `isEmpty` on it decides: no collision (the production
+    * case) joins on the bare key, a collision drops the table and
+    * re-runs the op keyed on the string. Round 12's unconditional
+    * collision split was a measured 3.3× regression at sf0.1
+    * (1.12 → 3.67 s) for rows that never exist. History of the 100× sub-sweep record (committed
+    * SCALEBENCH_100x*.json): r12 unconditional split 96.4 s → r13
+    * runtime-branched fast path 58.3 s → round 14 re-measured and
+    * rebuilt (see the in-method comment; numbers in
     * OPTIMIZATION_r14.md). The collision check costs one vocab-sized
     * driver isEmpty at sf0.1 — the deliberate price of the at-scale
     * fast path. */
@@ -378,12 +335,11 @@ object DedupOps {
       probeK: Option[Int], keyFn: Column => Column): DataFrame = {
     // ROUND 14 (guide §1.2/§2.3/§2.4): the round-13 shape attached df
     // with a count-over-(k, shingle) window — one 26M-row string-keyed
-    // exchange plus TWO full sorts of the exploded corpus (df count +
-    // the rn collision marker), all materialized into a corpus-sized
-    // cache that every consumer re-exchanged anyway (InMemoryTableScan
-    // hides partitioning — the round-14 negative result in
-    // [[ngramJaccardKeyed]]). Windows don't partial-aggregate; hash
-    // aggregates do. New shape:
+    // exchange plus TWO full sorts of the exploded corpus, all
+    // materialized into a corpus-sized cache that every consumer
+    // re-exchanged anyway (InMemoryTableScan hides partitioning — the
+    // round-14 negative result in [[ngramJaccardKeyed]]). Windows
+    // don't partial-aggregate; hash aggregates do. New shape:
     //  - PASS 1 (strings cross the wire exactly once, NO sorts):
     //    groupBy(k, shingle) → count, partial map-side aggregation
     //    collapses hot shingles before the exchange, then a
@@ -401,104 +357,51 @@ object DedupOps {
     //    sf0.1 they do not: AQE turns all three `st` joins into
     //    broadcast joins against the small dfCool side, so no
     //    Exchange(k) exists and no reuse happens.
-    // df semantics are unchanged: with no collisions (nv == 1 for every
-    // k — the production xxhash64 case, expected colliding pairs
-    // ~V²/2⁶⁵), per-k df ≡ per-string df and min(shingle) ≡ the row's
-    // shingle, so the probe's (df, shingle) ordering and the ≤ cap
-    // filter are bit-identical to the window form. ANY collision (or
-    // a hot/cool string pair sharing a hash) flips to the string-keyed
-    // slow branch below, which reproduces round 13's exact semantics.
+    // With nv == 1 for every k, per-k df ≡ per-string df and
+    // min(shingle) ≡ the row's shingle, so the probe's (df, shingle)
+    // ordering and the ≤ cap filter are the string-keyed semantics.
     val dfTab = shinglesSetFrom(sp, docsIn)
       .select(keyFn(col("shingle")).as("k"), col("shingle"))
       .groupBy(col("k"), col("shingle")).agg(count(lit(1)).as("dfs"))
       .groupBy(col("k")).agg(sum(col("dfs")).as("df"),
         count(lit(1)).as("nv"), min(col("shingle")).as("shingle"))
       .cache()
-    // the only driver action in the op (multiK.isEmpty in round 13 —
-    // same job count, but now a filter over the vocab-sized pin
-    // instead of an aggregate over a corpus-sized one)
-    if (dfTab.filter(col("nv") > 1).isEmpty) {
-      val dfCool = dfTab.filter(col("df") <= ShingleDfCap)
-      val st = shinglesSetFrom(sp, docsIn)
-        .select(col("doc_id"), keyFn(col("shingle")).as("k"))
-      val enriched = st.join(
-        dfCool.select(col("k"), col("df"), col("shingle")), "k")
-      val sizes = st.join(dfCool.select(col("k")), Seq("k"), "left_semi")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("df"), col("shingle"))
-      val probe = (probeK match {
-          case Some(k) => // WindowGroupLimit: trimmed before the exchange
-            enriched.withColumn("pos", row_number().over(w))
-              .filter(col("pos") <= k)
-          case None => enriched
-        })
-        .join(sizes, "doc_id") // co-partitioned on doc_id after the window
-        .select(col("doc_id").as("doc_a"), col("k"),
-          probeK.map(k => least(col("n_sh"), lit(k.toLong)))
-            .getOrElse(col("n_sh")).as("den"))
-      val corpus = st.join(dfCool.select(col("k")), Seq("k"), "left_semi")
-        .select(col("doc_id").as("doc_b"), col("k"))
-      containmentScore(probe.join(corpus, "k")
-        .select(col("doc_a"), col("doc_b"), col("den")))
-    } else {
-      // STRING-KEYED SLOW BRANCH — genuinely colliding vocabularies
-      // only (the spec's weak-key fixture): round 13's window shape
-      // verbatim, exact per-(k, shingle) df and the 4-join split. It
-      // never reads dfTab again, so the vocabulary-sized pin goes.
+    // the only driver action in the op; a collision re-keys on the
+    // string ([[shingleKey]])
+    if (!dfTab.filter(col("nv") > 1).isEmpty) {
       dfTab.unpersist()
-      val sh = shinglesSetFrom(sp, docsIn)
-        .select(col("doc_id"), keyFn(col("shingle")).as("k"), col("shingle"))
-        .withColumn("df", count(lit(1))
-          .over(Window.partitionBy(col("k"), col("shingle"))))
-        .filter(col("df") <= ShingleDfCap)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("k"), col("shingle")).orderBy(col("doc_id"))))
-        .cache()
-      // hashes carrying 2+ distinct SURVIVING strings (the pre-filter
-      // nv above is a superset: a hash whose strings all but one fell
-      // to the df cap joins safely on the bare key here too)
-      val multiK = sh.filter(col("rn") === 1)
-        .groupBy(col("k")).agg(count(lit(1)).as("nv"))
-        .filter(col("nv") > 1).select(col("k"))
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("df"), col("shingle"))
-      val probe = (probeK match {
-          case Some(k) =>
-            sh.withColumn("pos", row_number().over(w)).filter(col("pos") <= k)
-          case None => sh
-        })
-        .join(sizes, "doc_id")
-        .select(col("doc_id").as("doc_a"), col("k"), col("shingle"),
-          probeK.map(k => least(col("n_sh"), lit(k.toLong)))
-            .getOrElse(col("n_sh")).as("den"))
-      val probeSafe = probe.join(multiK, Seq("k"), "left_anti")
-        .select(col("doc_a"), col("k"), col("den"))
-      val probeColl = probe.join(multiK, Seq("k"), "left_semi")
-      val corpusSafe = sh.join(multiK, Seq("k"), "left_anti")
-        .select(col("doc_id").as("doc_b"), col("k"))
-      val corpusColl = sh.join(multiK, Seq("k"), "left_semi")
-        .select(col("doc_id").as("doc_b"), col("k"), col("shingle"))
-      // a safe probe row's hash is never a collided hash, so the two
-      // mention streams are disjoint per shingle — union, then aggregate
-      containmentScore(probeSafe.join(corpusSafe, "k")
-        .select(col("doc_a"), col("doc_b"), col("den"))
-        .union(probeColl.join(corpusColl, Seq("k", "shingle"))
-          .select(col("doc_a"), col("doc_b"), col("den"))))
+      return containmentKeyed(sp, docsIn, probeK, identity)
     }
-  }
-
-  /** Shared tail of both [[containmentKeyed]] branches: directed-pair
-    * intersection counts over the mention stream, then the threshold. */
-  private def containmentScore(mentions: DataFrame): DataFrame =
-    mentions
+    val dfCool = dfTab.filter(col("df") <= ShingleDfCap)
+    val st = shinglesSetFrom(sp, docsIn)
+      .select(col("doc_id"), keyFn(col("shingle")).as("k"))
+    val enriched = st.join(
+      dfCool.select(col("k"), col("df"), col("shingle")), "k")
+    val sizes = st.join(dfCool.select(col("k")), Seq("k"), "left_semi")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val w = Window.partitionBy(col("doc_id"))
+      .orderBy(col("df"), col("shingle"))
+    val probe = (probeK match {
+        case Some(k) => // WindowGroupLimit: trimmed before the exchange
+          enriched.withColumn("pos", row_number().over(w))
+            .filter(col("pos") <= k)
+        case None => enriched
+      })
+      .join(sizes, "doc_id") // co-partitioned on doc_id after the window
+      .select(col("doc_id").as("doc_a"), col("k"),
+        probeK.map(k => least(col("n_sh"), lit(k.toLong)))
+          .getOrElse(col("n_sh")).as("den"))
+    val corpus = st.join(dfCool.select(col("k")), Seq("k"), "left_semi")
+      .select(col("doc_id").as("doc_b"), col("k"))
+    probe.join(corpus, "k")
+      .select(col("doc_a"), col("doc_b"), col("den"))
       .filter(col("doc_a") =!= col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("c"), max(col("den")).as("den"))
       .withColumn("containment", col("c").cast("double") / col("den"))
       .filter(col("containment") >= ContainmentTau)
       .select(col("doc_a"), col("doc_b"), col("containment"))
+  }
 
   val containmentOracle: String = s"""
     WITH words AS (
@@ -564,9 +467,8 @@ object DedupOps {
     * connected-components shape: one shuffle join + aggregate per
     * round, rounds bounded by the component diameter (near-dup
     * clusters are shallow; capped + convergence-checked). At 100 TB
-    * the per-round `count()` is a cheap job over the label table and
-    * production deployments add `localCheckpoint` every few rounds to
-    * cut lineage. DuckDB-oracled via a recursive CTE. */
+    * the per-round `count()` is a cheap job over the label table.
+    * DuckDB-oracled via a recursive CTE. */
   def cluster(sp: SparkSession, dir: String): DataFrame =
     clusterFrom(sp, dir, ngramJaccard(sp, dir).select(col("doc_a"), col("doc_b")))
 
@@ -775,7 +677,6 @@ object DedupOps {
     * is partition-local and cluster sizes are bounded by dup-group
     * sizes, so this holds at corpus scale. */
   def clusterKeepBest(sp: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val labels = cluster(sp, dir)
     val docs = Engine.table(sp, dir, "documents")
       .select(col("doc_id"), length(col("text")).as("len"))
@@ -871,33 +772,49 @@ object DedupOps {
     * verify path — a scan + row-local explode, cheaper and flatter than
     * evicting/refetching a corpus-sized cache. */
   def minhashLsh(sp: SparkSession, dir: String): DataFrame = {
-    // Raw hashed shingles (with duplicates). The signature aggregate
-    // reads them UNDEDUPED — min() per permutation over a multiset
-    // equals min() over its set, so the old shared distinct was pure
-    // overhead on this path (one corpus-sized hash aggregate, round
-    // 13). Verification still needs set semantics, but only for
-    // CANDIDATE docs — its distinct moved below the semi-join, where
-    // the stream is candidate-bounded instead of corpus-sized.
-    def sh = shinglesRaw(sp, dir)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
+    def sh = lshShingles(sp, dir)
     // one row per doc: the only corpus-wide pin, 64 longs + id per row
     val sigs = sh.groupBy(col("doc_id"))
       .agg(minhashSig(col("shingle")).as("sig"))
       .cache()
-    val bands = sigs.select(col("doc_id"),
-      explode(array((0 until NumBands).map { b =>
+    val bands = lshBands(sigs)
+    lshVerified(sh, bands, bands, col("l.doc_id") < col("r.doc_id"))
+  }
+
+  /** Raw hashed shingles (with duplicates) for the MinHash ops. The
+    * signature aggregate reads them UNDEDUPED — min() per permutation
+    * over a multiset equals min() over its set, so a shared distinct
+    * would be pure overhead on that path (one corpus-sized hash
+    * aggregate, round 13). Verification still needs set semantics, but
+    * only for CANDIDATE docs — [[lshVerified]] runs its distinct below
+    * the semi-join, where the stream is candidate-bounded. */
+  private def lshShingles(sp: SparkSession, dir: String): DataFrame =
+    shinglesRaw(sp, dir)
+      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
+
+  /** One (band, bh) row per LSH band of each signature; every column
+    * of `sigs` but the signature itself rides along. */
+  private def lshBands(sigs: DataFrame): DataFrame = {
+    val keep = sigs.columns.toSeq.filter(_ != "sig").map(col)
+    sigs.select(keep :+ explode(array((0 until NumBands).map { b =>
         struct(lit(b).as("band"),
           xxhash64(slice(col("sig"), b * BandRows + 1, BandRows)).as("bh"))
-      }: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.bh").as("bh"))
+      }: _*)).as("bs"): _*)
+      .select(keep ++ Seq(col("bs.band").as("band"), col("bs.bh").as("bh")): _*)
+  }
+
+  /** Candidate pairs (doc_a from `l`, doc_b from `r`) sharing a band
+    * bucket and satisfying `pair`, verified with exact Jaccard ≥ 0.5
+    * over the hashed shingle stream `sh`. */
+  private def lshVerified(sh: DataFrame, l: DataFrame, r: DataFrame,
+      pair: Column): DataFrame = {
     // distinct: two docs can collide in several bands, and duplicate
     // candidate pairs would inflate the intersection counts below
-    val cands = bands.as("l").join(bands.as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.doc_id") < col("r.doc_id"))
+    val cands = l.as("l").join(r.as("r"),
+        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") && pair)
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
       .distinct()
-      .cache() // tiny (pairs); stops the band self-join running twice
+      .cache() // tiny (pairs); stops the band join running twice
     // exact-Jaccard verification touches only candidate docs: semi-join
     // the shingles down to that set first. No distinct on candIds —
     // left_semi is duplicate-insensitive on its right side. The
@@ -919,13 +836,7 @@ object DedupOps {
       .join(shCand.as("xb"),
         col("xb.doc_id") === col("doc_b") && col("xa.shingle") === col("xb.shingle"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("c"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    jaccardPairs(inter, sizes)
   }
 
   /** The source whose documents play the "newly ingested batch" in
@@ -945,11 +856,7 @@ object DedupOps {
     * emit (restricted to cross-side), which is what the quality gate
     * checks against the exact cross-side n-gram Jaccard twin. */
   def minhashLshIncremental(sp: SparkSession, dir: String): DataFrame = {
-    // same two round-13 moves as [[minhashLsh]]: signatures read the
-    // raw (undeduped) hash stream — min is multiset-insensitive — and
-    // the verify-path distinct runs after the candidate semi-join
-    def sh = shinglesRaw(sp, dir)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
+    def sh = lshShingles(sp, dir)
     val srcTag = Engine.table(sp, dir, "documents")
       .select(col("doc_id"),
         (col("source") === IncrementalBatchSource).as("is_new"))
@@ -957,38 +864,11 @@ object DedupOps {
       .agg(minhashSig(col("shingle")).as("sig"))
       .join(srcTag, "doc_id")
       .cache()
-    val bands = sigs.select(col("doc_id"), col("is_new"),
-      explode(array((0 until NumBands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * BandRows + 1, BandRows)).as("bh"))
-      }: _*)).as("bs"))
-      .select(col("doc_id"), col("is_new"),
-        col("bs.band").as("band"), col("bs.bh").as("bh"))
-    val cands = bands.filter(col("is_new")).as("l")
-      .join(bands.filter(!col("is_new")).as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh"))
-      .select(col("l.doc_id").as("new_id"), col("r.doc_id").as("ref_id"))
-      .distinct()
-      .cache()
-    val candIds = cands
-      .select(explode(array(col("new_id"), col("ref_id"))).as("doc_id"))
-    val shCand = sh.join(candIds, Seq("doc_id"), "left_semi").distinct().cache()
-    val sizes = shCand.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = cands
-      .join(shCand.as("xa"), col("xa.doc_id") === col("new_id"))
-      .join(shCand.as("xb"),
-        col("xb.doc_id") === col("ref_id") &&
-          col("xa.shingle") === col("xb.shingle"))
-      .groupBy(col("new_id"), col("ref_id")).agg(count(lit(1)).as("c"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "new_id")
-        .withColumnRenamed("n_sh", "na"), "new_id")
-      .join(sizes.withColumnRenamed("doc_id", "ref_id")
-        .withColumnRenamed("n_sh", "nb"), "ref_id")
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("new_id"), col("ref_id"), col("jaccard"))
+    val bands = lshBands(sigs)
+    lshVerified(sh, bands.filter(col("is_new")), bands.filter(!col("is_new")),
+        lit(true))
+      .select(col("doc_a").as("new_id"), col("doc_b").as("ref_id"),
+        col("jaccard"))
   }
 
   /** The 64-bit SimHash signature stage alone — shared by the

@@ -345,8 +345,7 @@ object TextOps {
     // distinct per (doc_id, ph), so count().over(ph) IS the per-
     // paragraph document frequency — the old groupBy(ph) + join-back
     // referenced the paras subtree twice (scan + explode ran twice)
-    // and exchanged the stream for the join anyway. Same trick as
-    // [[graft.operators.DedupOps.containmentKeyed]]'s window-df.
+    // and exchanged the stream for the join anyway.
     paras
       .withColumn("df", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("ph"))))

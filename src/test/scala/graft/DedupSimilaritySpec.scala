@@ -23,12 +23,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("shingle-key collision split reproduces string-keyed semantics under a colliding key") {
     import org.apache.spark.sql.Column
+    import spark.implicits._
     // The production join key is xxhash64 (expected colliding shingle
-    // pairs ~V²/2⁶⁵ — unobservable), so the collision branch never
-    // carries rows in real runs. Force a pathological key — ~25% of
-    // shingles crammed into 5 hash values, the rest keyed normally —
-    // so BOTH the hash-only and the (k, shingle) join branches carry
-    // real rows, and demand row identity with the production output
+    // pairs ~V²/2⁶⁵ — unobservable), so the re-key policy never fires
+    // in real runs. Force a pathological key — ~25% of shingles
+    // crammed into 5 hash values, the rest keyed normally — so the
+    // keyed ops must detect the collision and re-run keyed on the
+    // string, and demand row identity with the production output
     // (which the CORRECTNESS harness pins to the string-keyed DuckDB
     // oracle).
     val weak: Column => Column = s =>
@@ -50,10 +51,29 @@ class DedupSimilaritySpec extends AnyFunSuite {
         s"containment (probeK=$pk) rows diverge under a colliding shingle key")
       pinned ++= sc.getPersistentRDDs.keySet -- before
     }
-    // the slow branch keeps its string-keyed `sh` (the same plan for
-    // both probe caps) and releases the vocabulary-sized dfTab it
-    // never reads
-    assert(pinned.size == 1, s"slow branch left ${pinned.size} cached plans, not 1")
+    // the re-keyed run keeps its string-keyed df table (the same plan
+    // for both probe caps) and releases the hash-keyed one it dropped
+    assert(pinned.size == 1, s"re-keyed run left ${pinned.size} cached plans, not 1")
+    // A shingle above the df cap that shares its hash with cool ones:
+    // no sf0.001 shingle reaches ShingleDfCap, so plant 1,100 docs that
+    // all open with "h0 h1 h2", each with its own tail, plus 5 docs
+    // that are the tails of docs 0-4 (containment 1.0 one way, 0.6 the
+    // other). Three key values put the hot shingle under one hash with
+    // about a third of the cool ones.
+    val nHot = DedupOps.ShingleDfCap + 100
+    def tail(i: Int) = (1 to 5).map(w => s"t${i}_$w").mkString(" ")
+    val hotDocs = ((0 until nHot).map(i => (i.toLong, s"h0 h1 h2 ${tail(i)}")) ++
+        (0 until 5).map(i => (10000L + i, tail(i))))
+      .toDF("doc_id", "text")
+    val mod3: Column => Column = s => pmod(xxhash64(s), lit(3))
+    for (pk <- Seq(Some(DedupOps.ContainmentProbeK), None)) {
+      val ref = triples(DedupOps.containmentFrom(spark, hotDocs, pk))
+      assert((0 until 5).forall(i => ref.contains((10000L + i, i.toLong, 1.0)) &&
+          ref.contains((i.toLong, 10000L + i, 0.6))),
+        s"fixture broken: planted pairs missing from $ref")
+      assert(triples(DedupOps.containmentKeyed(spark, hotDocs, pk, mod3)) == ref,
+        s"containment (probeK=$pk) rows diverge when the hot shingle shares a key")
+    }
   }
 
   test("binary-quantization ANN: exact twins rank first and the word packing is boundary-exact") {

@@ -95,6 +95,9 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("containment dedup has no cartesian product or forced broadcast") {
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.types.StringType
     val df = SparkEntry.queries("dedup_containment")(spark, sf)
     val logical = df.queryExecution.analyzed.toString
     assert(!logical.contains("ResolvedHint"),
@@ -104,6 +107,30 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"all-pairs shape in containment plan:\n$plan")
+    // the shingle joins ride the 8-byte hash key; a string-typed key
+    // means the op fell into its re-keyed run (see DedupOps.shingleKey),
+    // which every oracle still passes and only the speed shows
+    for (q <- Seq("dedup_containment", "dedup_ngram_jaccard")) {
+      val opt = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      val keys = opt.collect { case j: Join => j }.flatMap(j =>
+        ExtractEquiJoinKeys.unapply(j).toSeq.flatMap(m => m._2 ++ m._3))
+      assert(keys.nonEmpty, s"$q: no equi-join in\n$opt")
+      assert(!keys.exists(_.dataType == StringType),
+        s"$q joins on a string key:\n$opt")
+    }
+  }
+
+  test("PlanDump output is identical across two builds of the same query") {
+    def dump(): (String, String) = {
+      val qe = SparkEntry.queries("q3_shipping_priority")(spark, sf).queryExecution
+      val raw = qe.optimizedPlan.toString +
+        qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+      (raw, graft.tools.PlanDump.normalize(raw))
+    }
+    val (raw1, norm1) = dump()
+    val (raw2, norm2) = dump()
+    assert(raw1 != raw2, "fixture broken: expression ids did not change")
+    assert(norm1 == norm2, s"normalized dumps differ:\n$norm1\n---\n$norm2")
   }
 
   test("q1 aggregation stays in whole-stage codegen") {
