@@ -1,5 +1,8 @@
 package graft
 
+import graft.tools.Harness
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: headline queries (TPC-H-shaped + operator
   * microbenches, mirroring the reference's benchmark/tpc-h and
   * benchmark/operators suites) on SPARK_GRAFT_SF_DIR.
@@ -12,30 +15,23 @@ package graft
   * extension, AQE and the object-hash-agg threshold are part of what is
   * being measured.
   *
-  * Measurement protocol (hardened in round 6 after round 5's numbers
-  * proved measurement-dominated, and again in round 9 after round 8's
-  * single-JVM 100-query run contaminated mid-run queries by up to 4x —
-  * accumulated session state, code-cache and GC pressure from 99 other
-  * queries is not a property of any one query):
-  *   - PROCESS ISOLATION: the parent process runs no Spark at all; it
-  *     forks one fresh child JVM per group of [[GroupSize]] queries
-  *     (same classpath + JVM flags as itself), so no query is measured
-  *     more than [[GroupSize]]-1 queries deep into a JVM's lifetime.
-  *     A child that fails to fork or exits nonzero falls back to an
-  *     in-parent measurement so the record is never silently missing
-  *     a query;
-  *   - one UNTIMED warm-up execution per query (codegen compile, parquet
-  *     footers, JIT) before any timed rep;
-  *   - 5 timed reps per query; queries whose 5-rep median lands under
-  *     1 s OR whose 5-rep max/min spread exceeds 2 get 4 EXTRA reps
-  *     (round 7 showed 5 reps cannot pin a 0.2 s median), and variance
-  *     is computed over the min/max-TRIMMED set once there are >= 7
-  *     samples, so one scheduler hiccup no longer brands a query noisy;
+  * Measurement protocol: the shared one in [[Harness]] (idle
+  * gate, sacrificial child, one fresh child JVM per group of
+  * [[GroupSize]] queries with a contention record and one re-run when
+  * contended, in-process fallback with its reason, cold runs). Per
+  * group this child then adds:
+  *   - one untimed pre-pass over every query of the group, then per
+  *     query one more untimed run and 5 timed reps (round 9's two
+  *     >2-spread queries were pure cold-JVM JIT ramp);
+  *   - queries whose 5-rep median lands under 1 s OR whose 5-rep
+  *     max/min spread exceeds 2 get 4 EXTRA reps (round 7 showed 5
+  *     reps cannot pin a 0.2 s median), and variance is computed over
+  *     the min/max-TRIMMED set once there are >= 7 samples, so one
+  *     scheduler hiccup no longer brands a query noisy;
   *   - "queries" reports the MEDIAN (the stable central number to gate
-  *     on), "queries_min" the best run (steady-state on a long-lived
-  *     cluster), "variance" the per-query max/min ratio (trimmed where
-  *     >= 7 samples) so a reviewer can see at a glance whether a
-  *     number is trustworthy;
+  *     on), "queries_min" the best run, "variance" the per-query
+  *     max/min ratio (trimmed where >= 7 samples); a query that failed
+  *     every rep reports -1;
   *   - "driver_mem_mb" (Runtime.maxMemory) and "load_avg" (1-min system
   *     load at start/end) are echoed so runs on differently-sized heaps
   *     or busy hosts are not compared as if equal.
@@ -123,248 +119,46 @@ object Bench {
     * JVM+Spark startup amortizes over ~10 measurements. */
   val GroupSize = 10
 
-  /** Idle gate (round 11; tightened round 12): the round-10 record's
-    * FIRST forked group carried TPC-H medians ~2x round 9's with no
-    * code behind them changed — everything pointed at start-of-run
-    * contention (the bench runs right after the sbt build) plus a cold
-    * OS page cache for the parquet tables. Two defenses, both ahead of
-    * the first TIMED group:
-    *  - refuse to start while the 1-min loadAvg exceeds
-    *    [[IdleLoadMax]] (up to [[IdleWaitMaxS]], then proceed with
-    *    load_warning set — an eternally-busy host must not hang the
-    *    harness). Round 11's driver run released at load 3.96 against
-    *    the old nproc/8 = 4.0 threshold and carried 2-6× inflated
-    *    medians in several groups, so the threshold is now a FIXED 2.0
-    *    (a near-idle host, independent of core count) with a doubled
-    *    wait budget;
-    *  - run one SACRIFICIAL forked group first — the first timed
-    *    group's queries, once each, results discarded — so the build's
-    *    tail, the JVM-fork page-in, and the first parquet reads all
-    *    land outside every timed rep.
-    * Between groups the 1-min loadAvg cannot gate — the just-finished
-    * child's own work dominates the EMA there. Instead every timed
-    * group gets a DIRECT external-contention measurement: the parent
-    * (idle while the child runs) reads /proc/stat around the fork and
-    * subtracts the child's own CPU (ProcessHandle cputime), so
-    * `external_cpu_frac` in the per-group record is exactly the share
-    * of the machine spent on non-bench work during that group's
-    * measurements — self-load-immune, unlike any loadavg heuristic.
-    * Groups above [[ExternalCpuWarn]] are flagged `contended` in
-    * BENCH.json so a reviewer can quarantine their medians. */
-  val IdleLoadMax: Double = 2.0
-  val IdleWaitMaxS = 600
-  /** Per-group contention flag threshold: fraction of total machine
-    * CPU consumed by processes OTHER than the measuring child while it
-    * ran. 10% absorbs the parent JVM's bookkeeping and kernel noise;
-    * a competing build or Spark job shows up at 30%+. */
-  val ExternalCpuWarn = 0.10
-
-  private def loadAvg: Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-
-  /** Per-group contention record: 1-min load at fork, the share of
-    * machine CPU that went to NON-bench work while the child ran, and
-    * hypervisor steal% over the window (-1 = unavailable for either;
-    * an unavailable measurement never flips `contended`). */
-  final case class GroupStat(idx: Int, loadStart: Double,
-      externalCpuFrac: Double, stealPct: Double = -1.0) {
-    def contended: Boolean =
-      externalCpuFrac > ExternalCpuWarn ||
-        (externalCpuFrac < 0 && loadStart > IdleLoadMax * 2) ||
-        stealPct > StealWarnPct
-  }
-
-  /** Hypervisor-steal warning threshold (% of the group's CPU time).
-    * Steal is the contention source neither loadAvg nor the external-
-    * CPU fraction can see (stolen cycles are not local-runnable and
-    * not busy); this host measurably suffers it in bursts — a sweep
-    * window averaging ~5% steal inflated shuffle-heavy medians 1.5-3×
-    * against the same code profiled minutes later. /proc/stat reads
-    * live in [[ProcStat]] (shared with ScaleBench). */
-  val StealWarnPct = 5.0
-
-  /** Block until the host is near-idle (or the wait budget is spent);
-    * returns seconds waited. */
-  private def awaitIdle(): Double = {
-    val t0 = System.nanoTime
-    var l = loadAvg
-    while (l > IdleLoadMax && (System.nanoTime - t0) / 1e9 < IdleWaitMaxS) {
-      System.err.println(
-        f"[bench] host busy (1-min load $l%.1f > $IdleLoadMax%.1f) — waiting 10 s")
-      Thread.sleep(10000)
-      l = loadAvg
-    }
-    (System.nanoTime - t0) / 1e9
-  }
+  /** The contention thresholds of [[Harness]], under the names
+    * perfbench's probe reads. */
+  val ExternalCpuWarn: Double = Harness.ExternalCpuWarn
+  val StealWarnPct: Double = Harness.StealWarnPct
 
   private def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
+  /** One cold run; -1 when the query fails. */
+  private def runOnce(spark: SparkSession, name: String): Double =
+    try Harness.coldRun(spark, name, sfDir)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      -1.0
+    }
 
   /** Warm up, then adaptively sample one query in the given session. */
-  private def measure(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, name: String): Seq[Double] = {
-    def runOnce(): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        spark.sharedState.cacheManager.clearCache()
-        return -1.0
-      }
-      val s = (System.nanoTime() - t0) / 1e9
-      // COLD reps (round 14; ScaleBench.runOnce has always done this):
-      // every invocation builds a canonically-equal plan, so an op's
-      // internal .cache() materialized by the warm-up was REUSED by
-      // every timed rep — ~10 cache-pinning ops' round-13 medians
-      // measured post-cache work, not a cold invocation (the r13
-      // driver log tail was wall-to-wall "already cached" warnings).
-      // Clearing AFTER the clock stops keeps the drop itself untimed;
-      // each rep then recomputes its own caches inside its window.
-      spark.sharedState.cacheManager.clearCache()
-      s
-    }
-    runOnce() // untimed warm-up: codegen + parquet footers + JIT
-    val base = (1 to Reps).map(_ => runOnce()).filter(_ >= 0)
-    // sub-second medians: 5 samples cannot separate the query from
-    // scheduler noise; >2 spread: one rep was run state — either way,
-    // take extra reps so the trimmed variance has >= 7 samples
+  private def measure(spark: SparkSession, name: String): Seq[Double] = {
+    runOnce(spark, name) // untimed warm-up: codegen + parquet footers + JIT
+    val base = (1 to Reps).map(_ => runOnce(spark, name)).filter(_ >= 0)
     val times =
       if (base.nonEmpty &&
-          (median(base) < SubSecond || base.max / base.min > SpreadGoal))
-        base ++ (1 to ExtraReps).map(_ => runOnce()).filter(_ >= 0)
+          (Harness.median(base) < SubSecond || base.max / base.min > SpreadGoal))
+        base ++ (1 to ExtraReps).map(_ => runOnce(spark, name)).filter(_ >= 0)
       else base
     if (times.isEmpty) Seq(-1.0) else times
   }
 
-  /** Child mode: measure `names` in this fresh JVM, write one
-    * `name\tt1,t2,...` line per query to `outFile`, exit. Stdout is
-    * discarded by the parent; diagnostics go to stderr. With
-    * `warmOnly` (the sacrificial group) every query runs ONCE, nothing
-    * is timed or written — the run exists to absorb start-of-run
-    * contention and page the parquet tables into the OS cache. */
-  private def runGroup(outFile: String, namesCsv: String,
-      warmOnly: Boolean = false): Unit = {
-    val names = namesCsv.split(",").toSeq.filter(_.nonEmpty)
-    val spark = Engine.session("graft-bench")
-    if (warmOnly) {
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.sharedState.cacheManager.clearCache()
-      }
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outFile), "sacrificial\n")
-      spark.stop()
-      return
-    }
-    // group-level untimed pre-pass: one execution of EVERY query in
-    // the group before any timed rep. The per-query warm-up inside
-    // measure() is not enough for the first queries of a fresh JVM —
-    // round 9's two >2-spread queries (dialect_q1 2.65,
-    // events_user_streaks 2.51) were pure cold-JVM JIT ramp, their
-    // run arrays descending monotonically. With the pre-pass every
-    // query has 2 untimed executions (pre-pass + measure's own) and
-    // the JVM is C2-warm before the first timed rep.
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () } // measure() reports the failure
-      spark.sharedState.cacheManager.clearCache()
-    }
-    val lines = names.map { n =>
-      val ts = measure(spark, sfDir, n)
-      s"$n\t${ts.map(t => f"$t%.4f").mkString(",")}"
-    }
-    // the child's own total CPU, for the parent's external-contention
-    // arithmetic (ProcessHandle cputime is gone once the child is
-    // reaped, so the child self-reports)
-    val cpuS = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean =>
-          os.getProcessCpuTime / 1e9
-        case _ => -1.0
-      }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outFile),
-      (lines :+ f"__cpu\t$cpuS%.2f").mkString("", "\n", "\n"))
-    spark.stop()
-  }
-
-  /** Fork one fresh JVM running `--group` for these queries; None if
-    * the child could not run (caller falls back to in-process). The
-    * second member is the group's contention record (see
-    * [[GroupStat]]). */
-  private def forkGroup(names: Seq[String], idx: Int,
-      warmOnly: Boolean = false)
-      : (Option[Seq[(String, Seq[Double])]], GroupStat) = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempFile(s"graft-bench-g$idx-", ".tsv")
-    val loadStart = loadAvg
-    var stat = GroupStat(idx, loadStart, -1.0)
-    try {
-      val javaBin = java.nio.file.Paths.get(
-        sys.props("java.home"), "bin", "java").toString
-      // reuse this JVM's own flags (add-opens for Spark-on-JDK17, -Xmx,
-      // -D conf) so the child measures under identical conditions
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", sys.props("java.class.path"),
-            "graft.Bench", "--group", tmp.toString, names.mkString(",")) ++
-        (if (warmOnly) Seq("--warmonly") else Seq.empty)
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val busy0 = ProcStat.busySeconds()
-      val steal0 = ProcStat.snapshot()
-      val t0 = System.nanoTime
-      val rc = pb.start().waitFor()
-      val elapsedS = (System.nanoTime - t0) / 1e9
-      val busy1 = ProcStat.busySeconds()
-      val stealP = ProcStat.stealPctBetween(steal0, ProcStat.snapshot())
-      if (rc != 0) {
-        System.err.println(s"[bench] group $idx child exited $rc")
-        return (None, stat)
-      }
-      if (warmOnly) return (Some(Seq.empty), stat) // nothing to parse
-      val allLines = java.nio.file.Files.readAllLines(tmp).asScala
-        .filter(_.contains('\t'))
-      val childCpuS = allLines.find(_.startsWith("__cpu\t"))
-        .map(_.split('\t')(1).toDouble).getOrElse(-1.0)
-      stat = (busy0, busy1) match {
-        case (Some(b0), Some(b1)) if childCpuS >= 0 && elapsedS > 0 =>
-          val ext = math.max(0.0, b1 - b0 - childCpuS) /
-            (elapsedS * Runtime.getRuntime.availableProcessors)
-          GroupStat(idx, loadStart, ext, stealP)
-        case _ => stat.copy(stealPct = stealP)
-      }
-      if (stat.contended)
-        System.err.println(f"[bench] group $idx CONTENDED: " +
-          f"external_cpu_frac ${stat.externalCpuFrac}%.3f (load $loadStart%.2f)")
-      val parsed = allLines.filterNot(_.startsWith("__cpu\t")).map { l =>
-        val Array(n, ts) = l.split('\t')
-        n -> ts.split(',').toSeq.map(_.toDouble)
-      }.toSeq
-      // every requested query must be present or the fallback re-runs
-      (if (parsed.map(_._1).toSet == names.toSet) Some(parsed) else None,
-        stat)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] group $idx fork failed: ${e.getMessage}")
-      (None, stat)
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
+  private def row(spark: SparkSession, name: String) =
+    name -> measure(spark, name).map(t => f"$t%.4f").mkString(",")
 
   def main(args: Array[String]): Unit = {
-    if (args.length >= 3 && args(0) == "--group")
-      return runGroup(args(1), args(2), warmOnly = args.contains("--warmonly"))
+    Harness.childArgs(args.toSeq).foreach { c =>
+      // sacrificial child: each query once; timed child: one untimed
+      // pre-pass over the whole group, then measure each query
+      return Harness.runChild(c, "graft-bench")(runOnce) { (spark, names) =>
+        names.foreach(runOnce(spark, _))
+        names.map(row(spark, _))
+      }
+    }
 
     // dev loop only (never set by the driver): BENCH_ONLY=q1,q6 runs a
     // subset so harness changes can be smoke-tested in minutes
@@ -372,49 +166,16 @@ object Bench {
       .map(s => headline.filter(s.split(',').map(_.trim).toSet))
       .getOrElse(headline)
 
-    val loadStart = loadAvg
-    // contention guard: wait for a near-idle host, then burn one
-    // sacrificial untimed group (see the IdleLoadMax scaladoc)
-    val idleWaitedS = awaitIdle()
-    val loadAtFirstGroup = loadAvg
-    System.err.println(
-      f"[bench] idle gate: waited $idleWaitedS%.0f s, load $loadStart%.2f -> $loadAtFirstGroup%.2f; sacrificial group starting")
-    forkGroup(queriesToRun.take(GroupSize), -1, warmOnly = true)
     // lazily created only if a fork fails — the normal parent runs no
     // Spark, so children measure on an otherwise-idle host
-    var fallback: Option[org.apache.spark.sql.SparkSession] = None
-    // (stat, retried, retryClean) per group — the contention record is
-    // USED, not just logged: a contended group gets exactly one forked
-    // re-run, and the retry's numbers replace the originals only when
-    // the retry itself ran clean. A query whose final number still
-    // came from a contended window is flagged in queries_contended so
-    // a 9.8× outlier reads as "contended, re-run also contended"
-    // instead of a silent number.
-    val groupStats =
-      scala.collection.mutable.ListBuffer.empty[(GroupStat, Boolean, Boolean)]
-    val queryContended = scala.collection.mutable.Map.empty[String, Boolean]
-    val results: Seq[(String, Seq[Double])] =
-      queriesToRun.grouped(GroupSize).zipWithIndex.flatMap { case (g, i) =>
-        val (res, stat) = forkGroup(g, i)
-        val (finalRes, finalStat, retried, retryClean) =
-          if (stat.contended && res.isDefined) {
-            System.err.println(
-              f"[bench] group $i CONTENDED (ext ${stat.externalCpuFrac}%.3f, " +
-                f"steal ${stat.stealPct}%.1f%%) — one forked re-run")
-            val (res2, stat2) = forkGroup(g, i)
-            if (res2.isDefined && !stat2.contended) (res2, stat2, true, true)
-            else (res, stat, true, false)
-          } else (res, stat, false, false)
-        groupStats += ((finalStat, retried, retryClean))
-        g.foreach(n => queryContended(n) = finalStat.contended)
-        finalRes.getOrElse {
-          System.err.println(s"[bench] group $i: in-process fallback")
-          val spark = fallback.getOrElse {
-            val s = Engine.session("graft-bench"); fallback = Some(s); s
-          }
-          g.map(n => n -> measure(spark, sfDir, n))
-        }
-      }.toSeq
+    var fallback: Option[SparkSession] = None
+    val sweep = Harness.sweep("bench", "graft.Bench", Nil, queriesToRun, GroupSize) { g =>
+      val spark = fallback.getOrElse {
+        val s = Engine.session("graft-bench"); fallback = Some(s); s
+      }
+      g.map(row(spark, _))
+    }
+    val results = sweep.rows.map { case (n, v) => n -> v.split(',').toSeq.map(_.toDouble) }
 
     def fmt(v: Double) = f"$v%.4f"
     def obj(f: Seq[Double] => Double) =
@@ -428,7 +189,7 @@ object Bench {
       val s = if (v.length >= 7) v.sorted.slice(1, v.length - 1) else v
       s.max / s.min
     }
-    val qs = obj(median)
+    val qs = obj(Harness.median)
     val qsMin = obj(_.min)
     val varc = obj(spread)
     val reps = results.map { case (k, v) => "\"" + k + "\":" + v.length }
@@ -436,10 +197,10 @@ object Bench {
     val runs = results.map { case (k, v) =>
       "\"" + k + "\":[" + v.map(fmt).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val total = results.map(r => median(r._2)).filter(_ >= 0).sum
+    val total = results.map(r => Harness.median(r._2)).filter(_ >= 0).sum
     val totalMin = results.map(_._2.min).filter(_ >= 0).sum
     val driverMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
-    // bench-under-load policy (README "Benchmark protocol"): a
+    // bench-under-load policy (README "Runner protocol"): a
     // gate-worthy run needs the host near-idle at START — round 6's
     // recorded minhash variance of 4.2 was entirely host load
     // (load_avg 3→9). The END load is echoed for reviewers but does
@@ -449,10 +210,10 @@ object Bench {
     // cannot distinguish external contention from the bench itself —
     // external load arriving mid-run shows up in the per-query
     // variance field instead.
-    val loadEnd = loadAvg
+    val loadEnd = Harness.loadAvg
     // the warning now keys on the POST-gate load (what the first timed
     // group actually saw), not the pre-gate arrival load
-    val loadWarn = loadAtFirstGroup > Runtime.getRuntime.availableProcessors / 5.0
+    val loadWarn = sweep.loadAtFirstGroup > Runtime.getRuntime.availableProcessors / 5.0
     // measurement-semantics provenance a reviewer needs to read the
     // medians correctly — in the record itself, not only in scaladoc
     val notes =
@@ -466,28 +227,21 @@ object Bench {
       """query included the build and are not comparable",""" +
       """"sim_knn_outliers":"same: consumes the session-shared edge list, """ +
       """build excluded from its median"}"""
-    // per-group contention records: queries belong to group
-    // idx*GroupSize..; `external_cpu_frac` is the direct non-bench CPU
-    // share measured around the group's child (see the IdleLoadMax
-    // scaladoc); `contended` groups' medians should be quarantined by
-    // any reviewer comparing records
-    val groupsJson = groupStats.map { case (s, retried, retryClean) =>
-      s"""{"idx":${s.idx},"load_start":${fmt(s.loadStart)},""" +
-        s""""external_cpu_frac":${fmt(s.externalCpuFrac)},""" +
-        s""""steal_pct":${fmt(s.stealPct)},""" +
-        s""""contended":${s.contended},""" +
-        s""""retried":$retried,"retry_clean":$retryClean}"""
-    }.mkString("[", ",", "]")
+    // per-group contention records (see Harness.Group): queries
+    // belong to group idx*GroupSize..; `contended` groups' medians
+    // should be quarantined by anyone comparing records
+    val groupsJson = sweep.groups.map(_.json).mkString("[", ",", "]")
     // per-query contention verdict for the FINAL number (post-retry)
+    val contended = sweep.groups.flatMap(g => g.names.map(_ -> g.contended)).toMap
     val qContJson = results.map { case (k, _) =>
-      "\"" + k + "\":" + queryContended.getOrElse(k, false)
+      "\"" + k + "\":" + contended.getOrElse(k, false)
     }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_min":${fmt(totalMin)},""" +
       s""""queries":$qs,"variance":$varc,"driver_mem_mb":$driverMb,""" +
-      s""""load_avg":[${fmt(loadStart)},${fmt(loadEnd)}],"load_warning":$loadWarn,""" +
-      s""""idle_gate":{"threshold":${fmt(IdleLoadMax)},"waited_s":${fmt(idleWaitedS)},""" +
-      s""""load_at_first_group":${fmt(loadAtFirstGroup)}},"groups":$groupsJson,""" +
+      s""""load_avg":[${fmt(sweep.loadBefore)},${fmt(loadEnd)}],"load_warning":$loadWarn,""" +
+      s""""idle_gate":{"threshold":${fmt(Harness.IdleLoadMax)},"waited_s":${fmt(sweep.idleWaitedS)},""" +
+      s""""load_at_first_group":${fmt(sweep.loadAtFirstGroup)}},"groups":$groupsJson,""" +
       s""""queries_contended":$qContJson,$notes,""" +
       s""""group_size":$GroupSize,"sf":"$sfDir","queries_min":$qsMin,"reps":$reps,"runs":$runs}"""
     // artifact discipline (round 12): dev and driver runs write to

@@ -1,8 +1,11 @@
 package graft
 
-/** Shared /proc/stat reader for the two bench harnesses ([[Bench]],
-  * [[graft.tools.ScaleBench]]) — one copy so a fix to the jiffy
-  * arithmetic can never apply to one harness and not the other.
+/** The one /proc/stat reader. Its callers: [[graft.tools.Harness]]
+  * (external-CPU share and steal around every forked child of
+  * [[Bench]] and [[graft.tools.ScaleBench]]), [[graft.tools.SoloProfile]]
+  * (steal per rep), ScaleBench (steal over the whole sweep) and
+  * perfbench's probe — one copy so a fix to the jiffy arithmetic can
+  * never apply to one measurement and not another.
   *
   * Field semantics (proc(5), aggregate `cpu` line):
   * user nice system idle iowait irq softirq steal guest guest_nice.

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * near-idle (1-min load printed for provenance). */
 object CostFixtureRecorder {
   def main(args: Array[String]): Unit = {
-    val load = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val load = Harness.loadAvg
     val spark = Engine.session("graft-cost-fixture")
     val (scan, join) = graft.optimizer.TrainedCost.microbench(spark)
 

@@ -16,12 +16,6 @@ import org.apache.spark.sql.SparkSession
   * 32,64,128,256. Writes one JSON object per (corpus, ef) cell. */
 object HnswCurve {
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(1).getOrElse("/tmp/graft_scale/x100")
@@ -44,7 +38,7 @@ object HnswCurve {
         if (bf.isEmpty) 1.0 else (got & bf).size.toDouble / bf.size
       spark.sharedState.cacheManager.clearCache()
       run().write.format("noop").mode("overwrite").save() // warm-up
-      val wall = median((1 to reps).map { _ =>
+      val wall = Harness.median((1 to reps).map { _ =>
         spark.sharedState.cacheManager.clearCache()
         val t0 = System.nanoTime
         run().write.format("noop").mode("overwrite").save()

@@ -25,9 +25,14 @@ import org.apache.spark.sql.functions._
   *  - events: event_id and user_id shifted (10× users, same per-user
   *    timeline density; raw nanos `ts` kept as int64)
   *
-  * Usage: `runMain graft.tools.ScaleBench [baseDir] [scratchDir] [out]`
-  * Defaults: /root/testdata/sf0.1, /tmp/graft_scale/sf1,
-  * SCALEBENCH.json. */
+  * Timings follow the [[Harness]] protocol: one fresh child JVM per
+  * [[GroupSize]] ops (round 9 caught the first op measured after the
+  * in-JVM corpus derivation at 7× its fresh-JVM time), each op cold at
+  * base then at N×, with the sweep's `groups` contention record.
+  *
+  * Usage: `runMain graft.tools.ScaleBench [baseDir] [scratchDir] [out]
+  * [copies] [reps]`. Defaults: the sf0.1 test data, a scratch
+  * directory under /tmp, SCALEBENCH.json, 10 copies, 3 reps. */
 object ScaleBench {
 
   val DefaultCopies = 10
@@ -242,15 +247,6 @@ object ScaleBench {
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
   }
 
-  private def runOnce(spark: SparkSession, name: String, dir: String): Double = {
-    val t0 = System.nanoTime
-    SparkEntry.queries(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    val s = (System.nanoTime - t0) / 1e9
-    spark.sharedState.cacheManager.clearCache()
-    s
-  }
-
   /** Output row count at `dir` — measured AFTER the timed reps (a
     * separate count() execution, never inside a timed window). The
     * record needs this because several exact-pair oracle twins emit
@@ -264,154 +260,31 @@ object ScaleBench {
     n
   }
 
-  /** Minimal JSON string escape (quotes/backslashes/control chars) —
-    * fork-failure reasons quote raw JVM stderr. */
-  private def escapeJson(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-  }
-
-  /** Child mode: measure `names` (base then N×) in THIS fresh JVM and
-    * write one `op\tbase\txN` line each. Same isolation rationale as
-    * [[graft.Bench]]'s per-group forks: round 9 caught the first op
-    * measured after the in-JVM 10×-corpus derivation at 7× its
-    * fresh-JVM time — a single long-lived session contaminates
-    * whatever runs behind the heaviest stage. */
-  private def groupRun(outFile: String, baseDir: String, scratch: String,
-      reps: Int, namesCsv: String): Unit = {
-    val names = namesCsv.split(",").toSeq.filter(_.nonEmpty)
-    val spark = Engine.session("graft-scalebench")
-    // reps == 0: the parent's SACRIFICIAL child — run each op once per
-    // scale to absorb the start-of-run transient, report nothing real
-    val lines = names.map { op =>
-      val opScratch = scratch + OpScratchSuffix.getOrElse(op, "")
-      runOnce(spark, op, baseDir) // warm-up at base
-      val base =
-        if (reps == 0) 0.0
-        else median((1 to reps).map(_ => runOnce(spark, op, baseDir)))
-      val outB = if (reps == 0) 0L else outRows(spark, op, baseDir)
-      runOnce(spark, op, opScratch) // warm-up at Nx
-      val xN =
-        if (reps == 0) 0.0
-        else median((1 to reps).map(_ => runOnce(spark, op, opScratch)))
-      val outN = if (reps == 0) 0L else outRows(spark, op, opScratch)
-      f"$op\t$base%.4f\t$xN%.4f\t$outB\t$outN"
+  /** One op at base then N×: per scale one untimed cold run, the
+    * median of `reps` cold runs, then the output row count. The row is
+    * `base\txN\tout_base\tout_N`. */
+  private def measureOp(spark: SparkSession, op: String, baseDir: String,
+      scratch: String, reps: Int): String = {
+    val at = Seq(baseDir, scratch + OpScratchSuffix.getOrElse(op, "")).map { dir =>
+      Harness.coldRun(spark, op, dir)
+      (Harness.median((1 to reps).map(_ => Harness.coldRun(spark, op, dir))), outRows(spark, op, dir))
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outFile), lines.mkString("", "\n", "\n"))
-    spark.stop()
+    f"${at(0)._1}%.4f\t${at(1)._1}%.4f\t${at(0)._2}\t${at(1)._2}"
   }
 
   /** Ops measured per forked JVM (the [[graft.Bench.GroupSize]]
     * trade-off at scale-bench rep counts). */
   val GroupSize = 4
 
-  /** Child JVM heap. The parent (under sbt) defaults to 8g — round
-    * 10's heaviest group (the four big dedup shuffles, 226M+ pair rows
-    * at 100×) killed its 8g child and silently degraded to in-process
-    * parent measurement. The children get their own, larger budget:
-    * they are the ONLY JVM doing work while they run (the parent sits
-    * idle), so there is no reason to starve them of a 125 GiB host. */
-  val ChildMem: String = sys.env.getOrElse("SCALEBENCH_CHILD_MEM", "24g")
-
-  /** One timed measurement group in a fresh child JVM.
-    * Left(reason) on any failure — the reason goes into the record's
-    * `fork_failures` field so an in-process fallback row is never
-    * unexplained (round 10 left the cause on stderr only). */
-  private def forkGroup(names: Seq[String], idx: Int, baseDir: String,
-      scratch: String, reps: Int): Either[String, Seq[(String, Double, Double, Long, Long)]] = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempFile(s"graft-scale-g$idx-", ".tsv")
-    val errF = java.nio.file.Files.createTempFile(s"graft-scale-g$idx-", ".err")
-    try {
-      val javaBin = java.nio.file.Paths.get(
-        sys.props("java.home"), "bin", "java").toString
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-        .filterNot(_.startsWith("-Xmx")) // replaced by the child budget
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(s"-Xmx$ChildMem") ++
-        Seq("-cp", sys.props("java.class.path"), "graft.tools.ScaleBench",
-          "--group", tmp.toString, baseDir, scratch, reps.toString,
-          names.mkString(","))
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      // child stderr goes to a file so a dead child's last words can be
-      // quoted in the record; echoed back to our stderr afterwards so
-      // live progress stays visible in the parent log
-      pb.redirectError(errF.toFile)
-      val p = pb.start()
-      val rc = p.waitFor()
-      val errLines = scala.util.Try(
-        java.nio.file.Files.readAllLines(errF).asScala.toSeq)
-        .getOrElse(Seq.empty)
-      errLines.foreach(System.err.println)
-      def lastWords: String = errLines.reverseIterator
-        .find(l => l.contains("Error") || l.contains("Exception") ||
-          l.contains("Killed") || l.contains("insufficient memory"))
-        .orElse(errLines.lastOption).getOrElse("no stderr").take(300)
-      if (rc != 0)
-        return Left(s"child exited $rc (heap $ChildMem): $lastWords")
-      val lines = java.nio.file.Files.readAllLines(tmp).asScala
-      val parsed = lines.map { l =>
-        val parts = l.split("\t")
-        (parts(0), parts(1).toDouble, parts(2).toDouble,
-          parts(3).toLong, parts(4).toLong)
-      }.toSeq
-      if (parsed.map(_._1) == names) Right(parsed)
-      else Left(s"child exited 0 but wrote ${parsed.length}/${names.length} rows: $lastWords")
-    } catch { case e: Throwable =>
-      System.err.println(s"[scalebench] group $idx fork failed: ${e.getMessage}")
-      Left(s"fork machinery: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-    } finally {
-      java.nio.file.Files.deleteIfExists(tmp)
-      java.nio.file.Files.deleteIfExists(errF)
-    }
-  }
-
-  /** Idle gate, same rationale and thresholds as [[graft.Bench]]'s:
-    * the first 10× regen of round 11 started one minute after the
-    * full test suite exited and its first child's first-op base
-    * median came out 2.4× the 100×-run measurement of the same op —
-    * start-of-run load tails land on whichever group runs first.
-    * Block (bounded) until the 1-min loadAvg clears
-    * [[graft.Bench.IdleLoadMax]] (a fixed 2.0 since round 12 — the
-    * old nproc/8 = 4.0 released round 11's driver bench into visible
-    * contention) before the first forked group. */
-  // hypervisor-steal measurement: shared [[graft.ProcStat]] reader
-  // (one copy for both harnesses — the round-12 duplicate drifted on
-  // the guest-jiffy double-count). Steal is the one contention source
-  // neither the idle gate (loadAvg sees only runnable LOCAL threads)
-  // nor per-group external-CPU fractions can see, and this host
-  // measurably suffers it in bursts (a sweep window with ~1.7 cores
-  // stolen on average inflated shuffle-heavy rows 1.5-3× against the
-  // same code profiled minutes later). -1 = unavailable.
-
-  private def awaitIdle(): Double = {
-    val max = graft.Bench.IdleLoadMax
-    val t0 = System.nanoTime
-    var l = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    while (l > max && (System.nanoTime - t0) / 1e9 < graft.Bench.IdleWaitMaxS) {
-      System.err.println(f"[scalebench] host busy (load $l%.1f > $max%.1f) — waiting 10 s")
-      Thread.sleep(10000)
-      l = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-    }
-    (System.nanoTime - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.length >= 6 && args(0) == "--group")
-      return groupRun(args(1), args(2), args(3), args(4).toInt, args(5))
+    Harness.childArgs(args.toSeq).foreach { c =>
+      val Seq(baseDir, scratch, reps) = c.extra
+      // the sacrificial child runs each op once per scale
+      return Harness.runChild(c, "graft-scalebench") { (spark, op) =>
+        Harness.coldRun(spark, op, baseDir)
+        Harness.coldRun(spark, op, scratch + OpScratchSuffix.getOrElse(op, ""))
+      } { (spark, ops) => ops.map(op => op -> measureOp(spark, op, baseDir, scratch, reps.toInt)) }
+    }
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val scratch = args.lift(1).getOrElse("/tmp/graft_scale/sf1")
     val outPath = args.lift(2).getOrElse("SCALEBENCH.json")
@@ -431,8 +304,6 @@ object ScaleBench {
     // dev loop: SCALEBENCH_RECALL_ONLY=1 skips the timing sweep so ANN
     // parameter changes can be recall-scored in ~a minute; the driver
     // and the committed SCALEBENCH.json always run the full sweep.
-    // Timings come from forked fresh-JVM groups (fallback: in-process)
-    // while the parent session sits idle.
     val recallOnly = sys.env.contains("SCALEBENCH_RECALL_ONLY")
     // explicit (never silent) op skip list for a constrained sweep —
     // anything excluded is named on stderr so the record's coverage
@@ -446,80 +317,35 @@ object ScaleBench {
     // record must carry its own coverage statement
     val skipped = scala.collection.mutable.ListBuffer.empty[(String, String)]
     skip.toSeq.sorted.foreach(op => skipped += ((op, "env:SCALEBENCH_SKIP")))
-    // a fork that fails leaves WHY in the record (group, ops, reason),
-    // not just an in_process tag whose cause lives on stderr
-    val forkFailures = scala.collection.mutable.ListBuffer.empty[(Int, Seq[String], String)]
-    val idleWaitedS = awaitIdle()
-    System.err.println(f"[scalebench] idle gate: waited $idleWaitedS%.0f s before first timed group")
-    // Sacrificial untimed child (the graft.Bench sacrificial-group
-    // rationale, observed here too): in back-to-back full sweeps the
-    // FIRST forked child's leading ops measured 4-8× their settled
-    // medians (dedup_minhash_lsh 13-15 s vs a settled 1.7-2.0 s base)
-    // while an identical group re-forked manually minutes later
-    // measured normally — a start-of-run transient that follows the
-    // first child of the run, not any op. One throwaway child runs
-    // the first group's ops once per scale with results discarded;
-    // the record carries whether it ran so a sweep without it is
-    // visibly un-warmed.
-    val sacrificed =
-      if (recallOnly) false
-      else Ops.filterNot(skip).headOption.exists { _ =>
-        val first = Ops.filterNot(skip).take(GroupSize)
-        System.err.println(
-          s"[scalebench] sacrificial child: ${first.mkString(", ")} (untimed)")
-        forkGroup(first, -1, baseDir, scratch, 0).isRight
-      }
-    // per-group hypervisor-steal percentage, recorded so a contended
-    // group is visible IN the record (see graft.ProcStat)
-    val groupSteal = scala.collection.mutable.ListBuffer.empty[(Int, Double)]
     val stealRun0 = graft.ProcStat.snapshot()
-    val results = (if (recallOnly) Seq.empty[String] else Ops.filterNot(skip))
-      .grouped(GroupSize).zipWithIndex.flatMap { case (g, i) =>
-        val st0 = graft.ProcStat.snapshot()
-        val out = forkGroup(g, i, baseDir, scratch, reps)
-        val stp = graft.ProcStat.stealPctBetween(st0, graft.ProcStat.snapshot())
-        groupSteal += ((i, stp))
-        if (stp > 2.0) System.err.println(
-          f"[scalebench] group $i: hypervisor steal $stp%.1f%% of cpu time")
-        out match {
-          case Right(rows) =>
-            rows.map { case (op, b, x, ob, ox) => (op, b, x, ob, ox, false) }
-          case Left(reason) =>
-          forkFailures += ((i, g, reason))
-          System.err.println(
-            s"[scalebench] group $i: in-process fallback ($reason)")
-          // per-op Try: one op that cannot run at this scale (e.g. an
-          // OOM that already killed its child JVM) must not take the
-          // whole sweep's record with it — skip it, keep the rest.
-          // Fallback timings run in the long-lived parent JVM — the
-          // exact contamination the fork isolates against (see the
-          // groupRun scaladoc) — so each is tagged "in_process":true
-          // in the JSON: mixed-isolation timings stay auditable.
-          g.flatMap { op =>
-            try {
-              val opScratch = scratch + OpScratchSuffix.getOrElse(op, "")
-              runOnce(spark, op, baseDir)
-              val base = median((1 to reps).map(_ => runOnce(spark, op, baseDir)))
-              val outB = outRows(spark, op, baseDir)
-              runOnce(spark, op, opScratch)
-              val xN = median((1 to reps).map(_ => runOnce(spark, op, opScratch)))
-              val outN = outRows(spark, op, opScratch)
-              Some((op, base, xN, outB, outN, true))
-            } catch { case e: Throwable =>
-              System.err.println(
-                s"[scalebench] $op skipped (fallback failed): ${e.getMessage}")
-              skipped += ((op, s"fallback_failed: ${e.getClass.getSimpleName}"))
-              None
-            }
-          }
+    val sweep = Harness.sweep("scalebench", "graft.tools.ScaleBench",
+        Seq(baseDir, scratch, reps.toString),
+        if (recallOnly) Nil else Ops.filterNot(skip), GroupSize) { g =>
+      // per-op Try: one op that cannot run at this scale (e.g. an OOM
+      // that already killed its child JVM) must not take the whole
+      // sweep's record with it — skip it, keep the rest
+      g.flatMap { op =>
+        try Some(op -> measureOp(spark, op, baseDir, scratch, reps))
+        catch { case e: Throwable =>
+          System.err.println(s"[scalebench] $op skipped (fallback failed): ${e.getMessage}")
+          skipped += ((op, s"fallback_failed: ${e.getClass.getSimpleName}"))
+          None
         }
-      }.map { case (op, base, xN, outB, outN, inProc) =>
-        val ratio = xN / base
-        System.err.println(
-          f"[scalebench] $op%-26s base $base%7.2f s   ${copies}x $xN%7.2f s   ratio $ratio%5.2f   out $outB%,d -> $outN%,d" +
-            (if (inProc) "   [in-process]" else ""))
-        (op, base, xN, ratio, outB, outN, inProc)
-      }.toSeq
+      }
+    }
+    // fallback timings ran in the long-lived parent JVM — the exact
+    // contamination the fork isolates against — so each is tagged
+    // "in_process":true: mixed-isolation timings stay auditable
+    val inProcess = sweep.groups.filter(_.fallback.isDefined).flatMap(_.names).toSet
+    val results = sweep.rows.map { case (op, v) =>
+      val Array(b, x, ob, ox) = v.split('\t')
+      val (base, xN, outB, outN) = (b.toDouble, x.toDouble, ob.toLong, ox.toLong)
+      val ratio = xN / base
+      System.err.println(
+        f"[scalebench] $op%-26s base $base%7.2f s   ${copies}x $xN%7.2f s   ratio $ratio%5.2f   out $outB%,d -> $outN%,d" +
+          (if (inProcess(op)) "   [in-process]" else ""))
+      (op, base, xN, ratio, outB, outN, inProcess(op))
+    }
 
     // recall@5 at the big corpus vs brute force over the same queries
     // (query ids < 10 live in copy 0, unperturbed). Driver-side sets
@@ -553,7 +379,9 @@ object ScaleBench {
 
     def fmt(d: Double) = f"$d%.4f"
     val stealRunPct = graft.ProcStat.stealPctBetween(stealRun0, graft.ProcStat.snapshot())
-    val json = s"""{"copies":$copies,"reps":$reps,"base":"$baseDir","child_mem":"$ChildMem","sacrificial_child":$sacrificed,"idle_waited_s":${fmt(idleWaitedS)},"steal_pct":${fmt(stealRunPct)},"group_steal_pct":[${groupSteal.map(g => fmt(g._2)).mkString(",")}],"rows":{""" +
+    val json = s"""{"copies":$copies,"reps":$reps,"base":"$baseDir","child_mem":"${Harness.ChildHeapGb}g",""" +
+      s""""sacrificial_child":${sweep.sacrificed},"idle_waited_s":${fmt(sweep.idleWaitedS)},""" +
+      s""""steal_pct":${fmt(stealRunPct)},"groups":${sweep.groups.map(_.json).mkString("[", ",", "]")},"rows":{""" +
       rows.map { case (t, (b, x)) => s""""$t":[$b,$x]""" }.mkString(",") +
       s"""},"ops":{""" +
       results.map { case (op, b, x, r, outB, outN, inProc) =>
@@ -566,11 +394,7 @@ object ScaleBench {
           (if (inProc) ""","in_process":true}""" else "}")
       }.mkString(",") + s"""},"vacuous":[""" +
       vacuous.map(op => s""""$op"""").mkString(",") +
-      s"""],"fork_failures":[""" +
-      forkFailures.map { case (i, g, reason) =>
-        s"""{"group":$i,"ops":[${g.map(o => s""""$o"""").mkString(",")}],""" +
-          s""""reason":${escapeJson(reason)}}"""
-      }.mkString(",") + s"""],"skipped":[""" +
+      s"""],"skipped":[""" +
       skipped.map { case (op, why) =>
         s"""{"op":"$op","reason":"$why"}"""
       }.mkString(",") + s"""],"recall_at_5":{""" +

@@ -2,8 +2,8 @@ package graft.tools
 
 import graft.{Engine, ProcStat, SparkEntry}
 
-/** Solo profiler for ONE operator: the instrument the round-12
-  * `sim_knn_graph` question needs. The 100× sweep measured the op at
+/** Solo profiler for single operators: the instrument the round-12
+  * `sim_knn_graph` question needed. The 100× sweep measured the op at
   * 29.6 s committed vs 62-72 s in two driver reruns — a 2.4× swing on
   * one op while its group neighbors moved ~1.3×, beyond what the
   * recorded 5-11 % hypervisor steal explains. Group sweeps cannot
@@ -11,9 +11,10 @@ import graft.{Engine, ProcStat, SparkEntry}
   * strategy flip between runs, JVM-state contamination from group
   * predecessors); this tool isolates all three:
   *
-  *  - SOLO, fresh JVM: `runMain graft.tools.SoloProfile <op> <dir>` is
-  *    itself the fresh JVM — no group predecessor can contaminate the
-  *    measurement (the ScaleBench fork rationale, applied per-op).
+  *  - SOLO, fresh JVM: `runMain graft.tools.SoloProfile <ops> <dir>` is
+  *    itself the fresh JVM, started behind the [[Harness]] idle gate;
+  *    each op gets one untimed cold run before its timed reps, and
+  *    every rep is cold.
   *  - Per-REP steal: each timed rep carries its own [[ProcStat]]
   *    window plus the 1-min loadavg at rep start, so a contended rep
   *    is visible next to its wall — not averaged into a sweep-wide
@@ -22,109 +23,75 @@ import graft.{Engine, ProcStat, SparkEntry}
   *    own QueryExecution (`toRdd` + a foreach job — the same physical
   *    plan a noop write runs, minus the write wrapper) so the
   *    AdaptiveSparkPlan it holds afterwards IS the final plan of the
-  *    measured run. The record fingerprints each plan (counts of
-  *    broadcast/sort-merge/shuffled-hash joins, AQE skew/coalesce
-  *    markers) and flags `plan_flip` when any two reps disagree —
-  *    the "AQE flips the bucket-join strategy between runs"
-  *    hypothesis becomes a recorded yes/no instead of a suspicion.
+  *    measured run. The record carries each plan's
+  *    [[Harness.fingerprint]] (join strategies, shuffle and broadcast
+  *    exchanges, in-memory scans, AQE skew/coalesce markers) and flags
+  *    `plan_flip` when any two reps disagree — the "AQE flips the
+  *    bucket-join strategy between runs" hypothesis becomes a recorded
+  *    yes/no instead of a suspicion.
   *
-  * Usage: runMain graft.tools.SoloProfile <op> <dir> [reps=3]
-  *        [out=SOLO_<op>.json] — the dir is any corpus directory
-  * (oracle SF or a ScaleBench-derived N× scratch; the caller derives
-  * scratch corpora first, e.g. via [[ScaleBench]]). */
+  * Usage: runMain graft.tools.SoloProfile <op[,op...]> <dir> [reps=3]
+  *        [out=SOLO_<op>.json] — one record per op; `out` names the
+  *        record of a single op. The dir is any corpus directory
+  *        (oracle SF or a ScaleBench-derived N× scratch; the caller
+  *        derives scratch corpora first, e.g. via [[ScaleBench]]). */
 object SoloProfile {
 
-  /** Strategy-relevant plan features: a flip in any of these between
-    * reps of the same op on the same data is plan instability (AQE
-    * re-deciding a join build side / strategy on runtime stats), the
-    * thing the solo record exists to catch or rule out. */
-  private val Markers = Seq(
-    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-    "BroadcastNestedLoopJoin", "CartesianProduct",
-    "AQEShuffleRead", "skewed=true", "coalesced")
-
-  private def fingerprint(plan: String): Map[String, Int] = {
-    // count only the FINAL adaptive plan — the stringified
-    // AdaptiveSparkPlan carries the initial plan too, which would
-    // double every marker and, worse, hide a flip where the final
-    // differs from the initial in the same way across reps
-    val finalOnly = plan.split("== Initial Plan ==")(0)
-    Markers.map(m => m -> m.r.findAllIn(finalOnly).length).toMap
-  }
-
-  private def escape(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   def main(args: Array[String]): Unit = {
-    val op = args.lift(0).getOrElse(
-      sys.error("usage: SoloProfile <op> <dir> [reps] [out]"))
+    val ops = args.lift(0).getOrElse(
+      sys.error("usage: SoloProfile <op[,op...]> <dir> [reps] [out]")).split(',').toSeq
     val dir = args.lift(1).getOrElse(sys.error("missing <dir>"))
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val outPath = args.lift(3).getOrElse(s"SOLO_$op.json")
-    val spark = Engine.session(s"graft-solo-$op")
+    require(args.length < 4 || ops.length == 1, "[out] names the record of a single op")
+    val idleWaitedS = Harness.awaitIdle("solo")
+    val spark = Engine.session("graft-solo")
+    ops.foreach { op =>
+      val outPath = args.lift(3).getOrElse(s"SOLO_$op.json")
+      Harness.coldRun(spark, op, dir)
+      val runs = (1 to reps).map { i =>
+        val load0 = Harness.loadAvg
+        val st0 = ProcStat.snapshot()
+        val qe = SparkEntry.queries(op)(spark, dir).queryExecution
+        val t0 = System.nanoTime
+        // execute the DataFrame's OWN QueryExecution so the adaptive
+        // plan we stringify below is the one this timed run finalized
+        // (a noop write plans a fresh QueryExecution internally and
+        // discards it)
+        spark.sparkContext.runJob(qe.toRdd,
+          (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+            { while (it.hasNext) it.next(); () })
+        val wall = (System.nanoTime - t0) / 1e9
+        val steal = ProcStat.stealPctBetween(st0, ProcStat.snapshot())
+        val plan = qe.executedPlan.toString
+        spark.sharedState.cacheManager.clearCache()
+        val fp = Harness.fingerprint(plan)
+        System.err.println(f"[solo] $op rep $i: wall $wall%7.2f s  steal $steal%5.2f%%  load@start $load0%4.1f  " +
+          fp.filter(_._2 > 0).map { case (k, v) => s"$k=$v" }.mkString(" "))
+        (wall, steal, load0, fp, plan)
+      }
 
-    def loadAvg: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+      val fps = runs.map(_._4)
+      val walls = runs.map(_._1)
+      // plan dumped once per DISTINCT fingerprint — evidence, not bulk
+      runs.map(r => (r._4, r._5)).distinctBy(_._1).zipWithIndex.foreach { case ((_, p), i) =>
+        val f = java.nio.file.Paths.get(outPath.stripSuffix(".json") + s"_plan$i.txt")
+        java.nio.file.Files.writeString(f, p)
+        System.err.println(s"[solo] plan variant $i -> $f")
+      }
 
-    // one untimed warm-up (class loading, code cache, parquet footer
-    // cache) — the sacrificial-run posture both bench harnesses use
-    SparkEntry.queries(op)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    spark.sharedState.cacheManager.clearCache()
-
-    val runs = (1 to reps).map { i =>
-      val load0 = loadAvg
-      val st0 = ProcStat.snapshot()
-      val df = SparkEntry.queries(op)(spark, dir)
-      val qe = df.queryExecution
-      val t0 = System.nanoTime
-      // execute the DataFrame's OWN QueryExecution so the adaptive
-      // plan we stringify below is the one this timed run finalized
-      // (a noop write plans a fresh QueryExecution internally and
-      // discards it)
-      spark.sparkContext.runJob(qe.toRdd,
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-          { while (it.hasNext) it.next(); () })
-      val wall = (System.nanoTime - t0) / 1e9
-      val steal = ProcStat.stealPctBetween(st0, ProcStat.snapshot())
-      val plan = qe.executedPlan.toString
-      spark.sharedState.cacheManager.clearCache()
-      val fp = fingerprint(plan)
-      System.err.println(f"[solo] $op rep $i: wall $wall%7.2f s  steal $steal%5.2f%%  load@start $load0%4.1f  " +
-        fp.filter(_._2 > 0).map { case (k, v) => s"$k=$v" }.mkString(" "))
-      (wall, steal, load0, fp, plan)
+      def fmt(d: Double) = f"$d%.4f"
+      val json = s"""{"op":"$op","dir":${Harness.jsonString(dir)},"reps":$reps,""" +
+        s""""idle_waited_s":${fmt(idleWaitedS)},"walls_s":[${walls.map(fmt).mkString(",")}],""" +
+        s""""steal_pct":[${runs.map(r => fmt(r._2)).mkString(",")}],""" +
+        s""""load_at_start":[${runs.map(r => fmt(r._3)).mkString(",")}],""" +
+        s""""spread":${fmt(walls.max / walls.min)},"plan_flip":${fps.distinct.length > 1},""" +
+        s""""plan_fingerprints":[""" +
+        fps.map(fp => "{" + fp.toSeq.sortBy(_._1).map {
+          case (k, v) => s""""$k":$v""" }.mkString(",") + "}").mkString(",") +
+        "]}"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
+      println(json)
     }
-
-    val fps = runs.map(_._4)
-    val planFlip = fps.distinct.length > 1
-    val walls = runs.map(_._1)
-    val spread = walls.max / walls.min
-    // plan dumped once per DISTINCT fingerprint — evidence, not bulk
-    val distinctPlans = runs.map(r => (r._4, r._5)).distinctBy(_._1)
-    distinctPlans.zipWithIndex.foreach { case ((_, p), i) =>
-      val f = java.nio.file.Paths.get(
-        outPath.stripSuffix(".json") + s"_plan$i.txt")
-      java.nio.file.Files.writeString(f, p)
-      System.err.println(s"[solo] plan variant $i -> $f")
-    }
-
-    def fmt(d: Double) = f"$d%.4f"
-    val json = s"""{"op":"$op","dir":${escape(dir)},"reps":$reps,""" +
-      s""""walls_s":[${walls.map(fmt).mkString(",")}],""" +
-      s""""steal_pct":[${runs.map(r => fmt(r._2)).mkString(",")}],""" +
-      s""""load_at_start":[${runs.map(r => fmt(r._3)).mkString(",")}],""" +
-      s""""spread":${fmt(spread)},"plan_flip":$planFlip,""" +
-      s""""plan_fingerprints":[""" +
-      fps.map(fp => "{" + fp.toSeq.sortBy(_._1).map {
-        case (k, v) => s""""$k":$v""" }.mkString(",") + "}").mkString(",") +
-      "]}"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
-    println(json)
     spark.stop()
   }
 }

@@ -2,12 +2,25 @@ package graft
 
 import graft.operators.EventOps
 import graft.streaming.StreamOps
+import org.scalatest.concurrent.{Signaler, TimeLimitedTests}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** Streaming twins must agree with their batch counterparts when the
   * whole table is replayed as one stream. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TimeLimitedTests {
   import TestSession._
+
+  /** No drain here or in StreamOps' replay helpers has a limit of its
+    * own, so each test body runs under this one: a wedged micro-batch
+    * then fails its test by name instead of eating the suite's budget.
+    * The slowest test took 14.9 s with a cold session (5.0 s in a full
+    * suite run, 4 cores); the limit leaves more than 5× headroom. */
+  val timeLimit = 80.seconds
+  /** On timeout, stop every active query: `processAllAvailable` returns
+    * once its query is inactive, so the blocked body can unwind. */
+  override val defaultTestSignaler: Signaler =
+    Signaler(_ => spark.streams.active.foreach(_.stop()))
 
   test("streaming exact dedup keeps one survivor per content hash (matches batch groups)") {
     val docs = StreamOps.readDocuments(spark, sf)
