@@ -124,6 +124,14 @@ object Bench {
   val ExternalCpuWarn: Double = Harness.ExternalCpuWarn
   val StealWarnPct: Double = Harness.StealWarnPct
 
+  /** `load_warning`: the first timed group started above the idle
+    * gate's threshold, i.e. the gate gave up waiting. Keyed on the
+    * POST-gate load (what that group saw), not the arrival load. A
+    * cores/5 rule sat below the gate's fixed 2.0 on hosts with fewer
+    * than 10 cores and flagged every gated run there. */
+  def loadWarning(loadAtFirstGroup: Double): Boolean =
+    loadAtFirstGroup > Harness.IdleLoadMax
+
   private def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -211,9 +219,7 @@ object Bench {
     // external load arriving mid-run shows up in the per-query
     // variance field instead.
     val loadEnd = Harness.loadAvg
-    // the warning now keys on the POST-gate load (what the first timed
-    // group actually saw), not the pre-gate arrival load
-    val loadWarn = sweep.loadAtFirstGroup > Runtime.getRuntime.availableProcessors / 5.0
+    val loadWarn = loadWarning(sweep.loadAtFirstGroup)
     // measurement-semantics provenance a reviewer needs to read the
     // medians correctly — in the record itself, not only in scaladoc
     val notes =
@@ -244,15 +250,10 @@ object Bench {
       s""""load_at_first_group":${fmt(sweep.loadAtFirstGroup)}},"groups":$groupsJson,""" +
       s""""queries_contended":$qContJson,$notes,""" +
       s""""group_size":$GroupSize,"sf":"$sfDir","queries_min":$qsMin,"reps":$reps,"runs":$runs}"""
-    // artifact discipline (round 12): dev and driver runs write to
-    // *.new so they can never clobber the committed idle-gated record
-    // (the round-11 "working tree dirtied by the driver's loaded-host
-    // re-run" gotcha); only a deliberate BENCH_COMMIT=1 run — the one
-    // recorded after agreeing idle runs — writes the canonical files.
-    val commitRun = sys.env.get("BENCH_COMMIT").contains("1")
-    val fullPath = if (commitRun) "BENCH.json" else "BENCH.json.new"
-    val compactPath =
-      if (commitRun) "BENCH_COMPACT.json" else "BENCH_COMPACT.json.new"
+    // artifact discipline (round 12): a loaded-host re-run once
+    // overwrote the committed idle-gated record
+    val fullPath = Harness.recordPath("BENCH.json")
+    val compactPath = Harness.recordPath("BENCH_COMPACT.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(fullPath), full + "\n")
     catch { case e: Throwable =>

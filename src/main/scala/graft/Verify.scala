@@ -42,12 +42,13 @@ object Verify {
       val gates = graft.tools.QualityGates.compute(spark, sfDir)
       val gatesJson = graft.tools.QualityGates.toJson(gates)
       Files.writeString(Paths.get(s"$outDir/quality.json"), gatesJson)
-      // the no_oracle rows' evidence must survive the round: mirror the
-      // gate values into the repo root (committed as QUALITY_r{N}.json)
-      // instead of living only in the driver's scratch outDir
-      try Files.writeString(Paths.get("QUALITY.json"), gatesJson)
+      // mirror the gate values into the working directory so the
+      // no_oracle rows' evidence outlives outDir; like Bench's records,
+      // an sf0.001 dev run must not rewrite the committed QUALITY.json
+      val mirror = graft.tools.Harness.recordPath("QUALITY.json")
+      try Files.writeString(Paths.get(mirror), gatesJson)
       catch { case e: Throwable =>
-        System.err.println(s"[verify] QUALITY.json mirror failed: ${e.getMessage}")
+        System.err.println(s"[verify] $mirror mirror failed: ${e.getMessage}")
       }
       gates.foreach { g =>
         System.err.println(f"[quality] ${g.query}%-22s ${g.metric}%-26s " +

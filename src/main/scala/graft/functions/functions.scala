@@ -369,6 +369,90 @@ object DotProduct {
 }
 
 
+/** Word n-grams of a text: the words of `split(text, ' ')` (the same
+  * `UTF8String.split` call, so empty words from doubled, leading or
+  * trailing spaces are kept), every window of `n` consecutive words
+  * joined by one space, in order; with `distinct`, each gram once, at
+  * its first occurrence. A text of fewer than `n` words is one gram,
+  * its whole word list; NULL and '' both give `[""]`. Equal, on every
+  * input, to the higher-order-function form
+  * `transform(sequence(1, greatest(size(ws) - n + 1, 1)),
+  * i -> concat_ws(' ', slice(ws, i, n)))` (under `array_distinct` for
+  * `distinct`), which Spark evaluates interpreted (`transform` has no
+  * doGenCode) and which therefore splits the surrounding
+  * WholeStageCodegen stage. This one compiles via doGenCode into the
+  * stage. */
+case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
+    extends UnaryExpression {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, FalseLiteral}
+  import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+  import org.apache.spark.sql.types.ArrayType
+
+  require(n >= 1, s"word_ngrams needs n >= 1, got $n")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "word_ngrams"
+  override def checkInputDataTypes() =
+    if (child.dataType.isInstanceOf[StringType])
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"word_ngrams expects STRING, got ${child.dataType}")
+
+  override def eval(input: InternalRow): Any =
+    WordNgrams.grams(child.eval(input).asInstanceOf[UTF8String], n, distinct)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.WordNgrams.grams(
+        ${c.isNull} ? null : ${c.value}, $n, $distinct);""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
+    copy(child = newChild)
+}
+
+object WordNgrams {
+  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+  import org.apache.spark.unsafe.Platform
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** The grams of `text`; NULL reads as '', whose one gram is "". */
+  def grams(text: UTF8String, n: Int, distinct: Boolean): ArrayData = {
+    val ws = if (text == null) Array(UTF8String.EMPTY_UTF8) else text.split(Space, -1)
+    val m = ws.length
+    val count = math.max(m - n + 1, 1)
+    val out = new Array[Any](count)
+    val seen = if (distinct) new java.util.HashSet[UTF8String](count * 2) else null
+    var kept = 0
+    var i = 0
+    while (i < count) {
+      val end = math.min(i + n, m)
+      var len = end - i - 1 // separators
+      var j = i
+      while (j < end) { len += ws(j).numBytes; j += 1 }
+      val bytes = new Array[Byte](len)
+      var pos = Platform.BYTE_ARRAY_OFFSET
+      j = i
+      while (j < end) {
+        if (j > i) { Platform.putByte(bytes, pos, ' '.toByte); pos += 1 }
+        ws(j).writeToMemory(bytes, pos)
+        pos += ws(j).numBytes
+        j += 1
+      }
+      val g = UTF8String.fromBytes(bytes)
+      if (seen == null || seen.add(g)) { out(kept) = g; kept += 1 }
+      i += 1
+    }
+    new GenericArrayData(if (kept == count) out else out.take(kept))
+  }
+}
+
 object functions {
   private def toCol(e: Expression): Column = GraftShim.column(e)
   private def expr(c: Column): Expression = GraftShim.expression(c)
@@ -390,4 +474,9 @@ object functions {
     * -1 when the blob is not an MP4 or carries no moov/mvhd. */
   def mp4_meta(c: Column): Column =
     toCol(Mp4Meta(expr(c)))
+
+  /** Codegen'd word n-grams of a STRING column (see [[WordNgrams]]);
+    * `distinct` keeps each gram's first occurrence only. */
+  def word_ngrams(text: Column, n: Int, distinct: Boolean = false): Column =
+    toCol(WordNgrams(expr(text), n, distinct))
 }

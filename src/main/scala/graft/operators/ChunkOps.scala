@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Engine
+import graft.functions.functions.word_ngrams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,17 +129,14 @@ object ChunkOps {
     * distinct-word ratio, most-frequent-word fraction, duplicate
     * bigram fraction. */
   def repetitionStats(sp: SparkSession, dir: String): DataFrame = {
-    val ws = split(col("text"), " ")
-    val bigrams = transform(
-      sequence(lit(1), greatest(size(col("ws")) - 1, lit(1))),
-      i => concat_ws(" ", slice(col("ws"), i, lit(2))))
     Engine.table(sp, dir, "documents")
-      .select(col("doc_id"), ws.as("ws"))
+      .select(col("doc_id"), split(col("text"), " ").as("ws"),
+        word_ngrams(col("text"), 2).as("bg"))
       .select(col("doc_id"),
         size(col("ws")).cast("long").as("n_words"),
         size(array_distinct(col("ws"))).cast("long").as("n_distinct"),
         maxRunCount(array_sort(col("ws"))).as("top_word_n"),
-        bigrams.as("bg"))
+        col("bg"))
       .withColumn("n_bigrams", size(col("bg")).cast("long"))
       .withColumn("n_distinct_bigrams",
         size(array_distinct(col("bg"))).cast("long"))

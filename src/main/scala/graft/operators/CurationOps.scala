@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Engine
+import graft.functions.functions.word_ngrams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,24 +32,23 @@ import org.apache.spark.sql.functions._
   */
 object CurationOps {
 
-  /** Upper-exclusive DuckDB `range`/Spark `sequence` agree via
-    * GREATEST(len-4, 1) inclusive on the Spark side. */
+  /** Words per decontamination gram. The oracle's upper-exclusive
+    * `range(1, GREATEST(len - 3, 2))` yields max(len - 4, 1) grams,
+    * the count `word_ngrams` gives. */
   private val GramWords = 5
 
   /** Documents whose `source` marks them as the held-out eval set. */
   private val EvalSource = "src0"
 
-  private def gramsOf(sp: SparkSession, dir: String): DataFrame = {
-    val ws = split(col("text"), " ")
+  /** Each document's DISTINCT word 5-grams, deduped inside the row by
+    * the codegen'd `word_ngrams` (a gram row comes from its doc's one
+    * text row, so the in-row distinct equals a `.distinct()` over the
+    * exploded stream without its hash aggregate). */
+  private def gramsOf(sp: SparkSession, dir: String): DataFrame =
     Engine.table(sp, dir, "documents")
       .repartition(sp.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), col("source"), ws.as("ws"))
       .select(col("doc_id"), col("source"),
-        explode(transform(
-          sequence(lit(1), greatest(size(col("ws")) - (GramWords - 1), lit(1))),
-          i => concat_ws(" ", slice(col("ws"), i, lit(GramWords))))).as("g"))
-      .distinct()
-  }
+        explode(word_ngrams(col("text"), GramWords, distinct = true)).as("g"))
 
   /** Training docs sharing ≥1 word 5-gram with the eval set, with the
     * count of distinct shared grams. */
@@ -197,14 +197,9 @@ object CurationOps {
     * (duplicates included). Two aggregations + one join, all-integer
     * until the final division, so oracle-exact. */
   def ngramFamiliarity(sp: SparkSession, dir: String): DataFrame = {
-    val ws = split(col("text"), " ")
     val bigrams = Engine.table(sp, dir, "documents")
       .repartition(sp.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"),
-        explode(transform(
-          sequence(lit(1), greatest(size(col("ws")) - 1, lit(1))),
-          i => concat_ws(" ", slice(col("ws"), i, lit(2))))).as("g"))
+      .select(col("doc_id"), explode(word_ngrams(col("text"), 2)).as("g"))
     val df = bigrams.select(col("doc_id"), col("g")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("df"))
     bigrams.join(df, "g")

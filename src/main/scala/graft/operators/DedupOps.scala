@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Engine
+import graft.functions.functions.word_ngrams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,48 +37,32 @@ object DedupOps {
       COUNT(*) AS n_copies
     FROM documents GROUP BY md5(text)"""
 
-  /** Word-3-gram shingles per document (with duplicates). Hash-
-    * repartition by doc_id BEFORE the explode: the shingling work runs
-    * parallel even when the scan has fewer splits than cores, and the
-    * downstream per-doc aggregation inherits the partitioning — one
-    * sketch buffer per doc, no partial-agg fan-out of Array buffers. */
-  private[graft] def shinglesRawFrom(sp: SparkSession, docs: DataFrame): DataFrame = {
-    val words = split(col("text"), " ")
-    docs
-      .repartition(sp.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), words.as("ws"))
-      .select(col("doc_id"),
-        explode(transform(
-          sequence(lit(1), greatest(size(col("ws")) - 2, lit(1))),
-          i => concat_ws(" ", slice(col("ws"), i, lit(3))))).as("shingle"))
-  }
-
-  private[graft] def shinglesRaw(sp: SparkSession, dir: String): DataFrame =
-    shinglesRawFrom(sp, Engine.table(sp, dir, "documents"))
-
-  /** Per-document DISTINCT shingles, deduped INSIDE the row (round
+  /** Word-3-gram shingles per document, built by the codegen'd
+    * [[graft.functions.WordNgrams]] (`word_ngrams`), which stays in
+    * the scan's WholeStageCodegen stage where the `transform(sequence(…))`
+    * form ran interpreted. Hash-repartition by doc_id BEFORE the
+    * explode: the shingling work runs parallel even when the scan has
+    * fewer splits than cores, and the downstream per-doc aggregation
+    * inherits the partitioning — one sketch buffer per doc, no
+    * partial-agg fan-out of Array buffers.
+    *
+    * `distinct` dedups each document's shingles INSIDE the row (round
     * 14): every duplicate of a (doc_id, shingle) pair originates from
-    * the single text row that exploded into it, so `array_distinct`
-    * on the per-doc shingle array before the explode is exactly
-    * `.distinct()` over the exploded stream — minus the corpus-sized
-    * exchange + two hash aggregates the distinct planned (the same
-    * class of win as round 13's raw-stream MinHash signatures, where
-    * dropping that aggregate cut the op 0.57× at 100×). Guide §2.4
-    * (remove shuffles outright: the data is already doc-local). */
-  private[graft] def shinglesSetFrom(sp: SparkSession, docs: DataFrame): DataFrame = {
-    val words = split(col("text"), " ")
+    * the single text row that exploded into it, so the in-row distinct
+    * is exactly `.distinct()` over the exploded stream — minus the
+    * corpus-sized exchange + two hash aggregates the distinct planned
+    * (guide §2.4: remove shuffles outright, the data is already
+    * doc-local). */
+  private[graft] def shinglesFrom(sp: SparkSession, docs: DataFrame,
+      distinct: Boolean): DataFrame =
     docs
       .repartition(sp.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), words.as("ws"))
       .select(col("doc_id"),
-        explode(array_distinct(transform(
-          sequence(lit(1), greatest(size(col("ws")) - 2, lit(1))),
-          i => concat_ws(" ", slice(col("ws"), i, lit(3)))))).as("shingle"))
-  }
+        explode(word_ngrams(col("text"), 3, distinct)).as("shingle"))
 
   /** Distinct string shingles (the exact-Jaccard/oracle path). */
   private[graft] def shingles(sp: SparkSession, dir: String): DataFrame =
-    shinglesSetFrom(sp, Engine.table(sp, dir, "documents"))
+    shinglesFrom(sp, Engine.table(sp, dir, "documents"), distinct = true)
 
   /** The shingle JOIN key: shingle strings hashed to 8-byte longs.
     *
@@ -360,7 +345,7 @@ object DedupOps {
     // With nv == 1 for every k, per-k df ≡ per-string df and
     // min(shingle) ≡ the row's shingle, so the probe's (df, shingle)
     // ordering and the ≤ cap filter are the string-keyed semantics.
-    val dfTab = shinglesSetFrom(sp, docsIn)
+    val dfTab = shinglesFrom(sp, docsIn, distinct = true)
       .select(keyFn(col("shingle")).as("k"), col("shingle"))
       .groupBy(col("k"), col("shingle")).agg(count(lit(1)).as("dfs"))
       .groupBy(col("k")).agg(sum(col("dfs")).as("df"),
@@ -373,7 +358,7 @@ object DedupOps {
       return containmentKeyed(sp, docsIn, probeK, identity)
     }
     val dfCool = dfTab.filter(col("df") <= ShingleDfCap)
-    val st = shinglesSetFrom(sp, docsIn)
+    val st = shinglesFrom(sp, docsIn, distinct = true)
       .select(col("doc_id"), keyFn(col("shingle")).as("k"))
     val enriched = st.join(
       dfCool.select(col("k"), col("df"), col("shingle")), "k")
@@ -462,15 +447,11 @@ object DedupOps {
 
   /** Near-duplicate CLUSTERING: assign every document the minimum
     * doc_id of its near-dup connected component, where edges are the
-    * exact n-gram Jaccard pairs (≥ 0.5). Iterative min-label
-    * propagation as DataFrame joins — the standard distributed
-    * connected-components shape: one shuffle join + aggregate per
-    * round, rounds bounded by the component diameter (near-dup
-    * clusters are shallow; capped + convergence-checked). At 100 TB
-    * the per-round `count()` is a cheap job over the label table.
-    * DuckDB-oracled via a recursive CTE. */
+    * exact n-gram Jaccard pairs (≥ 0.5), solved by the star rounds of
+    * [[clusterFromStar]]. Registered as both `dedup_cluster` and
+    * `dedup_cluster_star`. DuckDB-oracled via a recursive CTE. */
   def cluster(sp: SparkSession, dir: String): DataFrame =
-    clusterFrom(sp, dir, ngramJaccard(sp, dir).select(col("doc_a"), col("doc_b")))
+    clusterFromStar(sp, dir, ngramJaccard(sp, dir).select(col("doc_a"), col("doc_b")))
 
   /** [[cluster]] with the edge set coming from MinHash-LSH instead of
     * the exact inverted-index Jaccard — the 100 TB edge source: LSH
@@ -481,106 +462,29 @@ object DedupOps {
     * and QualityGates scores label agreement per round; ScaleBench
     * carries the 10× timing row. */
   def clusterLsh(sp: SparkSession, dir: String): DataFrame =
-    clusterFrom(sp, dir, minhashLsh(sp, dir).select(col("doc_a"), col("doc_b")))
+    clusterFromStar(sp, dir, minhashLsh(sp, dir).select(col("doc_a"), col("doc_b")))
 
-  /** Connected components over an arbitrary near-dup edge set. */
-  def clusterFrom(sp: SparkSession, dir: String, pairs: DataFrame): DataFrame = {
-    // symmetrize via explode, NOT union-with-swap: a union references
-    // the pairs plan twice, so the first materialization of the edges
-    // would execute the (expensive — LSH) edge pipeline twice.
-    // EAGER localCheckpoint, not cache: a cache leaves the edge
-    // pipeline's full logical plan in every round's lineage, and
-    // Catalyst re-ANALYZES that tree on every action (cache
-    // substitution happens after analysis) — measured 3-4 s/round of
-    // pure planning at sf0.1 on a 512-row edge list. Checkpointing
-    // truncates the plan to a leaf; same move clusterFromStar makes.
-    val edges = pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true)
-    // propagate only over EDGE-TOUCHED vertices: an isolated document's
-    // label never changes and never influences a neighbor, so carrying
-    // the whole corpus through every round (the pre-round-11 shape)
-    // multiplied each round's join + aggregate by corpus/|V(edges)| —
-    // at 100 TB the near-dup vertex set is a small fraction of the
-    // lake. Isolated docs get their self-label in ONE final left join,
-    // the same tail [[clusterFromStar]] always had.
-    // seeded with min(self, neighbors) — exactly what round 1 of the
-    // propagation loop below computes from self-labels, so starting
-    // here saves one full join+aggregate round (round 13; components
-    // here converge in 2-3 rounds, so that is a 30-50% round cut)
-    var pinned = edges.groupBy(col("src").as("doc_id"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("doc_id"),
-        least(col("doc_id"), col("mn")).as("canonical_id"))
-      .cache()
-    var labels = pinned
-    val MaxRounds = 64 // diameter bound; convergence usually in 2-3
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < MaxRounds) {
-      rounds += 1
-      val viaNbr = edges.join(labels, edges("dst") === labels("doc_id"))
-        .select(col("src").as("doc_id"), col("canonical_id"))
-      // the round's OLD label rides the union as a marked column, so
-      // the convergence check is a filter over the cached aggregate —
-      // the pre-round-13 form re-joined next against labels every
-      // round just to recover the value this aggregate already saw.
-      // Every group has an own-row (viaNbr's sources are exactly the
-      // label keys — edges are symmetrized), so `old` is never null.
-      val next = labels.select(col("doc_id"), col("canonical_id"),
-          lit(true).as("own"))
-        .union(viaNbr.select(col("doc_id"), col("canonical_id"),
-          lit(false).as("own")))
-        .groupBy(col("doc_id"))
-        .agg(min(col("canonical_id")).as("canonical_id"),
-          min(when(col("own"), col("canonical_id"))).as("old"))
-        .cache()
-      // min-propagation only ever decreases a label
-      val changed = next.filter(col("canonical_id") < col("old")).count()
-      pinned.unpersist()
-      pinned = next
-      labels = next.select(col("doc_id"), col("canonical_id"))
-      converged = changed == 0
-    }
-    // fail loudly rather than return partial labels: a component with
-    // diameter > MaxRounds would silently diverge from the exact
-    // closure (and the oracle)
-    require(converged,
-      s"connected-components did not converge in $MaxRounds rounds — " +
-        "a near-dup component has pathological diameter")
-    Engine.table(sp, dir, "documents")
-      .select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("canonical_id"), col("doc_id")).as("canonical_id"))
-  }
-
-  /** [[cluster]] solved by alternating LARGE-STAR / SMALL-STAR edge
-    * rewiring (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) instead of min-label propagation. Same output,
-    * different scale envelope: label propagation needs O(diameter)
-    * rounds — fine for the squat components near-dup graphs normally
-    * produce (2-3 rounds), but a pathological chain (serially-edited
-    * doc lineages, crawl mirror-of-mirror chains) makes diameter grow
-    * with corpus size and every round is a full shuffle. Star rounds
-    * REWIRE the graph toward its component-min star and converge in
-    * O(log n) rounds on ANY topology:
+  /** Connected components of a near-dup edge set (doc_a, doc_b) by
+    * alternating LARGE-STAR / SMALL-STAR edge rewiring (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    * every document of `dir`'s corpus gets the minimum doc_id of its
+    * component. Min-label propagation needs O(diameter) rounds, and a
+    * pathological chain (serially-edited doc lineages, crawl
+    * mirror-of-mirror chains) makes the diameter grow with the corpus;
+    * star rounds REWIRE the graph toward its component-min star and
+    * converge in O(log n) rounds on ANY topology:
     *  - large-star(u): attach every neighbor v > u to
     *    m(u) = min(Γ(u) ∪ u) — tall trees flatten;
     *  - small-star(u): attach u and its neighbors v < u to their
     *    common min — local stars canonicalize.
-    * Both preserve connectivity; the fixed point is a star per
-    * component (every edge (root, v)), from which labels read off as
-    * least(u, min neighbor). DedupSimilaritySpec pins label equality
-    * with [[clusterFrom]] on the real edge set AND convergence in
-    * ≤ 2·log₂ rounds on a chain graph that label propagation's
-    * 64-round bound would reject outright. */
-  def clusterStar(sp: SparkSession, dir: String): DataFrame =
-    clusterFromStar(sp, dir, ngramJaccard(sp, dir).select(col("doc_a"), col("doc_b")))
-
+    * Both preserve connectivity. The loop stops at the first STAR
+    * FOREST ([[isStarForest]]): that is exactly the rounds' fixed
+    * point, and a star forest maps to itself, so the loop ends on the
+    * edges a set-equality check would stop on, one confirming round
+    * sooner. Every edge is then (component root, member) and labels
+    * read off as least(u, min neighbor). DedupSimilaritySpec pins the
+    * labels against a union-find closure of the collected real edge
+    * set, and convergence in ≤ 2·log₂ rounds on a 200-node chain. */
   def clusterFromStar(sp: SparkSession, dir: String, pairs: DataFrame): DataFrame = {
     def sym(e: DataFrame): DataFrame = e
       .select(explode(array(
@@ -588,59 +492,40 @@ object DedupOps {
         struct(col("hi").as("u"), col("lo").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
 
-    // each round's output is EAGERLY local-checkpointed: the rewiring
-    // plan references its input several times and iterating to log-n
-    // depth would otherwise grow the lineage exponentially (on a real
-    // cluster this is a reliable checkpoint; locally the truncated
-    // plan + cached blocks achieve the same)
+    // canonical (lo < hi) edges; repeats are harmless, as no round's
+    // min moves and each round ends in a distinct. Each round's edges
+    // are LAZILY local-checkpointed, so the next round plans from a
+    // leaf, and materialize in that round's star-forest test, the
+    // loop's one action per round.
     var edges = pairs
       .select(least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .distinct().localCheckpoint(true)
-    // edge count threaded through the loop (round 13): each round's
-    // convergence check used to re-count the PREVIOUS round's edge set
-    // — a job whose answer was already in hand as last round's
-    // next.count(). One count on the checkpointed seed, then one per
-    // round instead of two.
-    var edgeCount = edges.count()
     val MaxRounds = 32 // ≥ 2·log₂ of any feasible component size
     var rounds = 0
     var converged = false
     while (!converged && rounds < MaxRounds) {
       rounds += 1
-      // large-star: (v, m(u)) for v ∈ Γ(u), v > u — emitted edge is
-      // always (m ≤ u < v), canonical by construction
-      val s = sym(edges)
-      val mins = s.groupBy(col("u")).agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      val ls = s.join(mins, "u")
+      // large-star: (m(u), v) for every neighbor v > u, where
+      // m(u) = min(Γ(u) ∪ u) — canonical, as m ≤ u < v
+      val ls = sym(edges)
+        .withColumn("m", least(col("u"), min(col("v")).over(Window.partitionBy(col("u")))))
         .filter(col("v") > col("u"))
-        .select(col("m").as("lo"), col("v").as("hi"))
-        .filter(col("lo") =!= col("hi"))
-        .distinct()
-      // small-star: for each u, (v, m) for its smaller neighbors v
-      // plus (u, m) where m = min of the smaller neighborhood
-      val below = sym(ls).filter(col("v") < col("u"))
-      val mins2 = below.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = below.join(mins2, "u")
+      // small-star: each `hi` v of ls, with m2 = the min of its `lo`s,
+      // gets (m2, v) and (m2, lo) for each of its `lo`s
+      edges = ls
+        .withColumn("m2", min(col("m")).over(Window.partitionBy(col("v"))))
         .select(explode(array(
-          struct(col("m").as("lo"), col("v").as("hi")),
-          struct(col("m").as("lo"), col("u").as("hi")))).as("e"))
+          struct(col("m2").as("lo"), col("m").as("hi")),
+          struct(col("m2").as("lo"), col("v").as("hi")))).as("e"))
         .select(col("e.lo").as("lo"), col("e.hi").as("hi"))
         .filter(col("lo") =!= col("hi"))
-        .distinct().localCheckpoint(true)
-      // fixed point: the canonical edge set stopped changing (set
-      // equality via count + one-sided except — both shrink-phase
-      // cheap, and the usual exit is after ~log rounds)
-      val nextCount = next.count()
-      converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
-      edges = next
-      edgeCount = nextCount
+        .distinct().localCheckpoint(false)
+      converged = isStarForest(edges)
     }
     require(converged,
       s"star connected-components did not converge in $MaxRounds rounds")
-    // at the fixed point every edge is (component root, member):
+    // in a star forest every edge is (component root, member):
     // label = least(self, min neighbor); edge-free docs label as self
     val lab = sym(edges).groupBy(col("u").as("doc_id"))
       .agg(min(col("v")).as("mv"))
@@ -651,6 +536,20 @@ object DedupOps {
       .select(col("doc_id"),
         coalesce(col("lab"), col("doc_id")).as("canonical_id"))
   }
+
+  /** Whether canonical (lo < hi) edges form a STAR FOREST: no vertex
+    * is both a `lo` and a `hi`, and every `hi` has exactly one `lo`.
+    * One aggregate action: per vertex, how often it is each end. */
+  private def isStarForest(edges: DataFrame): Boolean =
+    edges
+      .select(explode(array(
+        struct(col("lo").as("v"), lit(1L).as("as_lo"), lit(0L).as("as_hi")),
+        struct(col("hi").as("v"), lit(0L).as("as_lo"), lit(1L).as("as_hi")))).as("e"))
+      .groupBy(col("e.v"))
+      .agg(sum(col("e.as_lo")).as("as_lo"), sum(col("e.as_hi")).as("as_hi"))
+      .agg(count(when(col("as_hi") > 1 ||
+        (col("as_hi") === 1 && col("as_lo") > 0), 1)).as("bad"))
+      .head().getLong(0) == 0
 
   /** Per-source duplication report — the audit a dedup run ships with:
     * how many documents of each ingest source are non-canonical
@@ -692,7 +591,8 @@ object DedupOps {
   }
 
   /** Shared CTE prefix: the near-dup graph + connected components via
-    * recursive min-label closure (mirrors the iterative Spark op). */
+    * recursive min-label closure (the same component-min labels the
+    * star rounds of [[clusterFromStar]] reach). */
   private val ccCtePrefix: String = """
     WITH RECURSIVE words AS (
       SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -789,7 +689,7 @@ object DedupOps {
     * only for CANDIDATE docs — [[lshVerified]] runs its distinct below
     * the semi-join, where the stream is candidate-bounded. */
   private def lshShingles(sp: SparkSession, dir: String): DataFrame =
-    shinglesRaw(sp, dir)
+    shinglesFrom(sp, Engine.table(sp, dir, "documents"), distinct = false)
       .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
 
   /** One (band, bh) row per LSH band of each signature; every column
@@ -1165,7 +1065,7 @@ object DedupOps {
     "dedup_incremental" -> (minhashLshIncremental _),
     "dedup_simhash" -> (simhashPairs _),
     "dedup_cluster" -> (cluster _),
-    "dedup_cluster_star" -> (clusterStar _),
+    "dedup_cluster_star" -> (cluster _),
     "dedup_report" -> (dedupReport _),
     "dedup_cluster_lsh" -> (clusterLsh _),
     "dedup_cluster_keep_best" -> (clusterKeepBest _))

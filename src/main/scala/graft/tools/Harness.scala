@@ -53,6 +53,13 @@ object Harness {
 
   def loadAvg: Double = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
+  /** Where a runner writes a committed record: `path` itself only in a
+    * deliberate BENCH_COMMIT=1 run (the one recorded after agreeing
+    * idle runs), `path.new` otherwise, so no other run dirties the
+    * committed file. */
+  def recordPath(path: String): String =
+    if (sys.env.get("BENCH_COMMIT").contains("1")) path else s"$path.new"
+
   /** Block until the host is near-idle or the wait budget is spent;
     * returns the seconds waited. */
   def awaitIdle(tag: String): Double = {

@@ -57,8 +57,8 @@ object ScaleBench {
     // (WindowGroupLimit pre-shuffle) and SCD2 (change-bounded output)
     "search_tfidf_topk", "text_collocations", "events_session_paths",
     "events_cdc_compact", "events_scd2",
-    // round 8 (cont.): star-rewired CC (the O(log n)-round alternative
-    // to propagation — must track dedup_cluster's growth), the two
+    // round 8 (cont.): star-rewired CC (now the same engine as
+    // dedup_cluster — must track its growth), the two
     // embedding-matrix profiles (explode + partial-agg: time ∝ rows,
     // state ∝ Dim²), distribution-aggregated percent_rank calibration,
     // user streaks (distinct-day aggregate before any window), and the

@@ -301,21 +301,49 @@ class DedupSimilaritySpec extends AnyFunSuite {
     labels.foreach { case (d, c) => assert(c <= d) }
   }
 
-  test("star CC equals label-propagation CC on the real near-dup graph") {
-    val viaProp = DedupOps.cluster(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaStar = DedupOps.clusterStar(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar == viaProp, {
-      val bad = viaProp.collect { case (k, v) if viaStar.get(k) != Some(v) =>
-        s"$k: star=${viaStar.get(k)} prop=$v" }
-      s"label divergence (${bad.size}): ${bad.take(5).mkString("; ")}"
-    })
+  /** Component-min labels of `docs` under `edges`, by union-find in
+    * plain Scala: linking the larger root under the smaller keeps every
+    * root its set's minimum. */
+  private def unionFindLabels(docs: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = parent.get(x) match {
+      case Some(p) if p != x => val r = find(p); parent(x) = r; r
+      case _ => x
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    docs.map(d => d -> find(d)).toMap
+  }
+
+  test("star CC equals the union-find closure of the real near-dup graph") {
+    import spark.implicits._
+    val docs = Engine.table(spark, sf, "documents").select("doc_id")
+      .collect().map(_.getLong(0)).toSeq
+    val real = DedupOps.ngramJaccard(spark, sf).select("doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(real.nonEmpty, "the near-dup graph is empty: nothing to compare")
+    // and a seeded random graph over the same ids: components of every
+    // size and shape, not only the planted near-dup clusters
+    val rnd = new scala.util.Random(17)
+    val random = Seq.fill(300)((docs(rnd.nextInt(docs.size)), docs(rnd.nextInt(docs.size))))
+    for ((name, edges, viaStar) <- Seq(
+        ("real", real, DedupOps.cluster(spark, sf)),
+        ("random", random, DedupOps.clusterFromStar(spark, sf, random.toDF("doc_a", "doc_b"))))) {
+      val got = viaStar.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = unionFindLabels(docs, edges)
+      assert(got == want, {
+        val bad = want.collect { case (k, v) if !got.get(k).contains(v) =>
+          s"$k: star=${got.get(k)} union-find=$v" }
+        s"$name graph: label divergence (${bad.size}): ${bad.take(5).mkString("; ")}"
+      })
+    }
   }
 
   test("star CC converges logarithmically on a chain label propagation cannot finish") {
     import spark.implicits._
-    // a 200-node path: diameter 199 — far past clusterFrom's 64-round
+    // a 200-node path: diameter 199 — far past a 64-round label-
     // propagation bound, but ≤ 2·log₂(200) ≈ 16 star rounds
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val labels = DedupOps.clusterFromStar(spark, sf, chain).collect()

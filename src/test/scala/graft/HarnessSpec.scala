@@ -65,6 +65,19 @@ class HarnessSpec extends AnyFunSuite {
     }
   }
 
+  test("load_warning flags a first group above the idle gate, whatever the core count") {
+    val table = Seq(
+      // load at the first timed group -> load_warning
+      0.5 -> false,
+      1.64 -> false, // released by the gate; above a 4-core cores/5 of 0.8
+      Harness.IdleLoadMax -> false,
+      2.01 -> true,
+      4.1 -> true)
+    table.foreach { case (load, want) =>
+      assert(Bench.loadWarning(load) == want, s"load $load")
+    }
+  }
+
   private def forkChild(mode: String, names: Seq[String]) =
     Harness.fork("graft.HarnessSpecChild", 0, names, Seq(mode))
 

@@ -16,6 +16,8 @@ object TestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+  /** The sf0.01 corpus beside [[sf]]. */
+  val sf01: String = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
 }
 
 /** Every declared query must run end-to-end on sf0.001 and the

@@ -70,4 +70,14 @@ class WorkCountSpec extends AnyFunSuite {
     assert(jobs(streaming.StreamOps.readEvents(fresh, sf)) == 0,
       "the events stream's ts-type probe ran a job")
   }
+
+  test("building the near-dup clustering at sf0.01 runs at most 20 jobs") {
+    // the star rounds' one action per round, no confirming round once
+    // the edges form a star forest; a fresh cache so no earlier build's
+    // pinned tables are reused
+    spark.sharedState.cacheManager.clearCache()
+    val n = jobs(operators.DedupOps.cluster(spark, sf01))
+    println(s"[workcount] cluster build at sf0.01 ran $n jobs")
+    assert(n <= 20, s"building the clustering ran $n jobs")
+  }
 }
