@@ -176,7 +176,7 @@ final class EngineSession(val spark: SparkSession,
     // — IF NOT EXISTS skips —, table must exist, method ∈ {DEFAULT,
     // array, rmi}, exactly one plain-attribute key), then recorded for
     // lazy bulkload: the first SELECT with a usable range/point
-    // predicate on the key builds a storage.Indexes.DistributedIndex
+    // predicate on the key builds a storage.Indexes.BuiltIndex
     // and scans through it (ref IndexScan physical operator matching
     // Filter(Scan), WasmOperator.hpp:397).
     case CreateIndex(_, ifNot, name, table, method, keys) =>
@@ -434,7 +434,8 @@ final class EngineSession(val spark: SparkSession,
     invalidateIndexes(t.name)
   }
 
-  /** Drop an index's built structure, releasing what it persisted. */
+  /** Drop an index's built structure, releasing what it persisted (a
+    * driver-resident index persisted nothing). */
   private def release(d: EngineSession.IndexDef): Unit = {
     d.built.foreach(_.unpersist())
     d.built = None
@@ -454,10 +455,11 @@ final class EngineSession(val spark: SparkSession,
     * Filter(Scan) → IndexScan, WasmOperator.hpp:397-406): for a
     * single-table SELECT whose WHERE has top-level conjuncts
     * `key cmp int-literal` on an indexed integer key, serve the scan
-    * through the index (driver-side fence pruning + partition-local
-    * bounded search). The full WHERE still runs on top, so routing
-    * can never change results — exactly the reference's residual
-    * filter behavior. Returns the table (lowercase) and replacement
+    * through the index (driver-side fence pruning + leaf-local bounded
+    * search; on a dialect table the matching rows come back as a
+    * `LocalRelation`, so no job runs). The full WHERE still runs on
+    * top, so routing can never change results — exactly the
+    * reference's residual filter behavior. Returns the table (lowercase) and replacement
     * source, or None when no index applies. */
   private def indexRoute(s: SelectStmt): Option[(String, DataFrame)] = s.from match {
     case Seq(FromTable(tname, alias)) =>
@@ -542,14 +544,12 @@ final class EngineSession(val spark: SparkSession,
                 val m =
                   if (entry.method == "rmi") graft.storage.Indexes.RmiMethod
                   else graft.storage.Indexes.ArrayMethod
-                // a dialect table's rows are on the driver already: sort
+                // a dialect table's rows are on the driver already: index
                 // them there instead of range-shuffling the DataFrame
                 val b = t.rows match {
                   case Some(rows) =>
-                    val schema = sparkSchema(t.fields)
-                    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-                    graft.storage.Indexes.buildLocal(spark, schema,
-                      rows.map(r => toRow(r).asInstanceOf[Row]), entry.keyCol, m)
+                    graft.storage.Indexes.buildLocal(spark, sparkSchema(t.fields),
+                      rows, entry.keyCol, m)
                   case None => graft.storage.Indexes.build(t.df, entry.keyCol, m)
                 }
                 entry.built = Some(b)
@@ -762,7 +762,7 @@ object EngineSession {
       table: String,
       keyCol: String,
       method: String,
-      var built: Option[graft.storage.Indexes.DistributedIndex] = None)
+      var built: Option[graft.storage.Indexes.BuiltIndex] = None)
 
   /** Session preloaded with the driver testdata as external tables in
     * database `testdata`. */

@@ -94,7 +94,10 @@ object ResultPrinter {
   *  - `--dryrun`         parse/plan but don't execute the query
   *                       (ref mutable.cpp:187 — only result
   *                       materialization is skipped; DDL/INSERT run)
-  *  - `-t`/`--times`     report exact timings (ms, ref mutable.cpp:82)
+  *  - `-t`/`--times`     report exact timings (ms, ref mutable.cpp:82):
+  *                       one line per phase — `Parse`, `Sema and plan`,
+  *                       `Optimize and physical plan`, `Execute and
+  *                       render` — then the `Execute query` total
   *  - `-q`/`--quiet`     work in quiet mode (suppress command
   *                       confirmations, ref shell.cpp:55)
   *  - `--echo`           echo statements before running them */
@@ -160,19 +163,33 @@ object Shell {
         val sql = buf.toString; buf.clear()
         if (o.echo) out.println(sql.trim)
         val t0 = System.nanoTime
+        def phase[A](name: String)(body: => A): A = {
+          val t = System.nanoTime
+          val r = body
+          if (o.times) out.println(f"$name: ${(System.nanoTime - t) / 1e6}%.3f")
+          r
+        }
         try {
-          if (o.ast)
-            graft.parser.Parser.parse(sql).foreach(st =>
-              out.println(graft.parser.AstPrinter.stmt(st)))
-          session.execute(sql) match {
-            case graft.QueryResult(df) =>
-              if (o.plan) out.println(df.queryExecution.optimizedPlan.treeString)
-              if (o.physplan) out.println(df.queryExecution.executedPlan.treeString)
-              // dryrun (ref mutable.cpp:187): the plan above is still
-              // computed; only result materialization is skipped
-              if (!o.dryrun) ResultPrinter.print(df, out)
-            case graft.CommandOk(msg) => if (!o.quiet) err.println(msg)
+          val stmts = phase("Parse")(graft.parser.Parser.parse(sql))
+          if (o.ast) stmts.foreach(st => out.println(graft.parser.AstPrinter.stmt(st)))
+          // a command does its work here; only a query has later phases
+          val query = phase("Sema and plan") {
+            if (stmts.isEmpty) throw new graft.analyzer.SemaError("empty input")
+            stmts.map(session.executeStmt).last
+          } match {
+            case graft.QueryResult(df) => Some(df)
+            case graft.CommandOk(msg) => if (!o.quiet) err.println(msg); None
           }
+          phase("Optimize and physical plan")(query.foreach { df =>
+            val qe = df.queryExecution
+            qe.executedPlan // forces the optimized plan too
+            if (o.plan) out.println(qe.optimizedPlan.treeString)
+            if (o.physplan) out.println(qe.executedPlan.treeString)
+          })
+          // dryrun (ref mutable.cpp:187): the plan above is still
+          // computed; only result materialization is skipped
+          phase("Execute and render")(query.foreach(df =>
+            if (!o.dryrun) ResultPrinter.print(df, out)))
           if (o.times)
             out.println(f"Execute query: ${(System.nanoTime - t0) / 1e6}%.3f")
         } catch {

@@ -1,7 +1,8 @@
 package graft.storage
 
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -25,20 +26,25 @@ import org.apache.spark.storage.StorageLevel
   *    the reference's two-layer scheme (spline root → regression
   *    leaves, prediction corrected by exponential search).
   *
-  * A range lookup prunes partitions on the driver via the fences
-  * (`PartitionPruningRDD` — non-matching partitions are never
-  * scheduled), then each surviving partition answers with
-  * lowerBound/upperBound over its local array.
+  * A range lookup prunes leaves on the driver via the fences, then
+  * each surviving leaf answers with lowerBound/upperBound over its
+  * local array.
   *
-  * Two bulkloads build the same leaves and fences:
+  * The leaves and fences take one of two storage forms:
   *  - `build`, over a DataFrame (an externally registered parquet
-  *    table): one range exchange + sort, the same work as writing a
-  *    sorted table; the leaves are persisted and the fences collected.
-  *  - `buildLocal`, over rows already on the driver (a dialect table
-  *    filled by INSERT / IMPORT): sort on the driver, cut into
-  *    `defaultParallelism` leaves, compute the fences locally, and hand
-  *    the leaves over as an un-persisted `parallelize` RDD — no job,
-  *    shuffle or persist.
+  *    table), gives a `DistributedIndex`: one range exchange + sort, the
+  *    same work as writing a sorted table; the leaves are persisted as
+  *    one partition each and the fences collected. A lookup is one job
+  *    over the fence-pruned partitions (`PartitionPruningRDD` —
+  *    non-matching partitions are never scheduled).
+  *  - `buildLocal`, over a dialect table's own `InternalRow`s (filled by
+  *    INSERT / IMPORT and already on the driver), gives a `LocalIndex`:
+  *    sort on the driver, cut into `defaultParallelism` leaves and
+  *    compute the fences locally. A lookup slices the leaves on the
+  *    driver and hands the matching rows to the planner as one
+  *    `LocalRelation`, which Catalyst's `ConvertToLocalRelation` folds
+  *    the residual WHERE and the projection into; collecting it runs no
+  *    job, and neither does building or releasing the index.
   */
 object Indexes {
 
@@ -96,11 +102,12 @@ object Indexes {
     }
   }
 
-  /** One cached leaf: the partition's rows sorted by key, the sorted
-    * key array, and (RMI only) the two-layer model hierarchy. */
-  final class IndexPartition(
+  /** One leaf: its rows sorted by key (`Row`s in a distributed index,
+    * the table's `InternalRow`s in a local one), the sorted key array,
+    * and (RMI only) the two-layer model hierarchy. */
+  final class IndexPartition[R](
       val keys: Array[Long],
-      val rows: Array[Row],
+      val rows: Array[R],
       val models: Array[LinearModel]) extends Serializable {
 
     def n: Int = keys.length
@@ -167,14 +174,14 @@ object Indexes {
     }
 
     /** All rows with key in [lo, hi], by positional slice. */
-    def slice(lo: Long, hi: Long, useModels: Boolean): Iterator[Row] = {
+    def slice(lo: Long, hi: Long, useModels: Boolean): Iterator[R] = {
       if (n == 0) return Iterator.empty
       val from = if (useModels && models != null) lowerBoundRmi(lo) else lowerBound(lo)
       var i = from
       // keys are sorted: emit until the first key > hi
-      new Iterator[Row] {
+      new Iterator[R] {
         def hasNext: Boolean = i < n && keys(i) <= hi
-        def next(): Row = { val r = rows(i); i += 1; r }
+        def next(): R = { val r = rows(i); i += 1; r }
       }
     }
   }
@@ -225,23 +232,35 @@ object Indexes {
     * proves a query was routed through an index, not a table scan). */
   val rangeScans = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** A built index: cached leaf partitions + driver fences. */
-  final class DistributedIndex(
-      @transient val spark: SparkSession,
-      val schema: org.apache.spark.sql.types.StructType,
-      val leafRdd: RDD[IndexPartition],
-      val fences: Array[Fence],
-      val method: IndexMethod) extends Serializable {
+  /** A built index: sorted leaves + one driver fence per leaf. */
+  sealed trait BuiltIndex {
+    def fences: Array[Fence]
 
     def numEntries: Long = fences.map(_.count).sum
 
-    /** Partition ids whose fence intersects [lo, hi] — the pruning
-      * decision the driver makes before any task is scheduled. */
+    /** Leaf ids whose fence intersects [lo, hi] — the pruning decision
+      * the driver makes before any leaf is searched. */
     def matchingPartitions(lo: Long, hi: Long): Set[Int] =
       fences.filter(f => f.max >= lo && f.min <= hi).map(_.pid).toSet
 
-    /** Range scan: fence-pruned partitions, partition-local
+    /** Rows with key in [lo, hi]: fence-pruned leaves, leaf-local
       * lower/upper bound, zero shuffles. */
+    def rangeScan(lo: Long, hi: Long): DataFrame
+
+    def pointLookup(key: Long): DataFrame = rangeScan(key, key)
+
+    /** Release what the index persisted. */
+    def unpersist(): Unit
+  }
+
+  /** Leaves as persisted partitions of one RDD; a lookup is one job. */
+  final class DistributedIndex(
+      @transient val spark: SparkSession,
+      val schema: StructType,
+      val leafRdd: RDD[IndexPartition[Row]],
+      val fences: Array[Fence],
+      val method: IndexMethod) extends BuiltIndex with Serializable {
+
     def rangeScan(lo: Long, hi: Long): DataFrame = {
       Indexes.rangeScans.incrementAndGet()
       val wanted = matchingPartitions(lo, hi)
@@ -251,9 +270,28 @@ object Indexes {
       spark.createDataFrame(rowRdd, schema)
     }
 
-    def pointLookup(key: Long): DataFrame = rangeScan(key, key)
-
     def unpersist(): Unit = { leafRdd.unpersist(); () }
+  }
+
+  /** Leaves held on the driver; a lookup is a `LocalRelation` of the
+    * matching rows and runs no job. Leaf i has fence pid i. */
+  final class LocalIndex(
+      spark: SparkSession,
+      schema: StructType,
+      leaves: Array[IndexPartition[InternalRow]],
+      val fences: Array[Fence],
+      method: IndexMethod) extends BuiltIndex {
+
+    def rangeScan(lo: Long, hi: Long): DataFrame = {
+      Indexes.rangeScans.incrementAndGet()
+      val useModels = method == RmiMethod
+      val rows = matchingPartitions(lo, hi).toSeq.sorted
+        .flatMap(p => leaves(p).slice(lo, hi, useModels))
+      GraftShim.localRelation(spark, schema, rows)
+    }
+
+    /** Nothing is persisted: the leaves go with the last reference. */
+    def unpersist(): Unit = ()
   }
 
   /** Key-to-Long mapping shared by build and lookup sides: integers
@@ -276,8 +314,8 @@ object Indexes {
   /** One leaf over key-sorted rows: the key array and, for the RMI
     * method, the models trained over it. Both bulkloads build their
     * leaves with it. */
-  private def leaf(keys: Array[Long], rows: Array[Row],
-      method: IndexMethod): IndexPartition =
+  private def leaf[R](keys: Array[Long], rows: Array[R],
+      method: IndexMethod): IndexPartition[R] =
     new IndexPartition(keys, rows, if (method == RmiMethod) trainRmi(keys) else null)
 
   /** Bulkload (ref ArrayIndex::bulkload): one range exchange + local
@@ -306,26 +344,26 @@ object Indexes {
     new DistributedIndex(spark, df.schema, leafRdd, fences, method)
   }
 
-  /** Bulkload over rows held on the driver: sort (key, row) on the
-    * driver, skipping NULL keys as `build` does, cut the sorted rows
-    * into `defaultParallelism` non-empty leaves and compute their
-    * fences locally. Leaf i is partition i of an un-persisted
-    * `parallelize` RDD, so building runs no job, shuffle or persist. */
-  def buildLocal(spark: SparkSession, schema: StructType, rows: Seq[Row],
-      keyCol: String, method: IndexMethod = ArrayMethod): DistributedIndex = {
+  /** Bulkload over a dialect table's rows, held on the driver: sort
+    * (key, row) there, skipping NULL keys as `build` does, cut the
+    * sorted rows into `defaultParallelism` non-empty leaves and compute
+    * their fences locally. Runs no job, shuffle or persist. Keys are
+    * integers or DATE, read in the same Long space as `keyToLong`. */
+  def buildLocal(spark: SparkSession, schema: StructType, rows: Seq[InternalRow],
+      keyCol: String, method: IndexMethod = ArrayMethod): LocalIndex = {
     val keyIdx = schema.fieldIndex(keyCol)
+    val keyType = schema(keyIdx).dataType
     val sorted = rows.iterator.filter(!_.isNullAt(keyIdx))
-      .map(r => (keyToLong(r.get(keyIdx)), r)).toArray.sortBy(_._1)
+      .map(r => (keyToLong(r.get(keyIdx, keyType)), r)).toArray.sortBy(_._1)
     val n = sorted.length
     val parts = math.min(spark.sparkContext.defaultParallelism, n)
-    val leaves = (0 until parts).map { p =>
+    val leaves = Array.tabulate(parts) { p =>
       val part = sorted.slice((p.toLong * n / parts).toInt, ((p + 1).toLong * n / parts).toInt)
       leaf(part.map(_._1), part.map(_._2), method)
     }
     val fences = leaves.zipWithIndex.map { case (l, pid) =>
       Fence(pid, l.minKey, l.maxKey, l.n.toLong)
-    }.toArray
-    val leafRdd = spark.sparkContext.parallelize(leaves, math.max(1, parts))
-    new DistributedIndex(spark, schema, leafRdd, fences, method)
+    }
+    new LocalIndex(spark, schema, leaves, fences, method)
   }
 }

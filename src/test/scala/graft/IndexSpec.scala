@@ -2,6 +2,11 @@ package graft
 
 import graft.storage.Indexes
 import graft.storage.Indexes._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sorted-array + RMI index research surface (ref
@@ -14,6 +19,13 @@ class IndexSpec extends AnyFunSuite {
   import TestSession._
 
   private lazy val orders = Engine.table(spark, sf, "orders")
+
+  /** The optimized plan reads driver rows only: a LocalRelation, no RDD. */
+  private def assertLocal(df: DataFrame, what: String): Unit = {
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.collectFirst { case l: LocalRelation => l }.nonEmpty &&
+      plan.collectFirst { case r: LogicalRDD => r }.isEmpty, s"$what planned as:\n$plan")
+  }
 
   test("ArrayIndex range scan matches a filter scan") {
     val idx = Indexes.build(orders, "o_orderkey", ArrayMethod, 8)
@@ -77,6 +89,78 @@ class IndexSpec extends AnyFunSuite {
     }
     // absent keys between clusters land on the successor
     assert(part.lowerBoundRmi(50000L) == part.lowerBound(50000L))
+  }
+
+  test("a local index slices Long.MinValue/Long.MaxValue keys exactly on the driver") {
+    val schema = StructType(Seq(StructField("k", LongType), StructField("v", IntegerType)))
+    val keys = Seq(Long.MinValue, Long.MinValue, -1L, 0L, 7L, 7L, 7L,
+      Long.MaxValue - 1, Long.MaxValue) ++ (1000L until 1100L)
+    val rows = keys.zipWithIndex.map { case (k, i) => InternalRow(k, i) } :+ InternalRow(null, -1)
+    for (m <- Seq(ArrayMethod, RmiMethod)) {
+      val idx = Indexes.buildLocal(spark, schema, rows, "k", m)
+      assert(idx.fences.length > 1, "want several leaves")
+      assert(idx.numEntries == keys.size, "a NULL key was indexed")
+      for ((lo, hi) <- Seq((Long.MinValue, Long.MaxValue), (Long.MinValue, Long.MinValue),
+          (Long.MaxValue, Long.MaxValue), (Long.MinValue + 1, -1L), (7L, 7L), (8L, 999L),
+          (0L, Long.MaxValue - 1), (1050L, 1050L))) {
+        val df = idx.rangeScan(lo, hi)
+        assertLocal(df, s"$m [$lo, $hi]")
+        val got = df.collect().toSeq.map(r => (r.getLong(0), r.getInt(1))).sorted
+        val want = keys.zipWithIndex.filter { case (k, _) => k >= lo && k <= hi }.sorted
+        assert(got == want, s"$m [$lo, $hi]")
+      }
+    }
+  }
+
+  test("a driver-resident index returns the unindexed filter scan's rows, with no RDD") {
+    val sc = spark.sparkContext
+    for (method <- Seq("array", "rmi")) {
+      val s = new EngineSession(spark)
+      s.execute(s"""CREATE DATABASE ixp_$method; USE ixp_$method;
+        CREATE TABLE t (k INT(8), d DATE, v INT(4));
+        CREATE TABLE e (k INT(8), v INT(4));
+        INSERT INTO t VALUES (5, d'2024-03-15', 1), (5, d'2024-03-15', 2),
+          (NULL, NULL, 3), (9223372036854775807, d'2024-01-05', 4),
+          (-9223372036854775807, d'-0100-06-01', 5), (0, NULL, 6),
+          (12, d'2024-07-01', 7), (5, d'2024-07-01', 8);""")
+      s.execute("INSERT INTO t VALUES " + (100 until 300).map(i =>
+        f"(${i / 3 * 2}, d'2023-${1 + i % 12}%02d-${1 + i % 28}%02d', $i)").mkString(", ") + ";")
+      val plain = s.fork() // forked before any index: every read is a filter scan
+      s.execute(s"""CREATE INDEX tk ON t USING $method (k);
+        CREATE INDEX td ON t USING $method (d);
+        CREATE INDEX ek ON e USING $method (k);""")
+      def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.mkString(",")).sorted
+      /** The routed read on `on` against the same read on `unindexed`. */
+      def check(sql: String, on: EngineSession = s, unindexed: EngineSession = plain): Unit = {
+        val r0 = Indexes.rangeScans.get()
+        val want = rows(unindexed.query(sql))
+        assert(Indexes.rangeScans.get() == r0, s"unindexed read routed: $sql")
+        val df = on.query(sql)
+        assert(Indexes.rangeScans.get() == r0 + 1, s"not one lookup: $sql")
+        assertLocal(df, sql)
+        assert(rows(df) == want, s"$method: $sql")
+      }
+      val pins = sc.getPersistentRDDs.keySet.toSet
+      Seq("SELECT k, v FROM t WHERE k = 5;",
+        "SELECT k, v FROM t WHERE k = 7;",
+        "SELECT k, v FROM t WHERE k >= 120 AND k < 180;",
+        "SELECT k, v FROM t WHERE k > 9223372036854775806;",
+        "SELECT k, v FROM t WHERE k < 1;",
+        "SELECT k, v FROM t WHERE k >= 0;",
+        "SELECT v FROM t WHERE 12 >= k AND v > 1;",
+        "SELECT d, v FROM t WHERE d = d'2024-03-15';",
+        "SELECT d, v FROM t WHERE d < d'2024-02-01';",
+        "SELECT d, v FROM t WHERE d >= d'2023-06-01' AND d <= d'2023-08-31';",
+        "SELECT k FROM e WHERE k >= 0;").foreach(check(_))
+      // a fork shares the built indexes; its write invalidates only its own
+      val f = s.fork()
+      val fPlain = plain.fork()
+      Seq(f, fPlain).foreach(_.execute("INSERT INTO t VALUES (5, d'2024-03-15', 999);"))
+      Seq("SELECT v FROM t WHERE k = 5;", "SELECT v FROM t WHERE d = d'2024-03-15';")
+        .foreach { q => check(q, f, fPlain); check(q) }
+      s.execute("DROP INDEX tk; DROP TABLE t;")
+      assert(sc.getPersistentRDDs.keySet.toSet == pins, "a driver-resident index persisted an RDD")
+    }
   }
 
   test("dialect CREATE INDEX routes range queries through the index") {

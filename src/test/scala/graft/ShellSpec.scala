@@ -66,8 +66,11 @@ class ShellSpec extends AnyFunSuite {
   test("--times reports a timing line per statement") {
     val (code, out, _) = shell(Array("--times"), Seq("SELECT x FROM pts;"))
     assert(code == 0)
-    assert(out.linesIterator.count(_.startsWith("Execute query:")) ==
-      setup.length + 1)
+    for (line <- Seq("Parse:", "Sema and plan:", "Optimize and physical plan:",
+        "Execute and render:", "Execute query:"))
+      assert(out.linesIterator.count(_.startsWith(line)) == setup.length + 1,
+        s"want one '$line' per statement in:\n$out")
+    assert(out.linesIterator.contains("30"), s"no result rows in:\n$out")
   }
 
   test("--quiet suppresses command confirmations, keeps results") {
