@@ -2,12 +2,19 @@
 """Local pre-validation harness mimicking the driver's correctness gate.
 
 Usage: python3 scripts/check_correctness.py <sfDir> <verifyOutDir>
+       python3 scripts/check_correctness.py --twin <otherVerifyDir> <verifyOutDir>
 
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the
 same sfDir parquet tables, sorts columns by name + rows by value, and
 compares exactly. This is a builder-side dev tool only — the engine
 itself never depends on Python/DuckDB.
+
+--twin compares two graft.Verify output directories instead (say, a
+build before and after a refactor): every query either directory holds
+is canonicalized the same way and printed as identical or different,
+approximate ops included. Exit status 1 if any query differs or is
+missing from one side.
 """
 import glob
 import json
@@ -56,6 +63,19 @@ def first_non_bmp_doc(con):
         r"WHERE regexp_matches(text, '[^\x{0}-\x{FFFF}]')").fetchone()[0]
 
 
+def frame_diff(a: pd.DataFrame, b: pd.DataFrame):
+    """None if the canonical frames are equal, else what differs."""
+    if list(a.columns) != list(b.columns):
+        return f"columns {list(a.columns)} != {list(b.columns)}"
+    if len(a) != len(b):
+        return f"rows {len(a)} != {len(b)}"
+    for i in range(len(a)):
+        for c in a.columns:
+            if not values_equal(a[c].iloc[i], b[c].iloc[i]):
+                return f"row {i} col {c}: {a[c].iloc[i]!r} != {b[c].iloc[i]!r}"
+    return None
+
+
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
@@ -85,26 +105,9 @@ def main(sf_dir: str, out_dir: str) -> int:
             print(f"✗ {name}: oracle SQL failed: {e}")
             n_fail += 1
             continue
-        if list(got.columns) != list(want.columns):
-            print(f"✗ {name}: columns {list(got.columns)} != {list(want.columns)}")
-            n_fail += 1
-            continue
-        if len(got) != len(want):
-            print(f"✗ {name}: rows {len(got)} != {len(want)}")
-            n_fail += 1
-            continue
-        mismatch = None
-        for i in range(len(got)):
-            for c in got.columns:
-                a, b = got[c].iloc[i], want[c].iloc[i]
-                if not values_equal(a, b):
-                    mismatch = (i, c, a, b)
-                    break
-            if mismatch:
-                break
-        if mismatch:
-            i, c, a, b = mismatch
-            print(f"✗ {name}: row {i} col {c}: spark={a!r} duckdb={b!r}")
+        why = frame_diff(got, want)
+        if why is not None:
+            print(f"✗ {name}: {why} (spark != duckdb)")
             n_fail += 1
         else:
             print(f"✓ {name}: {len(got)} rows")
@@ -114,5 +117,31 @@ def main(sf_dir: str, out_dir: str) -> int:
     return 1 if n_fail else 0
 
 
+def twin(other_dir: str, out_dir: str) -> int:
+    def queries(d):
+        return {os.path.basename(p) for p in glob.glob(os.path.join(d, "*"))
+                if os.path.isdir(p)}
+    mine, theirs = queries(out_dir), queries(other_dir)
+    n_same = n_diff = 0
+    for name in sorted(mine | theirs):
+        if name not in mine or name not in theirs:
+            side = out_dir if name not in mine else other_dir
+            print(f"✗ {name}: different (missing from {side})")
+            n_diff += 1
+            continue
+        why = frame_diff(canon(pd.read_parquet(os.path.join(out_dir, name))),
+                         canon(pd.read_parquet(os.path.join(other_dir, name))))
+        if why is None:
+            print(f"✓ {name}: identical")
+            n_same += 1
+        else:
+            print(f"✗ {name}: different ({why})")
+            n_diff += 1
+    print(f"\n{n_same} identical, {n_diff} different")
+    return 1 if n_diff else 0
+
+
 if __name__ == "__main__":
+    if sys.argv[1] == "--twin":
+        sys.exit(twin(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))

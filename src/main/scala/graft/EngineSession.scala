@@ -41,7 +41,10 @@ final class EngineSession(val spark: SparkSession,
 
   /** Cheap copy-on-write clone: new catalog maps, shared (immutable)
     * row stores and DataFrames. Used by the golden-corpus harness to
-    * give every spec file a fresh catalog over the same fixture tables. */
+    * give every spec file a fresh catalog over the same fixture tables.
+    * Index definitions are copied without their built structure: a
+    * write in the fork releases what the fork built, never the
+    * parent's persisted leaves, and the fork rebuilds on first use. */
   def fork(): EngineSession = {
     val s = new EngineSession(spark, refParity)
     databases.foreach { case (dbName, tables) =>
@@ -51,7 +54,7 @@ final class EngineSession(val spark: SparkSession,
     }
     dbIndexes.foreach { case (dbName, idx) =>
       val copy = mutable.Map[String, EngineSession.IndexDef]()
-      idx.foreach { case (n, d) => copy(n) = d.copy() }
+      idx.foreach { case (n, d) => copy(n) = d.copy(built = None) }
       s.dbIndexes(dbName) = copy
     }
     s.currentDb = currentDb

@@ -1,22 +1,29 @@
 package graft.operators
 
 import graft.Engine
+import graft.functions.Hashing
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over the `embeddings` table (Array[Float], 64-d):
+/** Similarity search, clustering and embedding statistics over the
+  * `embeddings` table (Array[Float], 64-d).
   *
-  *  - brute-force cosine top-k (the correctness baseline; oracled
-  *    against DuckDB's list_inner_product)
-  *  - LSH-bucketed ANN (random-hyperplane signatures → bucket join →
-  *    exact re-rank within bucket) — the 100 TB path: candidate
-  *    generation is bucket-local, the all-pairs product never forms
-  *  - near-duplicate detection by cosine ≥ 0.95
+  * Every kNN/ANN op has one shape: a candidate generator emits
+  * (query_id, vec_id) pairs, each candidate gets its exact cosine, and
+  * one top-k tail ranks the candidates per query. The generators are
+  * the op's own: the whole corpus (brute force, the oracled baseline),
+  * LSH buckets with multi-probe, IVF inverted lists, a PQ-ADC or
+  * Hamming shortlist, or per-shard HNSW graphs. The shared path from
+  * candidates to the answer is [[exactRerank]] (join the vectors back
+  * and score), [[neighbors]] (rank by cosine DESC, vec_id ASC, keep
+  * 5, round to 4 dp) and [[topK]] under both. The quantizers share one
+  * nearest-centroid kernel, [[nearest]].
   *
-  * All dot products run in double precision, accumulated left-to-right
-  * with `aggregate` over `zip_with` — the same order DuckDB uses, so
-  * cosines are bit-identical and threshold/top-k decisions agree.
+  * All dot products run in double precision through the codegen'd
+  * [[graft.functions.DotProduct]], accumulated in ascending index order
+  * as DuckDB's list_inner_product does, so cosines are bit-identical
+  * and threshold and top-k decisions agree with the oracles.
   */
 object SimilarityOps {
 
@@ -37,6 +44,62 @@ object SimilarityOps {
   private def dot(a: Column, b: Column): Column =
     graft.functions.functions.dot_product(a, b)
 
+  /** Exact cosine of the query vector (qv, qn) against the candidate
+    * vector (v, nrm). */
+  private def exactCosine: Column =
+    dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
+
+  /** Query side of the kNN/ANN ops: vec_id < 10 as (query_id, qv, qn). */
+  private def queryVecs(all: DataFrame): DataFrame =
+    all.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+
+  /** Per-query top-k: rows ranked per `query_id` by `score`, then by
+    * `tie`, keeping rank ≤ k in column `rankCol` (row_number + filter,
+    * which Catalyst plans as a WindowGroupLimit). */
+  private def topK(df: DataFrame, score: Column, k: Int,
+      rankCol: String = "rank", tie: String = "vec_id"): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(score, col(tie))))
+      .filter(col(rankCol) <= k)
+
+  /** The kNN/ANN answer: the 5 best `cosine`s per query, ties to the
+    * lower vec_id, as (query_id, neighbor_id, rank, `carry`...,
+    * cosine_r) with cosine_r = round(cosine, 4). A query with fewer
+    * than 5 candidates gets a shorter list. */
+  private[graft] def neighbors(scored: DataFrame, carry: Column*): DataFrame =
+    topK(scored, col("cosine").desc, 5)
+      .select(Seq(col("query_id"), col("vec_id").as("neighbor_id"), col("rank")) ++
+        carry :+ round(col("cosine"), 4).as("cosine_r"): _*)
+
+  /** Exact cosine re-rank of a (query_id, vec_id) candidate set → the
+    * [[neighbors]] answer. Raw vectors are fetched only for the
+    * candidates; `q` is the (query_id, qv, qn) query side. */
+  private def exactRerank(sp: SparkSession, dir: String, q: DataFrame,
+      cands: DataFrame): DataFrame =
+    neighbors(cands
+      .join(vecs(sp, dir), "vec_id")
+      .join(q.select(col("query_id"), col("qv"), col("qn")), "query_id")
+      .withColumn("cosine", exactCosine))
+
+  /** Nearest center to p(off until off+len) by squared Euclidean
+    * distance against each c(0 until len): (index, distance). Sums run
+    * in ascending i and the compare is strict `<`, so ties go to the
+    * lowest index. */
+  private def nearest(p: Array[Double], cs: Array[Array[Double]],
+      off: Int, len: Int): (Int, Double) = {
+    var best = 0; var bestD = Double.MaxValue
+    var j = 0
+    while (j < cs.length) {
+      val c = cs(j)
+      var d = 0.0; var i = 0
+      while (i < len) { val t = p(off + i) - c(i); d += t * t; i += 1 }
+      if (d < bestD) { bestD = d; best = j }
+      j += 1
+    }
+    (best, bestD)
+  }
+
   /** Deterministic driver-side Lloyd on a bounded sample: seeds = the
     * first min(k, |sample|) points (callers pass the sample in id-hash
     * order), fixed sweep count, empty clusters keep their previous
@@ -54,14 +117,7 @@ object SimilarityOps {
       val sums = Array.fill(c.length)(new Array[Double](dim))
       val cnts = new Array[Long](c.length)
       for (p <- sample) {
-        var best = 0; var bestD = Double.MaxValue
-        var j = 0
-        while (j < c.length) {
-          var d = 0.0; var i = 0
-          while (i < dim) { val t = p(i) - c(j)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
+        val (best, _) = nearest(p, c, 0, dim)
         var i = 0
         while (i < dim) { sums(best)(i) += p(i); i += 1 }
         cnts(best) += 1
@@ -85,16 +141,10 @@ object SimilarityOps {
     * driver-side. */
   private def kppSeeds(sample: Array[Array[Double]], k: Int,
       seedKey: Long = 0L): Array[Array[Double]] = {
-    def splitmix64(x0: Long): Long = {
-      var x = x0 + 0x9e3779b97f4a7c15L
-      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-      x ^ (x >>> 31)
-    }
     val n = sample.length
     val kk = math.min(k, n)
     val seeds = new Array[Array[Double]](kk)
-    seeds(0) = sample(((splitmix64(seedKey) >>> 1) % n).toInt)
+    seeds(0) = sample(((Hashing.mix(seedKey + Hashing.Golden) >>> 1) % n).toInt)
     val minD = Array.fill(n)(Double.MaxValue)
     var s = 1
     while (s < kk) {
@@ -110,7 +160,7 @@ object SimilarityOps {
         i += 1
       }
       // u in [0,1) from (restart, draw) — deterministic
-      val u = (splitmix64(seedKey * 1000003L + s) >>> 11).toDouble /
+      val u = (Hashing.mix(seedKey * 1000003L + s + Hashing.Golden) >>> 11).toDouble /
         (1L << 53).toDouble
       val target = u * total
       var acc = 0.0; var pick = n - 1
@@ -148,17 +198,8 @@ object SimilarityOps {
     * Deterministic tie-break on neighbor id. */
   def knnBruteForce(sp: SparkSession, dir: String): DataFrame = {
     val all = vecs(sp, dir)
-    val q = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = q.join(all, col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(col("cosine"), 4).as("cosine_r"))
+    neighbors(queryVecs(all).join(all, col("vec_id") =!= col("query_id"))
+      .withColumn("cosine", exactCosine))
   }
 
   val knnBruteForceOracle: String = """
@@ -270,35 +311,19 @@ object SimilarityOps {
     val all = buckets(vecs(sp, dir))
     val probes = array(
       col("sig") +: (0 until BitsPerTable).map(b => col("sig").bitwiseXOR(lit(1L << b))): _*)
-    val q = buckets(vecs(sp, dir).filter(col("vec_id") < 10))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("tbl").as("qtbl"), explode(probes).as("qsig"))
+    val probe = buckets(vecs(sp, dir).filter(col("vec_id") < 10))
+      .select(col("vec_id").as("query_id"), col("tbl").as("qtbl"),
+        explode(probes).as("qsig"))
     // dedup on the id pair only (see embeddingNearDupLsh), then join
     // the vectors back for exact scoring
-    val cands = q.join(all.select(col("vec_id"), col("tbl"), col("sig")),
+    val cands = probe.join(all.select(col("vec_id"), col("tbl"), col("sig")),
         col("tbl") === col("qtbl") && col("sig") === col("qsig") &&
           col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct() // a pair can collide in several tables/probes
-    val qv = vecs(sp, dir)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val cv = vecs(sp, dir)
-    val scored = cands.join(qv, "query_id").join(cv, "vec_id")
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(col("cosine"), 4).as("cosine_r"))
+    exactRerank(sp, dir, queryVecs(vecs(sp, dir)), cands)
   }
 
-  /** IVF ANN: k-means coarse quantizer (MLlib, seeded) partitions the
-    * corpus into inverted lists; queries probe the nProbe nearest
-    * centroids and re-rank exactly inside those lists. The 100 TB
-    * path: train on a sample, assignment is one map pass, probing
-    * touches nProbe/k of the data. No SQL oracle (quantizer is
-    * iterative); recall vs brute force asserted in the spec. */
   /** IVF routing shared by [[annIvf]] and [[annIvfPq]]: trains the
     * coarse quantizer and routes queries to their nProbe nearest
     * lists. Returns (corpus list assignment, query probes, corpus
@@ -362,17 +387,9 @@ object SimilarityOps {
       .mapPartitions { it =>
         val cs = bc.value
         it.map { case (id, vSeq, nrm) =>
-          val v = vSeq.toArray
           val inv = 1.0 / nrm
-          var best = 0; var bestD = Double.MaxValue
-          var j = 0
-          while (j < cs.length) {
-            var d = 0.0; var i = 0
-            while (i < v.length) { val t = v(i) * inv - cs(j)(i); d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = j }
-            j += 1
-          }
-          (id, vSeq, nrm, best)
+          val u = vSeq.toArray.map(_ * inv)
+          (id, vSeq, nrm, nearest(u, cs, 0, u.length)._1)
         }
       }
       .toDF("vec_id", "v", "nrm", "list_id")
@@ -380,30 +397,27 @@ object SimilarityOps {
     val centroids = sp.createDataFrame(
       cents.zipWithIndex.toSeq.map { case (c, i) => (i, c) })
       .toDF("cid", "centroid")
-    val q = vecs(sp, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val qProbes = q.crossJoin(broadcast(centroids))
+    val cdist = queryVecs(vecs(sp, dir)).crossJoin(broadcast(centroids))
       .withColumn("cdist", aggregate(
         zip_with(col("qv"), col("centroid"), (x, y) => (x / col("qn") - y) * (x / col("qn") - y)),
         lit(0.0), (acc, x) => acc + x))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cdist"), col("cid"))))
-      .filter(col("crank") <= nProbe)
+    val qProbes = topK(cdist, col("cdist"), nProbe, "crank", "cid")
       .select(col("query_id"), col("qv"), col("qn"), col("cid"))
     (assigned, qProbes, nVecs)
   }
 
+  /** IVF ANN: a spherical k-means coarse quantizer (driver-side Lloyd
+    * on a hash sample, see [[ivfRouting]]) partitions the corpus into
+    * inverted lists; queries probe the nProbe nearest centroids and
+    * re-rank exactly inside those lists. The 100 TB path: train on a
+    * sample, assignment is one map pass, probing touches nProbe/k of
+    * the data. No SQL oracle (quantizer is iterative); recall vs brute
+    * force asserted in the spec. */
   def annIvf(sp: SparkSession, dir: String): DataFrame = {
     val (assigned, qProbes, _) = ivfRouting(sp, dir)
-    val scored = qProbes.join(assigned,
+    neighbors(qProbes.join(assigned,
         col("list_id") === col("cid") && col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(col("cosine"), 4).as("cosine_r"))
+      .withColumn("cosine", exactCosine))
   }
 
   /** Embedding near-duplicate pairs: cosine ≥ τ, id-ordered.
@@ -663,17 +677,7 @@ object SimilarityOps {
           var err = 0.0
           var m = 0
           while (m < PqM) {
-            val book = bks(m)
-            var best = 0; var bestD = Double.MaxValue
-            var c = 0
-            while (c < book.length) {
-              var d = 0.0; var i = 0
-              while (i < PqSub) {
-                val t = v(m * PqSub + i) - book(c)(i); d += t * t; i += 1
-              }
-              if (d < bestD) { bestD = d; best = c }
-              c += 1
-            }
+            val (best, bestD) = nearest(v, bks(m), m * PqSub, PqSub)
             codes(m) = best
             err += bestD
             m += 1
@@ -692,17 +696,6 @@ object SimilarityOps {
       .select(col("vec_id"), concat_ws(":", col("codes")).as("codes"),
         col("recon_err2"))
 
-  /** ANN by asymmetric distance computation over PQ codes, then exact
-    * re-rank of the ADC shortlist — the standard production PQ shape.
-    * The query stays in float space; each corpus vector is scored as
-    * the sum of M table lookups (query-subvector · centroid dots):
-    * one broadcast of the (query × subspace × centroid) dot table, one
-    * map-side join over the exploded codes, one partial-aggregating
-    * sum — touching 8 codes per vector instead of 64 floats. The
-    * top-[[pqShortlist]] by ADC then fetch their raw vectors for exact
-    * cosine (bounded: shortlist × queries rows); compose with the IVF
-    * lists for the sublinear path. Approximate → recall-spec'd, no SQL
-    * oracle. */
   val PqShortlistMin = 50
 
   /** ADC shortlist sized ∝ corpus (fraction below, floor 50): a FIXED
@@ -741,52 +734,41 @@ object SimilarityOps {
         col("qdot"), col("cn2"))
   }
 
-  /** ADC-score PQ codes against a broadcast query table, shortlist the
-    * top `shortlistN` per query by approximate cosine. `enc` is the
+  /** ADC shortlist: the top `shortlistN` candidates per query by
+    * approximate cosine. `lookups` is the caller's join of the
     * exploded (vec_id, m, code) relation — pre-filtered to a candidate
-    * pool by the caller when a coarse index is in play. */
-  private def adcShortlist(enc: DataFrame, qTable: DataFrame,
-      shortlistN: Int): DataFrame = {
-    val adcScored = enc.join(broadcast(qTable),
-        enc("m") === qTable("m") && enc("code") === qTable("k") &&
-          col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"), col("qn"))
-      .agg(sum(col("qdot")).as("adc"), sum(col("cn2")).as("rnorm2"))
-      .withColumn("adc_cosine", col("adc") / (col("qn") * sqrt(col("rnorm2"))))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cosine").desc, col("vec_id"))
-    adcScored
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= shortlistN)
+    * pool when a coarse index is in play — with the [[pqQTable]] rows
+    * of the matching (m, k); each candidate's ADC score is the sum of
+    * its M lookups. */
+  private def adcShortlist(lookups: DataFrame, shortlistN: Int): DataFrame =
+    topK(lookups.groupBy(col("query_id"), col("vec_id"), col("qn"))
+        .agg(sum(col("qdot")).as("adc"), sum(col("cn2")).as("rnorm2"))
+        .withColumn("adc_cosine", col("adc") / (col("qn") * sqrt(col("rnorm2")))),
+      col("adc_cosine").desc, shortlistN, "arank")
       .select(col("query_id"), col("vec_id"))
-  }
 
-  /** Exact cosine re-rank of a (query_id, vec_id) shortlist → top-5.
-    * Raw vectors are fetched only for shortlist members (bounded:
-    * shortlist × queries rows). */
-  private def exactRerank(sp: SparkSession, dir: String, q: DataFrame,
-      shortlist: DataFrame): DataFrame = {
-    val rescored = shortlist
-      .join(vecs(sp, dir), "vec_id")
-      .join(q.select(col("query_id"), col("qv"), col("qn")), "query_id")
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(col("cosine"), 4).as("cosine_r"))
-  }
-
+  /** ANN by asymmetric distance computation over PQ codes, then exact
+    * re-rank of the ADC shortlist — the standard production PQ shape.
+    * The query stays in float space; each corpus vector is scored as
+    * the sum of M table lookups (query-subvector · centroid dots):
+    * one broadcast of the (query × subspace × centroid) dot table, one
+    * map-side join over the exploded codes, one partial-aggregating
+    * sum — touching 8 codes per vector instead of 64 floats. The
+    * top-[[pqShortlist]] by ADC then fetch their raw vectors for exact
+    * cosine (bounded: shortlist × queries rows); compose with the IVF
+    * lists for the sublinear path. Approximate → recall-spec'd, no SQL
+    * oracle. */
   def annPq(sp: SparkSession, dir: String): DataFrame = {
     val books = pqCodebooks(sp, dir)
     val shortlistN = pqShortlist(sp, vecs(sp, dir).count())
     val enc = pqEncodeRaw(sp, dir, books)
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
-    val q = vecs(sp, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val shortlist = adcShortlist(enc, pqQTable(q, books), shortlistN)
-    exactRerank(sp, dir, q, shortlist)
+    val q = queryVecs(vecs(sp, dir))
+    val qTable = pqQTable(q, books)
+    val lookups = enc.join(broadcast(qTable),
+      enc("m") === qTable("m") && enc("code") === qTable("k") &&
+        col("vec_id") =!= col("query_id"))
+    exactRerank(sp, dir, q, adcShortlist(lookups, shortlistN))
   }
 
   /** IVF + PQ-ADC composed — the FAISS-IVFPQ production shape for
@@ -823,7 +805,7 @@ object SimilarityOps {
     // (measured 10× recall 0.80 → 0.82, against the pool's 0.84 cap)
     val shortlistN = 2 * pqShortlist(sp, nVecs)
     // candidate pool: corpus vectors in the probed lists only — the
-    // self-pair is dropped in adcShortlist's join condition
+    // self-pair is dropped in the lookup join below
     val cand = qProbes.select(col("query_id").as("cand_query_id"), col("cid"))
       .join(assigned.select(col("vec_id"), col("list_id")),
         col("list_id") === col("cid"))
@@ -837,24 +819,14 @@ object SimilarityOps {
       .select(col("cand_query_id"), col("vec_id"), col("m"), col("code"))
     val q = qProbes.select(col("query_id"), col("qv"), col("qn")).distinct()
     val qTable = pqQTable(q, books)
-    val qTableB = broadcast(qTable)
-    // same shape as [[adcShortlist]] with the pool's query pinned into
-    // the lookup join: per (query, vec) candidate, M code lookups
-    val adcScored = candEnc.join(qTableB,
-        candEnc("cand_query_id") === qTable("query_id") &&
-          candEnc("m") === qTable("m") &&
-          candEnc("code") === qTable("k") &&
-          candEnc("vec_id") =!= qTable("query_id"))
-      .groupBy(col("query_id"), col("vec_id"), col("qn"))
-      .agg(sum(col("qdot")).as("adc"), sum(col("cn2")).as("rnorm2"))
-      .withColumn("adc_cosine", col("adc") / (col("qn") * sqrt(col("rnorm2"))))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cosine").desc, col("vec_id"))
-    val shortlist = adcScored
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= shortlistN)
-      .select(col("query_id"), col("vec_id"))
-    exactRerank(sp, dir, q, shortlist)
+    // the pool's query is pinned into the lookup join: per (query, vec)
+    // candidate, M code lookups
+    val lookups = candEnc.join(broadcast(qTable),
+      candEnc("cand_query_id") === qTable("query_id") &&
+        candEnc("m") === qTable("m") &&
+        candEnc("code") === qTable("k") &&
+        candEnc("vec_id") =!= qTable("query_id"))
+    exactRerank(sp, dir, q, adcShortlist(lookups, shortlistN))
   }
 
   // ---------------------------------------------------------------
@@ -989,13 +961,7 @@ object SimilarityOps {
         }
       }
       .toDF("query_id", "vec_id", "cosine")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    local.filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(col("cosine"), 4).as("cosine_r"))
+    neighbors(local.filter(col("vec_id") =!= col("query_id")))
   }
 
   /** Deterministic per-node HNSW levels: the paper's
@@ -1004,15 +970,10 @@ object SimilarityOps {
     * independent of shard composition. Capped at 15 (a level above
     * log_M of any realistic shard). */
   private def levelOf(ids: Array[Long], m: Int): Array[Int] = {
-    def splitmix64(x0: Long): Long = {
-      var x = x0 + 0x9e3779b97f4a7c15L
-      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-      x ^ (x >>> 31)
-    }
     val mL = 1.0 / math.log(m)
     ids.map { id =>
-      val u = ((splitmix64(id) >>> 11).toDouble + 1.0) / (1L << 53).toDouble
+      val u = ((Hashing.mix(id + Hashing.Golden) >>> 11).toDouble + 1.0) /
+        (1L << 53).toDouble
       math.min(15, (-math.log(u) * mL).toInt)
     }
   }
@@ -1132,18 +1093,13 @@ object SimilarityOps {
     val all = Engine.table(sp, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm", sqrt(aggregate(
-        transform(col("v"), x => x * x), lit(0.0), (acc, x) => acc + x)))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = all.filter(col("vec_id") < KnnClassifyQueries)
       .select(col("vec_id").as("query_id"), col("label").as("true_label"),
         col("v").as("qv"), col("nrm").as("qn"))
     val scored = q.join(all, col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val votes = scored
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 10)
+      .withColumn("cosine", exactCosine)
+    val votes = topK(scored, col("cosine").desc, 10)
       .groupBy(col("query_id"), col("true_label"), col("label"))
       .agg(count(lit(1)).as("votes"))
     val wVote = Window.partitionBy(col("query_id"))
@@ -1179,19 +1135,6 @@ object SimilarityOps {
             ORDER BY votes DESC, nlabel) AS vrank FROM votes)
     WHERE vrank = 1"""
 
-  /** Per-label embedding centroid, emitted long-form (label, dim_idx,
-    * n, centroid) so every output cell is a scalar. Sums run through
-    * DECIMAL(18,6) so partial-aggregation order cannot perturb the
-    * result (same trick as the relational oracle sums) — the plan is
-    * a map-side partial sum + one 640-key shuffle, the canonical
-    * scalable aggregation shape.
-    *
-    * The mean is rounded to 6 dp in EXACT DECIMAL arithmetic (decimal
-    * division, then a decimal HALF_UP cast): `round(s_double / n, 6)`
-    * is not portable — when the true quotient sits exactly on a 5e-7
-    * tie the engines perceive the double's binary expansion
-    * differently and round apart (hit at sf0.1). The oracle emulates
-    * the same HALF_UP with integer arithmetic. */
   /** Per-DIMENSION corpus profile (n, min, max, mean, std): the
     * feature-scaling pass run before whitening/standardizing
     * embeddings or choosing PQ sub-space splits — a dead dimension
@@ -1381,10 +1324,8 @@ object SimilarityOps {
       .cache()
     val full = MatryoshkaDims.last
     val tops = MatryoshkaDims.map { d =>
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col(s"cos_$d").desc, col("vec_id"))
-      d -> scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5).select(col("query_id"), col("vec_id"))
+      d -> topK(scored, col(s"cos_$d").desc, 5, "rk")
+        .select(col("query_id"), col("vec_id"))
     }.toMap
     val exact = tops(full)
     // the recall denominator is the MEASURED size of the full-dim top
@@ -1522,20 +1463,11 @@ object SimilarityOps {
     val scored = broadcast(qsig).join(sigs, col("vec_id") =!= col("query_id"))
       .withColumn("hamming",
         expr("CAST(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) AS BIGINT)"))
-    val hw = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val short = scored.withColumn("hrank", row_number().over(hw))
-      .filter(col("hrank") <= shortlistN)
+    val short = topK(scored, col("hamming"), shortlistN, "hrank")
       .select(col("query_id"), col("qv"), col("qn"), col("vec_id"),
         col("hamming"))
-    val rw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    short.join(all, "vec_id")
-      .withColumn("cosine", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(rw))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), col("hamming"), round(col("cosine"), 4).as("cosine_r"))
+    neighbors(short.join(all, "vec_id").withColumn("cosine", exactCosine),
+      col("hamming"))
   }
 
   val annBinaryOracle: String = s"""
@@ -2004,14 +1936,7 @@ object SimilarityOps {
         var any = false
         it.foreach { vs =>
           val x = vs.toArray
-          var best = 0; var bestD = Double.MaxValue
-          var j = 0
-          while (j < kk) {
-            var s = 0.0; var i = 0
-            while (i < d) { val t0 = x(i) - c(j)(i); s += t0 * t0; i += 1 }
-            if (s < bestD) { bestD = s; best = j }
-            j += 1
-          }
+          val (best, bestD) = nearest(x, c, 0, d)
           var i = 0
           while (i < d) { acc(best * d + i) += Exact.q6dec(x(i)); i += 1 }
           acc(kk * d + best) += 1L
@@ -2060,15 +1985,7 @@ object SimilarityOps {
       .mapPartitions { it =>
         val c = bc.value
         it.map { case (id, vs) =>
-          val x = vs.toArray
-          var best = 0; var bestD = Double.MaxValue
-          var j = 0
-          while (j < c.length) {
-            var s = 0.0; var i = 0
-            while (i < d) { val t0 = x(i) - c(j)(i); s += t0 * t0; i += 1 }
-            if (s < bestD) { bestD = s; best = j }
-            j += 1
-          }
+          val (best, bestD) = nearest(vs.toArray, c, 0, d)
           (id, best.toLong, bestD)
         }
       }
@@ -2188,6 +2105,14 @@ object SimilarityOps {
   /** Bottom share of the corpus flagged by [[knnOutliers]]. */
   val KnnOutlierShare = 0.05
 
+  /** Floor mean of integer micro-units: ⌊sum/k⌋. Spark's `div` and
+    * Scala's `/` both truncate TOWARD ZERO, which differs from floor
+    * on negative sums (−5 div 2 = −2, ⌊−5/2⌋ = −3); mean cosines can
+    * be negative, so [[knnOutliers]] pins floor semantics explicitly.
+    * The double division is exact here: |sum| ≤ k·10⁴ ≪ 2⁵³. */
+  private[graft] def meanQ(sumQ: Column, k: Column): Column =
+    floor(sumQ.cast("double") / k.cast("double")).cast("long")
+
   /** kNN-DISTANCE OUTLIERS (Ramaswamy et al., SIGMOD'00 — the classic
     * unsupervised density signal): a vector whose k nearest neighbors
     * are all FAR is isolated — corrupt, garbled, or out-of-
@@ -2215,14 +2140,6 @@ object SimilarityOps {
     * the corpus. Vectors with no bucket collisions at all (k = 0) take
     * mean −1 and are always outliers. Gated on a bit-exact driver
     * recompute from the op's own edge list. */
-  /** Floor mean of integer micro-units: ⌊sum/k⌋. Spark's `div` and
-    * Scala's `/` both truncate TOWARD ZERO, which differs from floor
-    * on negative sums (−5 div 2 = −2, ⌊−5/2⌋ = −3); mean cosines can
-    * be negative, so [[knnOutliers]] pins floor semantics explicitly.
-    * The double division is exact here: |sum| ≤ k·10⁴ ≪ 2⁵³. */
-  private[graft] def meanQ(sumQ: Column, k: Column): Column =
-    floor(sumQ.cast("double") / k.cast("double")).cast("long")
-
   def knnOutliers(sp: SparkSession, dir: String): DataFrame = {
     val edges = sharedKnnEdges(sp, dir)
     val nodes = vecs(sp, dir).select(col("vec_id"))
@@ -2282,6 +2199,19 @@ object SimilarityOps {
       .select(col("cluster"), col("rk"), col("vec_id"), col("dist2_r"))
   }
 
+  /** Per-label embedding centroid, emitted long-form (label, dim_idx,
+    * n, centroid) so every output cell is a scalar. Sums run through
+    * DECIMAL(18,6) so partial-aggregation order cannot perturb the
+    * result (same trick as the relational oracle sums) — the plan is
+    * a map-side partial sum + one 640-key shuffle, the canonical
+    * scalable aggregation shape.
+    *
+    * The mean is rounded to 6 dp in EXACT DECIMAL arithmetic (decimal
+    * division, then a decimal HALF_UP cast): `round(s_double / n, 6)`
+    * is not portable — when the true quotient sits exactly on a 5e-7
+    * tie the engines perceive the double's binary expansion
+    * differently and round apart (hit at sf0.1). The oracle emulates
+    * the same HALF_UP with integer arithmetic. */
   def centroidPerLabel(sp: SparkSession, dir: String): DataFrame =
     Engine.table(sp, dir, "embeddings")
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim_idx", "x")))

@@ -18,12 +18,17 @@ import graft.{Engine, SparkEntry}
 object PlanDump {
   /** Strip the per-run tokens from a plan string: expression ids
     * (`doc_id#12L` → `doc_id#L`), object hashes (`Foo@1b2c3d` →
-    * `Foo@`), exchange ids (`plan_id=7` → `plan_id=`), and the RDD id
+    * `Foo@`), exchange ids (`plan_id=7` → `plan_id=`), the RDD id
     * and call-site line of a checkpointed scan (`MapPartitionsRDD[190]
     * at localCheckpoint at DedupOps.scala:730` → `MapPartitionsRDD[]
-    * at localCheckpoint at DedupOps.scala`). */
+    * at localCheckpoint at DedupOps.scala`), the JVM's name for a
+    * typed closure (`Ops$$$Lambda$4722/0x00007f0521331cb0@` →
+    * `Ops$$$Lambda@`) and the session-wide counter in a higher-order
+    * function's variable (`lambda x_7#` → `lambda x_#`). */
   def normalize(plan: String): String =
     plan.replaceAll("#\\d+", "#")
+      .replaceAll("\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$Lambda")
+      .replaceAll("lambda (\\w+?)_\\d+#", "lambda $1_#")
       .replaceAll("@[0-9a-f]+", "@")
       .replaceAll("plan_id=\\d+", "plan_id=")
       .replaceAll("RDD\\[\\d+\\]", "RDD[]")

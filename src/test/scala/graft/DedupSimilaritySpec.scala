@@ -214,6 +214,46 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(run() == ann, "HNSW output not deterministic across runs")
   }
 
+  test("LSH, IVF, PQ and IVF-PQ ANN emit identical rows across runs") {
+    // quantizer samples, seeds, shortlists and every tie-break are
+    // keyed on vec_id — a second run must emit the same rows, cosines
+    // included
+    Seq("lsh" -> (SimilarityOps.annLsh _), "ivf" -> (SimilarityOps.annIvf _),
+      "pq" -> (SimilarityOps.annPq _), "ivf_pq" -> (SimilarityOps.annIvfPq _)
+    ).foreach { case (name, op) =>
+      def run() = op(spark, sf).collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+      val first = run()
+      assert(first.nonEmpty, s"$name emitted no rows")
+      assert(run() == first, s"$name output not deterministic across runs")
+    }
+  }
+
+  test("the shared top-5 tail ranks cosine ties by vec_id, keeps short lists dense, rounds like Spark") {
+    import spark.implicits._
+    // query 1 has seven candidates; ids 8 and 3 carry the bit-equal
+    // cosine 0.7 at ranks 5 and 6, so only id 3 makes the cut. Query 2
+    // has two candidates and gets a 2-row list.
+    val tie = 0.7
+    val scored = Seq(
+      (1L, 20L, 0.91234567, 5L), (1L, 4L, 0.8, 6L), (1L, 5L, 0.75, 7L),
+      (1L, 6L, 0.72, 8L), (1L, 8L, tie, 9L), (1L, 3L, tie, 10L),
+      (1L, 7L, 0.1, 11L), (2L, 9L, -0.55555, 12L), (2L, 1L, 0.123456, 13L)
+    ).toDF("query_id", "vec_id", "cosine", "hamming")
+    val out = SimilarityOps.neighbors(scored, col("hamming"))
+    assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "rank", "hamming", "cosine_r"))
+    val rows = out.collect()
+    val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+      .sortBy(r => (r._1, r._3)).toSeq
+    assert(got == Seq((1L, 20L, 1, 5L), (1L, 4L, 2, 6L), (1L, 5L, 3, 7L),
+      (1L, 6L, 4, 8L), (1L, 3L, 5, 10L), (2L, 1L, 1, 13L), (2L, 9L, 2, 12L)))
+    val want = scored.select(col("query_id"), col("vec_id"),
+        round(col("cosine"), 4).as("want")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    rows.foreach { r =>
+      assert(r.getDouble(4) == want((r.getLong(0), r.getLong(1))), s"cosine_r of $r")
+    }
+  }
+
   test("int8 quantization grid invariants hold on every dimension") {
     val rows = SimilarityOps.quantizeInt8(spark, sf).collect()
     assert(rows.length == SimilarityOps.Dim)

@@ -152,7 +152,7 @@ class IndexSpec extends AnyFunSuite {
         "SELECT d, v FROM t WHERE d < d'2024-02-01';",
         "SELECT d, v FROM t WHERE d >= d'2023-06-01' AND d <= d'2023-08-31';",
         "SELECT k FROM e WHERE k >= 0;").foreach(check(_))
-      // a fork shares the built indexes; its write invalidates only its own
+      // a fork builds its own indexes; its write invalidates only those
       val f = s.fork()
       val fPlain = plain.fork()
       Seq(f, fPlain).foreach(_.execute("INSERT INTO t VALUES (5, d'2024-03-15', 999);"))
@@ -249,6 +249,33 @@ class IndexSpec extends AnyFunSuite {
     assert((pins -- before).nonEmpty, "index leaves were not persisted")
     s.execute("CREATE DATABASE ixother; USE ixother; DROP DATABASE ixleak;")
     assert((pins -- before).isEmpty, "DROP DATABASE left its index leaves persisted")
+  }
+
+  test("a fork's write to a parquet table leaves the parent's persisted index pinned") {
+    val sc = spark.sparkContext
+    def pins: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.mkString(",")).sorted
+    val s = new EngineSession(spark)
+    s.execute("CREATE DATABASE ixfork; USE ixfork;")
+    s.registerExternal("o", orders.select("o_orderkey", "o_custkey"))
+    val plain = s.fork() // forked before the index: every read is a filter scan
+    val before = pins
+    s.execute("CREATE INDEX ok ON o (o_orderkey);")
+    val sql = "SELECT o_orderkey, o_custkey FROM o WHERE o_orderkey <= 40;"
+    val parentRows = rows(s.query(sql)) // this lookup builds and pins the leaves
+    val built = pins
+    assert((built -- before).nonEmpty, "index leaves were not persisted")
+    val (f, fPlain) = (s.fork(), plain.fork())
+    Seq(f, fPlain).foreach(_.execute("INSERT INTO o VALUES (7, 999);"))
+    assert(pins == built, "the fork's INSERT unpersisted the parent's index")
+    val r0 = Indexes.rangeScans.get()
+    val got = rows(f.query(sql))
+    assert(Indexes.rangeScans.get() == r0 + 1, "the fork's read was not routed")
+    assert(got == rows(fPlain.query(sql)) && got.contains("7,999"))
+    assert(rows(s.query(sql)) == parentRows)
+    f.execute("DROP INDEX ok;")
+    s.execute("DROP INDEX ok;")
+    assert(pins == before, "a dropped index left its leaves persisted")
   }
 
   test("temporal-key index: epoch-milli mapping matches a filter scan") {
