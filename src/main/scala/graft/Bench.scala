@@ -135,28 +135,30 @@ object Bench {
   private def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** One cold run; -1 when the query fails. */
-  private def runOnce(spark: SparkSession, name: String): Double =
-    try Harness.coldRun(spark, name, sfDir)
+  /** One cold run; None when the query fails. */
+  private def runOnce(spark: SparkSession, name: String): Option[Harness.Timed] =
+    try Some(Harness.coldRun(spark, name, sfDir))
     catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      -1.0
+      None
     }
 
-  /** Warm up, then adaptively sample one query in the given session. */
-  private def measure(spark: SparkSession, name: String): Seq[Double] = {
+  /** Warm up, then adaptively sample one query in the given session;
+    * one run of wall -1 when every timed run failed. */
+  private def measure(spark: SparkSession, name: String): Seq[Harness.Timed] = {
     runOnce(spark, name) // untimed warm-up: codegen + parquet footers + JIT
-    val base = (1 to Reps).map(_ => runOnce(spark, name)).filter(_ >= 0)
-    val times =
+    val base = (1 to Reps).flatMap(_ => runOnce(spark, name))
+    val walls = base.map(_.wallS)
+    val runs =
       if (base.nonEmpty &&
-          (Harness.median(base) < SubSecond || base.max / base.min > SpreadGoal))
-        base ++ (1 to ExtraReps).map(_ => runOnce(spark, name)).filter(_ >= 0)
+          (Harness.median(walls) < SubSecond || walls.max / walls.min > SpreadGoal))
+        base ++ (1 to ExtraReps).flatMap(_ => runOnce(spark, name))
       else base
-    if (times.isEmpty) Seq(-1.0) else times
+    if (runs.isEmpty) Seq(Harness.Timed(-1.0, Harness.Codegen(0, 0))) else runs
   }
 
   private def row(spark: SparkSession, name: String) =
-    name -> measure(spark, name).map(t => f"$t%.4f").mkString(",")
+    name -> Harness.Timed.encode(measure(spark, name))
 
   def main(args: Array[String]): Unit = {
     Harness.childArgs(args.toSeq).foreach { c =>
@@ -183,7 +185,8 @@ object Bench {
       }
       g.map(row(spark, _))
     }
-    val results = sweep.rows.map { case (n, v) => n -> v.split(',').toSeq.map(_.toDouble) }
+    val timed = sweep.rows.map { case (n, v) => n -> Harness.Timed.decode(v) }
+    val results = timed.map { case (n, v) => n -> v.map(_.wallS) }
 
     def fmt(v: Double) = f"$v%.4f"
     def obj(f: Seq[Double] => Double) =
@@ -205,6 +208,10 @@ object Bench {
     val runs = results.map { case (k, v) =>
       "\"" + k + "\":[" + v.map(fmt).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    // per timed run, in the order of `runs`: the generated classes it
+    // compiled (codegen class-cache misses) and their compile time
+    val codegen = timed.map { case (k, v) => "\"" + k + "\":{" + Harness.Timed.json(v) + "}" }
+      .mkString("{", ",", "}")
     val total = results.map(r => Harness.median(r._2)).filter(_ >= 0).sum
     val totalMin = results.map(_._2.min).filter(_ >= 0).sum
     val driverMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
@@ -249,7 +256,7 @@ object Bench {
       s""""idle_gate":{"threshold":${fmt(Harness.IdleLoadMax)},"waited_s":${fmt(sweep.idleWaitedS)},""" +
       s""""load_at_first_group":${fmt(sweep.loadAtFirstGroup)}},"groups":$groupsJson,""" +
       s""""queries_contended":$qContJson,$notes,""" +
-      s""""group_size":$GroupSize,"sf":"$sfDir","queries_min":$qsMin,"reps":$reps,"runs":$runs}"""
+      s""""group_size":$GroupSize,"sf":"$sfDir","queries_min":$qsMin,"reps":$reps,"runs":$runs,"codegen":$codegen}"""
     // artifact discipline (round 12): a loaded-host re-run once
     // overwrote the committed idle-gated record
     val fullPath = Harness.recordPath("BENCH.json")

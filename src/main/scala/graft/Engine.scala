@@ -25,6 +25,13 @@ object Engine {
     * bounded (region=5, nation=25) regardless of scale factor. */
   val alwaysBroadcast: Set[String] = Set("region", "nation")
 
+  /** Entries of Spark's per-JVM cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100); see
+    * [[session]] for how it was sized and why every session builder
+    * sets it. No environment override: the value must be the same in
+    * every JVM that shares a measurement. */
+  val CodegenCacheEntries: Int = 4096
+
   def session(appName: String = "graft", master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -79,6 +86,43 @@ object Engine {
         sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
+      // CODEGEN CLASS CACHE. Spark compiles each whole-stage and
+      // expression class with Janino (about 11-13 ms a class) and keeps
+      // the compiled classes in one per-JVM cache, 100 entries by
+      // default. One benchmark curation cycle (seven operators) needs
+      // about 290, so the operators evicted each other: at sf0.01 a
+      // repeat run recompiled 13-55 classes per operator, 297 a cycle,
+      // about 3 s of compile in a 14-18 s sf0.1 cycle.
+      // Sizing (every registered query once per pass in one session,
+      // name order, an unbounded cache, 4 vCPU): a first pass at
+      // sf0.001 compiles 2,250 classes (29.5 s of compile, 118 s wall);
+      // a repeat pass 252, nearly all from the streaming queries, whose
+      // generated code differs per run and never hits; a first pass at
+      // sf0.01 adds 299 and at sf0.1 309 (the same stream churn plus
+      // about 50 scale-specific literals each). Two passes at each of
+      // the three scales compile 3,626 distinct classes in all, the
+      // union this bound covers with headroom. It stays finite because
+      // a long-lived shell keeps compiling literal-specific classes.
+      // Metaspace (used, after each pass, sf0.001 then sf0.01, two
+      // passes each): 212-223 MB at 4,096 entries, 204-240 MB at 100
+      // (that cache recompiles about 3,100 classes a pass, 35-50 s of
+      // compile, and the evicted ones wait for class unloading), and
+      // 229 MB unbounded after all 3,626. The cache costs no more than
+      // about 20 MB of metaspace at the full working set.
+      // TRAP: Spark reads the value once per JVM, in CodeGenerator's
+      // static initializer (`SQLConf.get.codegenCacheMaxEntries`),
+      // from the conf active at the JVM's first compile; a JVM whose
+      // first session lacks the setting keeps 100 entries for life.
+      // So every session builder (this one, Verify's, the tests')
+      // sets it, and it is checked by counting compiles
+      // (`Harness.codegen`), not by reading the conf.
+      // Effect on the benchmark's curation cycle (seven operators at
+      // sf0.1, 15 s windows, ten alternating pairs, 4 vCPU): ops/s
+      // 0.359 -> 0.544, p50 2,802 -> 1,907 ms, p90 3,642 -> 2,751 ms,
+      // the same plans. At sf0.01 the repeat run of each operator
+      // compiles 0 classes (4 for dedup_containment and
+      // search_tfidf_topk), 8 a cycle.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -16,6 +16,8 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      // read once per JVM, at the first compile (see Engine.session)
+      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,8 @@
 package graft.exec
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import scala.jdk.CollectionConverters._
 
 /** Golden-output printer matching the reference's result formatting
   * (ref src/backend/V8Engine.cpp:360-420 print of typed values, golden
@@ -69,10 +71,18 @@ object ResultPrinter {
     }.mkString(",")
 
   /** Print (driver-side) — only for the REPL/debug path, never inside
-    * a distributed operator. */
+    * a distributed operator. A result that is already on the driver (an
+    * optimized plan of one `LocalRelation`: a routed index read, a
+    * folded dialect table) prints from `collect`, which runs no job
+    * there; anything else streams through `toLocalIterator`, which
+    * schedules one job per partition but never holds the whole result. */
   def print(df: DataFrame, out: java.io.PrintStream = System.out): Long = {
     var n = 0L
-    df.toLocalIterator().forEachRemaining { r => out.println(format(r)); n += 1 }
+    val rows = df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df.collect().iterator
+      case _ => df.toLocalIterator().asScala
+    }
+    rows.foreach { r => out.println(format(r)); n += 1 }
     n
   }
 

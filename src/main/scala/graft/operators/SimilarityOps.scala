@@ -2019,15 +2019,24 @@ object SimilarityOps {
   // died with the context, and dropping the strong reference lets the
   // stopped session itself be collected). A recycled UUID cannot
   // occur (java.util.UUID per session), so no stale checkpoint can
-  // ever serve another session.
+  // ever serve another session. An entry is also dropped once its
+  // checkpoint RDD is no longer persisted: a caller that releases every
+  // persistent RDD (a runner's cleanup between queries) removes the
+  // blocks the frame reads, and handing it out again fails with
+  // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; the next access rebuilds it.
   private val knnEdgesCache =
     collection.mutable.Map.empty[(String, String), DataFrame]
   private def sessionKey(sp: SparkSession): String =
     org.apache.spark.sql.GraftShim.sessionUUID(sp)
+  private def checkpointLive(df: DataFrame): Boolean = {
+    val sc = df.sparkSession.sparkContext
+    !sc.isStopped && df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.exists(sc.getPersistentRDDs.contains)
+  }
   private[graft] def sharedKnnEdges(sp: SparkSession, dir: String): DataFrame =
     knnEdgesCache.synchronized {
-      knnEdgesCache.filterInPlace((_, df) =>
-        !df.sparkSession.sparkContext.isStopped)
+      knnEdgesCache.filterInPlace((_, df) => checkpointLive(df))
       knnEdgesCache.getOrElseUpdate((sessionKey(sp), dir),
         knnGraph(sp, dir)
           .select(col("vec_id").as("src"), col("neighbor_id").as("dst"),

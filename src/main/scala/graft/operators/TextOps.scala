@@ -498,28 +498,36 @@ object TextOps {
     FROM d
     QUALIFY rk <= 10"""
 
+  private val LangMarkers = Seq(
+    "en" -> Seq("the", "and", "of"),
+    "de" -> Seq("der", "und", "die"),
+    "fr" -> Seq("le", "et", "les"),
+    "es" -> Seq("el", "y", "los"),
+    "zh" -> Seq("de", "shi", "zai"))
+
+  /** `documents` with one `score_<lang>` marker count per language. */
+  private def langScores(sp: SparkSession, dir: String): DataFrame = {
+    val padded = concat(lit(" "), col("text"), lit(" "))
+    Engine.table(sp, dir, "documents")
+      .select(col("doc_id"), col("text"))
+      .withColumns(LangMarkers.map { case (l, ws) =>
+        s"score_$l" -> ws.map(w => occ(padded, w)).reduce(_ + _)
+      }.toMap)
+  }
+
+  /** The top marker count over [[langScores]]; a document has a language
+    * (is not "unknown") exactly when it is above 0. */
+  private val bestLangScore: Column =
+    greatest(LangMarkers.map { case (l, _) => col(s"score_$l") }: _*)
+
   /** Language-ID by stopword-marker voting over {en,de,fr,es,zh} with a
     * deterministic tie-break. Portable CASE chain (first max wins). */
   def langId(sp: SparkSession, dir: String): DataFrame = {
-    val padded = concat(lit(" "), col("text"), lit(" "))
-    val markers = Map(
-      "en" -> Seq("the", "and", "of"),
-      "de" -> Seq("der", "und", "die"),
-      "fr" -> Seq("le", "et", "les"),
-      "es" -> Seq("el", "y", "los"),
-      "zh" -> Seq("de", "shi", "zai"))
-    val scored = Engine.table(sp, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .withColumns(markers.map { case (l, ws) =>
-        s"score_$l" -> ws.map(w => occ(padded, w)).reduce(_ + _)
-      })
-    val langs = Seq("en", "de", "fr", "es", "zh")
-    val best = langs.map(l => col(s"score_$l")).reduce((a, b) => greatest(a, b))
-    val pred = langs.foldRight(lit("unknown"): Column) { (l, acc) =>
-      when(col(s"score_$l") === best && best > 0, lit(l)).otherwise(acc)
+    val pred = LangMarkers.foldRight(lit("unknown"): Column) { case ((l, _), acc) =>
+      when(col(s"score_$l") === bestLangScore && bestLangScore > 0, lit(l)).otherwise(acc)
     }
     // foldRight gives priority en > de > fr > es > zh on ties.
-    scored.select(col("doc_id"), pred.as("pred_lang"))
+    langScores(sp, dir).select(col("doc_id"), pred.as("pred_lang"))
   }
 
   val langIdOracle: String = {
@@ -791,10 +799,13 @@ object TextOps {
     * fuses the three stages into a single pass + one aggregation. */
   def qualityFilterPipeline(sp: SparkSession, dir: String): DataFrame = {
     val scored = qualityScore(sp, dir)
-    val langs = langId(sp, dir)
-    scored.join(langs, "doc_id")
-      .filter(col("n_tokens") >= 20 && col("stop_ratio") < 0.25 &&
-        col("pred_lang") =!= "unknown")
+    // a known language is a top marker count above 0 (the oracle's own
+    // predicate): filtering on langId's pred_lang instead inlines its
+    // whole CASE chain into the scan, whose generated code outgrows
+    // Janino's 64 KB method limit, so the stage ran interpreted
+    val known = langScores(sp, dir).filter(bestLangScore > 0).select(col("doc_id"))
+    scored.join(known, "doc_id")
+      .filter(col("n_tokens") >= 20 && col("stop_ratio") < 0.25)
       .join(Engine.table(sp, dir, "documents"), "doc_id")
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"))

@@ -1,7 +1,9 @@
 package graft.tools
 
 import graft.{Engine, ProcStat, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -37,7 +39,11 @@ import scala.jdk.CollectionConverters._
   *    see. A contended group gets exactly one forked re-run; the re-run
   *    replaces it only when the re-run itself ran clean.
   *  - FALLBACK: a group whose child cannot run is measured in the
-  *    parent instead, and the record says so and why. */
+  *    parent instead, and the record says so and why.
+  *  - COMPILE COUNTS: every timed run carries the generated classes it
+  *    compiled and their compile time ([[Timed]]); a compile is a miss
+  *    in Spark's per-JVM class cache, so a run that paid the codegen
+  *    layer shows it beside its wall. */
 object Harness {
 
   val IdleLoadMax: Double = 2.0
@@ -92,15 +98,44 @@ object Harness {
     case c => c.toString
   } + "\""
 
+  /** The JVM's two exact counters of the codegen compile layer: the
+    * generated classes Janino compiled (each one a miss in Spark's
+    * per-JVM class cache) and their total compile time. Both only
+    * grow; a run's share is the difference of two readings. */
+  final case class Codegen(compiles: Long, compileNs: Long) {
+    def -(o: Codegen): Codegen = Codegen(compiles - o.compiles, compileNs - o.compileNs)
+    def ms: Double = compileNs / 1e6
+  }
+
+  def codegen(): Codegen =
+    Codegen(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** One timed run: wall seconds and the compiles it paid. */
+  final case class Timed(wallS: Double, codegen: Codegen)
+
+  object Timed {
+    /** Runs as one tab- and newline-free field of a child's row. */
+    def encode(runs: Seq[Timed]): String =
+      runs.map(r => f"${r.wallS}%.4f/${r.codegen.compiles}/${r.codegen.compileNs}").mkString(",")
+    def decode(s: String): Seq[Timed] = s.split(',').toSeq.filter(_.nonEmpty).map { r =>
+      val Array(w, c, ns) = r.split('/')
+      Timed(w.toDouble, Codegen(c.toLong, ns.toLong))
+    }
+    /** The record's per-run compile fields, without braces. */
+    def json(runs: Seq[Timed]): String =
+      s""""codegen_compiles":[${runs.map(_.codegen.compiles).mkString(",")}],""" +
+        s""""codegen_compile_ms":[${runs.map(r => f"${r.codegen.ms}%.1f").mkString(",")}]"""
+  }
+
   /** One cold run of a registered query: build it, execute it through
     * the noop sink (`count()` would let Catalyst prune the aggregates),
     * and clear every cache after the clock stops, whether or not the
-    * run failed. Returns wall seconds. */
-  def coldRun(spark: SparkSession, name: String, dir: String): Double = {
-    val t0 = System.nanoTime
+    * run failed. */
+  def coldRun(spark: SparkSession, name: String, dir: String): Timed = {
+    val (c0, t0) = (codegen(), System.nanoTime)
     try {
       SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime - t0) / 1e9
+      Timed((System.nanoTime - t0) / 1e9, codegen() - c0)
     } finally spark.sharedState.cacheManager.clearCache()
   }
 

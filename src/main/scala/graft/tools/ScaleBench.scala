@@ -260,16 +260,17 @@ object ScaleBench {
     n
   }
 
-  /** One op at base then N×: per scale one untimed cold run, the
-    * median of `reps` cold runs, then the output row count. The row is
-    * `base\txN\tout_base\tout_N`. */
+  /** One op at base then N×: per scale one untimed cold run, `reps`
+    * timed cold runs, then the output row count. The row is
+    * `out_base\tout_N\truns_base\truns_N` ([[Harness.Timed.encode]]). */
   private def measureOp(spark: SparkSession, op: String, baseDir: String,
       scratch: String, reps: Int): String = {
     val at = Seq(baseDir, scratch + OpScratchSuffix.getOrElse(op, "")).map { dir =>
       Harness.coldRun(spark, op, dir)
-      (Harness.median((1 to reps).map(_ => Harness.coldRun(spark, op, dir))), outRows(spark, op, dir))
+      val runs = (1 to reps).map(_ => Harness.coldRun(spark, op, dir))
+      (outRows(spark, op, dir), Harness.Timed.encode(runs))
     }
-    f"${at(0)._1}%.4f\t${at(1)._1}%.4f\t${at(0)._2}\t${at(1)._2}"
+    s"${at(0)._1}\t${at(1)._1}\t${at(0)._2}\t${at(1)._2}"
   }
 
   /** Ops measured per forked JVM (the [[graft.Bench.GroupSize]]
@@ -338,13 +339,15 @@ object ScaleBench {
     // "in_process":true: mixed-isolation timings stay auditable
     val inProcess = sweep.groups.filter(_.fallback.isDefined).flatMap(_.names).toSet
     val results = sweep.rows.map { case (op, v) =>
-      val Array(b, x, ob, ox) = v.split('\t')
-      val (base, xN, outB, outN) = (b.toDouble, x.toDouble, ob.toLong, ox.toLong)
+      val Array(ob, ox, rb, rx) = v.split('\t')
+      val runs = Seq(rb, rx).map(Harness.Timed.decode)
+      val Seq(base, xN) = runs.map(r => Harness.median(r.map(_.wallS)))
+      val (outB, outN) = (ob.toLong, ox.toLong)
       val ratio = xN / base
       System.err.println(
         f"[scalebench] $op%-26s base $base%7.2f s   ${copies}x $xN%7.2f s   ratio $ratio%5.2f   out $outB%,d -> $outN%,d" +
           (if (inProcess(op)) "   [in-process]" else ""))
-      (op, base, xN, ratio, outB, outN, inProcess(op))
+      (op, base, xN, ratio, outB, outN, inProcess(op), runs.map(r => "{" + Harness.Timed.json(r) + "}"))
     }
 
     // recall@5 at the big corpus vs brute force over the same queries
@@ -371,7 +374,7 @@ object ScaleBench {
     // the record (and on stderr) so a vacuous row can never read as
     // coverage.
     val vacuous = results.collect {
-      case (op, _, _, _, outB, outN, _) if outB > 0 && outN == 0 => op
+      case (op, _, _, _, outB, outN, _, _) if outB > 0 && outN == 0 => op
     }
     vacuous.foreach(op => System.err.println(
       s"[scalebench] VACUOUS SCALE ROW: $op emits 0 rows at ${copies}x " +
@@ -384,12 +387,13 @@ object ScaleBench {
       s""""steal_pct":${fmt(stealRunPct)},"groups":${sweep.groups.map(_.json).mkString("[", ",", "]")},"rows":{""" +
       rows.map { case (t, (b, x)) => s""""$t":[$b,$x]""" }.mkString(",") +
       s"""},"ops":{""" +
-      results.map { case (op, b, x, r, outB, outN, inProc) =>
+      results.map { case (op, b, x, r, outB, outN, inProc, codegen) =>
         // ratio_out: output growth at N× — read the wall ratio against
         // it (wall/out ~flat = output-bound, not a plan residue)
         val ratioOut = if (outB > 0) outN.toDouble / outB else 0.0
         s""""$op":{"base_s":${fmt(b)},"x${copies}_s":${fmt(x)},"ratio":${fmt(r)},""" +
-          s""""out_rows":[$outB,$outN],"ratio_out":${fmt(ratioOut)}""" +
+          s""""out_rows":[$outB,$outN],"ratio_out":${fmt(ratioOut)},""" +
+          s""""codegen_base":${codegen(0)},"codegen_x$copies":${codegen(1)}""" +
           OpScratchSuffix.get(op).map(s => s""","corpus":"scratch$s"""").getOrElse("") +
           (if (inProc) ""","in_process":true}""" else "}")
       }.mkString(",") + s"""},"vacuous":[""" +

@@ -51,23 +51,28 @@ object SoloProfile {
       val runs = (1 to reps).map { i =>
         val load0 = Harness.loadAvg
         val st0 = ProcStat.snapshot()
+        // the compiles are counted over build and execution, like
+        // Harness.coldRun's; the wall covers execution only
+        val c0 = Harness.codegen()
         val qe = SparkEntry.queries(op)(spark, dir).queryExecution
-        val t0 = System.nanoTime
         // execute the DataFrame's OWN QueryExecution so the adaptive
         // plan we stringify below is the one this timed run finalized
         // (a noop write plans a fresh QueryExecution internally and
         // discards it)
+        val t0 = System.nanoTime
         spark.sparkContext.runJob(qe.toRdd,
           (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
             { while (it.hasNext) it.next(); () })
         val wall = (System.nanoTime - t0) / 1e9
+        val timedRun = Harness.Timed(wall, Harness.codegen() - c0)
         val steal = ProcStat.stealPctBetween(st0, ProcStat.snapshot())
         val plan = qe.executedPlan.toString
         spark.sharedState.cacheManager.clearCache()
         val fp = Harness.fingerprint(plan)
         System.err.println(f"[solo] $op rep $i: wall $wall%7.2f s  steal $steal%5.2f%%  load@start $load0%4.1f  " +
+          f"compiles ${timedRun.codegen.compiles} (${timedRun.codegen.ms}%.0f ms)  " +
           fp.filter(_._2 > 0).map { case (k, v) => s"$k=$v" }.mkString(" "))
-        (wall, steal, load0, fp, plan)
+        (wall, steal, load0, fp, plan, timedRun)
       }
 
       val fps = runs.map(_._4)
@@ -84,7 +89,8 @@ object SoloProfile {
         s""""idle_waited_s":${fmt(idleWaitedS)},"walls_s":[${walls.map(fmt).mkString(",")}],""" +
         s""""steal_pct":[${runs.map(r => fmt(r._2)).mkString(",")}],""" +
         s""""load_at_start":[${runs.map(r => fmt(r._3)).mkString(",")}],""" +
-        s""""spread":${fmt(walls.max / walls.min)},"plan_flip":${fps.distinct.length > 1},""" +
+        s""""spread":${fmt(walls.max / walls.min)},${Harness.Timed.json(runs.map(_._6))},""" +
+        s""""plan_flip":${fps.distinct.length > 1},""" +
         s""""plan_fingerprints":[""" +
         fps.map(fp => "{" + fp.toSeq.sortBy(_._1).map {
           case (k, v) => s""""$k":$v""" }.mkString(",") + "}").mkString(",") +

@@ -654,6 +654,18 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(cached == fresh, "cached edge list diverged from a fresh build")
   }
 
+  test("shared kNN edges are rebuilt after every persistent RDD is released") {
+    // a runner's cleanup between queries releases the edge list's
+    // checkpoint blocks; the next graph op must rebuild, not read them
+    def outliers(sp: org.apache.spark.sql.SparkSession) = SparkEntry.queries("sim_knn_outliers")(sp, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).sortBy(_._1).toSeq
+    SparkEntry.queries("sim_graph_centrality")(spark, sf).write.format("noop").mode("overwrite").save()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+    val got = outliers(spark)
+    assert(got.nonEmpty)
+    assert(got == outliers(spark.newSession()), "outliers over the rebuilt edges differ from a fresh session's")
+  }
+
   test("knn outliers flag exactly the minimal bottom share of mean neighbor cosine") {
     import graft.operators.SimilarityOps
     val rows = SimilarityOps.knnOutliers(spark, sf).collect()

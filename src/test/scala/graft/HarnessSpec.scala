@@ -26,8 +26,8 @@ object HarnessSpecChild {
 }
 
 /** The shared measurement core: the child command line and heap rule,
-  * the contention rule, fork failure reasons, the plan fingerprint,
-  * and the lint that keeps forking and load reads in the core. */
+  * the contention rule, fork failure reasons, the per-run compile
+  * record, the plan fingerprint, and the lint that keeps forking and load reads in the core. */
 class HarnessSpec extends AnyFunSuite {
 
   private val GiB = 1L << 30
@@ -102,6 +102,16 @@ class HarnessSpec extends AnyFunSuite {
     Seq("\"idx\":0", "\"load_start\":", "\"external_cpu_frac\":", "\"steal_pct\":",
       "\"contended\":", "\"retried\":false", "\"retry_clean\":false",
       "\"in_process\":true", "\"reason\":\"x\\ty\"").foreach(f => assert(json.contains(f), json))
+  }
+
+  test("timed runs survive a child's row field and print one compile entry per run") {
+    import Harness.{Codegen, Timed}
+    val runs = Seq(Timed(1.5, Codegen(3, 12500000L)), Timed(0.25, Codegen(0, 0)))
+    val field = Timed.encode(runs)
+    assert(!field.exists(c => c == '\t' || c == '\n'), field)
+    assert(Timed.decode(field) == runs)
+    assert(Timed.json(runs) == "\"codegen_compiles\":[3,0],\"codegen_compile_ms\":[12.5,0.0]")
+    assert(Codegen(5, 9) - Codegen(2, 4) == Codegen(3, 5))
   }
 
   test("the plan fingerprint counts the final plan's nodes by the names Spark prints") {

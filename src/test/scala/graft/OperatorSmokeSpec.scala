@@ -10,6 +10,9 @@ object TestSession {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
+      // the production cache size: Spark reads it once per JVM, at the
+      // first compile (see Engine.session)
+      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

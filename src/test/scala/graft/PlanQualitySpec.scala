@@ -144,6 +144,27 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(plan.contains("HashAggregate"))
   }
 
+  test("every whole-stage codegen subtree of the quality-filter pipeline compiles") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.internal.SQLConf
+    val df = SparkEntry.queries("pipeline_quality_filter")(spark, sf)
+    df.collect() // finalize this queryExecution's AQE plan
+    val stages = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }
+    assert(stages.nonEmpty, "no whole-stage codegen subtree")
+    // Janino's 64 KB method limit fails the compile itself; a method
+    // above the huge-method limit would make Spark fall back as well
+    stages.foreach { w =>
+      val (_, code) = w.doCodeGen()
+      val (_, stats) = CodeGenerator.compile(code)
+      assert(stats.maxMethodCodeSize <= SQLConf.get.hugeMethodLimit,
+        s"stage ${w.codegenStageId} would run interpreted:\n${w.child.treeString}")
+    }
+  }
+
   test("dialect comma-join lowers to a real equi-join, not a filtered cross product") {
     val df = operators.DialectQueries.queries("dialect_q12")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString

@@ -5,9 +5,10 @@ import org.apache.spark.ListenerBusShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Work counts of the dialect write and index paths and of table
-  * resolution: Spark jobs per job group and analyzed-plan sizes, which
-  * host load cannot move (no wall time is asserted). */
+/** Work counts of the dialect write and index paths, the shell's
+  * printer, table resolution and the codegen class cache: Spark jobs
+  * per job group, analyzed-plan sizes and generated classes compiled,
+  * which host load cannot move (no wall time is asserted). */
 class WorkCountSpec extends AnyFunSuite {
   import TestSession._
 
@@ -65,6 +66,19 @@ class WorkCountSpec extends AnyFunSuite {
     assert(s.query("SELECT COUNT(*) FROM acct;").collect()(0).getLong(0) == 11)
   }
 
+  test("the shell prints an indexed point read on a dialect table with no job") {
+    val s = new EngineSession(spark)
+    s.execute("""CREATE DATABASE wcp; USE wcp;
+      CREATE TABLE acct (id INT(8) NOT NULL PRIMARY KEY, amount INT(8) NOT NULL);
+      CREATE INDEX acct_id ON acct USING array (id);""")
+    s.execute("INSERT INTO acct VALUES (1, 10), (2, 20);")
+    val q = "SELECT id, amount FROM acct WHERE id = 2;"
+    val buf = new java.io.ByteArrayOutputStream
+    val out = new java.io.PrintStream(buf, true, "UTF-8")
+    assert(jobs(exec.ResultPrinter.print(s.query(q), out)) == 0, "printing a routed point read ran a job")
+    assert(buf.toString("UTF-8") == "2,20" + System.lineSeparator)
+  }
+
   test("a range read with ORDER BY on a dialect table runs 3 jobs, " +
       "an indexed point read on a parquet table 1") {
     val s = new EngineSession(spark)
@@ -111,5 +125,25 @@ class WorkCountSpec extends AnyFunSuite {
     val n = jobs(operators.DedupOps.cluster(spark, sf01))
     println(s"[workcount] cluster build at sf0.01 ran $n jobs")
     assert(n <= 20, s"building the clustering ran $n jobs")
+  }
+
+  test("a curation op re-run after the other six compiles no generated class") {
+    // the seven ops of one benchmark curation cycle: with Spark's
+    // default 100-entry class cache they evict each other, and each
+    // re-run here recompiled 13-55 classes (events_rfm 55); the other
+    // repeats compile 0-4 with the production cache, events_rfm 0
+    val ops = Seq("dedup_containment", "dedup_cluster_star", "dedup_minhash_lsh",
+      "sim_knn_graph", "search_tfidf_topk", "events_rfm", "orders_basket_pairs")
+    val pinned = "events_rfm"
+    def compiles(op: String): Long = {
+      val n = tools.Harness.coldRun(spark, op, sf01).codegen.compiles
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+      println(s"[workcount] $op compiled $n classes")
+      n
+    }
+    ops.foreach(compiles)
+    ops.filterNot(_ == pinned).foreach(compiles)
+    val n = compiles(pinned)
+    assert(n == 0, s"$pinned compiled $n classes on its re-run")
   }
 }
