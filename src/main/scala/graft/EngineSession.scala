@@ -4,7 +4,7 @@ import graft.analyzer._
 import graft.parser.{Ast, Parser}
 import graft.parser.Ast._
 import graft.planner.{CatalogTable, Planner}
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -132,7 +132,6 @@ final class EngineSession(val spark: SparkSession,
         if (hits.size > 1)
           throw new SemaError(s"table '$name' has duplicate attribute '$n'")
       }
-      val fieldMap = fields.map { case (n, t) => n.toLowerCase -> t }.toMap
       cols.foreach { c =>
         val refs = c.constraints.collect { case r: Ast.References => r }
         if (refs.size > 1)
@@ -147,13 +146,7 @@ final class EngineSession(val spark: SparkSession,
             throw new SemaError(
               s"REFERENCES type mismatch: '${c.name}' is ${typeOf(c.tpe)}, '$rt.$rc' is ${tc._2}")
         }
-        c.constraints.collect { case Ast.Check(e) =>
-          // the CHECK expression must type-check against the table's
-          // own columns and be boolean (ref Sema.cpp:1548)
-          val t = inferType(e, fieldMap, name)
-          if (t != MBool && t != MNull)
-            throw new SemaError(s"CHECK constraint on '${c.name}' is not boolean")
-        }
+        c.constraints.collect { case Ast.Check(e) => planner.check(e, name, fields, c.name) }
       }
       db().put(name.toLowerCase, TableDef(name, fields,
         cols.map(c => c.name -> c.constraints).toMap,
@@ -250,10 +243,11 @@ final class EngineSession(val spark: SparkSession,
       // CHECK enforcement: every inserted row must satisfy every CHECK,
       // evaluated over the batch alone; the filter folds into the
       // batch's LocalRelation on the driver, so `isEmpty` runs no job
-      val newDf = GraftShim.localRelation(spark, schema, batch)
+      val newDf = GraftShim.localRelation(spark, schema, batch).alias(t.name)
       t.constraints.foreach { case (cn, cs) =>
         cs.collect { case Ast.Check(e) =>
-          if (!newDf.filter(!coalesce(checkColumn(e, t.fields), lit(true))).isEmpty)
+          val check = planner.check(e, t.name, t.fields, cn)
+          if (!newDf.filter(!coalesce(check, lit(true))).isEmpty)
             throw new SemaError(s"CHECK constraint on '$cn' violated by INSERT")
         }
       }
@@ -495,14 +489,7 @@ final class EngineSession(val spark: SparkSession,
             // keys compared to ints at sema, so no cross-type cases)
             def litKey(e: Expr): Option[Long] = e match {
               case IntLit(v) if !keyIsDate => Some(v)
-              case DateLit(iso) if keyIsDate =>
-                val p = iso.trim
-                val (sign, rest) = if (p.startsWith("-")) (-1, p.drop(1)) else (1, p)
-                rest.split("-").map(_.toInt) match {
-                  case Array(y, m, d) =>
-                    Some(java.time.LocalDate.of(sign * y, m, d).toEpochDay)
-                  case _ => None
-                }
+              case d: DateLit if keyIsDate => Some(Planner.dateValue(d).toEpochDay)
               case _ => None
             }
             def bound(e: Expr): Option[(Long, Long)] = e match {
@@ -577,91 +564,6 @@ final class EngineSession(val spark: SparkSession,
     case None => planner.plan(s)
   }
 
-  /** Type-check an expression against a bare column→type map (used for
-    * CHECK constraints, where the only visible scope is the table being
-    * created — ref Sema.cpp:1548). Mirrors the planner's typing rules
-    * without needing a DataFrame. */
-  private def inferType(e: Expr, cols: Map[String, MType], table: String): MType = {
-    def go(e: Expr): MType = e match {
-      case Id(qual, n) =>
-        if (qual.exists(!_.equalsIgnoreCase(table)))
-          throw new SemaError(s"unknown table '${qual.get}' in CHECK")
-        cols.getOrElse(n.toLowerCase,
-          throw new SemaError(s"unknown attribute '$n' in CHECK"))
-      case IntLit(_) => MInt(8)
-      case FloatLit(_, _) => MFloat(64)
-      case StrLit(v) => MStr(v.length, varying = true)
-      case BoolLit(_) => MBool
-      case NullLit => MNull
-      case DateLit(_) => MDate
-      case DateTimeLit(_) => MDateTime
-      case Unary("NOT", x) =>
-        if (go(x) != MBool) throw new SemaError("NOT requires boolean"); MBool
-      case Unary(_, x) =>
-        val t = go(x)
-        if (!t.isNumeric) throw new SemaError("unary +/-/~ requires numeric"); t
-      case Binary(op, l, r) if Set("+", "-", "*", "/", "%").contains(op) =>
-        MTypes.arithmeticJoin(go(l), go(r))
-      case Binary("..", l, r) =>
-        if (!go(l).isString || !go(r).isString)
-          throw new SemaError("'..' requires string operands")
-        MStr(Int.MaxValue, varying = false)
-      case Binary(op, l, r) if Set("=", "!=", "<", "<=", ">", ">=").contains(op) =>
-        if (!MTypes.comparable(go(l), go(r), op == "=" || op == "!="))
-          throw new SemaError(s"cannot compare ${go(l)} with ${go(r)}")
-        MBool
-      case Binary(op, l, r) if op == "AND" || op == "OR" =>
-        if (go(l) != MBool || go(r) != MBool)
-          throw new SemaError(s"$op requires boolean operands")
-        MBool
-      case Like(l, p, _) =>
-        if (!go(l).isString || !go(p).isString)
-          throw new SemaError("LIKE requires string operands")
-        MBool
-      case FnCall(n, args, _) if n.equalsIgnoreCase("ISNULL") && args.size == 1 =>
-        go(args.head); MBool
-      case FnCall(n, args, _) if n.equalsIgnoreCase("INT") && args.size == 1 =>
-        go(args.head); MInt(4)
-      case other => throw new SemaError(s"invalid expression in CHECK: $other")
-    }
-    go(e)
-  }
-
-  /** Compile a CHECK expression to a Spark Column over the table's own
-    * bare column names. */
-  private def checkColumn(e: Expr, fields: Seq[(String, MType)]): Column = e match {
-    case Id(_, n) => col(fields.find(_._1.equalsIgnoreCase(n)).get._1)
-    case IntLit(v) => lit(v)
-    case FloatLit(v, _) => lit(v)
-    case StrLit(v) => lit(v)
-    case BoolLit(v) => lit(v)
-    case NullLit => lit(null)
-    case Unary("NOT", x) => !checkColumn(x, fields)
-    case Unary("-", x) => negate(checkColumn(x, fields))
-    case Unary("+", x) => checkColumn(x, fields)
-    case Unary("~", x) => bitwise_not(checkColumn(x, fields))
-    case Binary(op, l, r) =>
-      val (a, b) = (checkColumn(l, fields), checkColumn(r, fields))
-      op match {
-        case "+" => a + b; case "-" => a - b; case "*" => a * b
-        case "/" => a / b; case "%" => a % b
-        case "=" => a === b; case "!=" => a =!= b
-        case "<" => a < b; case "<=" => a <= b
-        case ">" => a > b; case ">=" => a >= b
-        case "AND" => a && b; case "OR" => a || b
-        case ".." => concat(a, b)
-      }
-    case Like(l, p, neg) =>
-      val c = org.apache.spark.sql.GraftShim.like(
-        checkColumn(l, fields), checkColumn(p, fields))
-      if (neg) !c else c
-    case FnCall(n, args, _) if n.equalsIgnoreCase("ISNULL") =>
-      isnull(checkColumn(args.head, fields))
-    case FnCall(n, args, _) if n.equalsIgnoreCase("INT") =>
-      checkColumn(args.head, fields).cast("int")
-    case other => throw new SemaError(s"invalid expression in CHECK: $other")
-  }
-
   private def typeOf(t: TypeName): MType = t.name match {
     case "BOOL" => MBool
     case "INT" => MInt(t.args.head)
@@ -709,26 +611,12 @@ final class EngineSession(val spark: SparkSession,
       case MBool => v
       case other => throw new SemaError(s"cannot insert bool into $other")
     }
-    // java.time values, NOT java.sql: Catalyst converts LocalDate/
-    // Instant proleptically, so negative/ancient years survive INSERT
-    // without the hybrid-calendar rebase java.sql.Date would get
-    case DateLit(iso) => target match {
-      case MDate =>
-        val p = iso.trim
-        val (sign, rest) = if (p.startsWith("-")) (-1, p.drop(1)) else (1, p)
-        val Array(y, m, d) = rest.split("-").map(_.toInt)
-        java.time.LocalDate.of(sign * y, m, d)
+    case d: DateLit => target match {
+      case MDate => Planner.dateValue(d)
       case other => throw new SemaError(s"cannot insert date into $other")
     }
-    case DateTimeLit(iso) => target match {
-      case MDateTime =>
-        val parts = iso.trim.split("[ ]+")
-        val dp = parts(0)
-        val (sign, rest) = if (dp.startsWith("-")) (-1, dp.drop(1)) else (1, dp)
-        val Array(y, m, d) = rest.split("-").map(_.toInt)
-        val Array(hh, mi, ss) = parts(1).split(":").map(_.toInt)
-        java.time.LocalDateTime
-          .of(sign * y, m, d, hh, mi, ss).toInstant(java.time.ZoneOffset.UTC)
+    case d: DateTimeLit => target match {
+      case MDateTime => Planner.dateTimeValue(d)
       case other => throw new SemaError(s"cannot insert datetime into $other")
     }
     case Unary("-", x) => literalValue(x, target) match {

@@ -28,16 +28,20 @@ final case class Typed(col: Column, tpe: MType)
   * exactly this shape — same treatment Spark gives its own SQL
   * `FROM a, b WHERE a.x = b.y`.
   *
-  * Deterministic aggregation: SUM/AVG over float columns accumulate in
-  * DECIMAL(27,6) and cast back to double. Plain double sums would make
-  * results depend on partitioning order — unacceptable for an engine
-  * whose results must reproduce across cluster sizes at 100 TB.
+  * Deterministic aggregation: SUM/AVG over DOUBLE columns go through
+  * `graft.operators.Exact.dsum`, an exact scaled-integer sum divided
+  * back to double. Plain double sums would make results depend on
+  * partitioning order — unacceptable for an engine whose results must
+  * reproduce across cluster sizes at 100 TB.
+  *
+  * CHECK constraints compile here too (`check`), with the rules every
+  * WHERE goes through, so a constraint means what the same expression
+  * means in a query.
   */
 final class Planner(spark: SparkSession, lookup: String => Option[CatalogTable],
     refParity: Boolean = false) {
 
   private val AggNames = Set("COUNT", "SUM", "MIN", "MAX", "AVG")
-  private val DetDecimal = DecimalType(27, 6)
 
   /** Deferred diagnostics: the reference's Sema recovers and keeps
     * checking, so one statement can carry several errors (corpus
@@ -89,6 +93,20 @@ final class Planner(spark: SparkSession, lookup: String => Option[CatalogTable],
   }
 
   // ------------------------------------------------------------ planning
+
+  /** Compile a CHECK constraint on attribute `attr` of `table` to a
+    * Column over the table's rows aliased by its name (ref
+    * Sema.cpp:1548: the table's own attributes are the only scope). It
+    * is typed like a WHERE condition, must be boolean and may hold no
+    * subquery. */
+  def check(e: Expr, table: String, fields: Seq[(String, MType)], attr: String): Column = {
+    if (exists(e)(_.isInstanceOf[QueryExpr]))
+      throw new SemaError(s"CHECK constraint on '$attr' contains a subquery")
+    val t = resolveScalar(e, new Scope(Seq(Source(table, fields))), allowAgg = false)
+    if (t.tpe != MBool && t.tpe != MNull)
+      throw new SemaError(s"CHECK constraint on '$attr' is not boolean")
+    t.col
+  }
 
   def plan(stmt0: SelectStmt): DataFrame = {
     // FROM: alias each source, cross-join; WHERE recovers the joins.
@@ -328,8 +346,8 @@ final class Planner(spark: SparkSession, lookup: String => Option[CatalogTable],
       case StrLit(v) => Typed(lit(v), MStr(v.length, varying = true))
       case BoolLit(v) => Typed(lit(v), MBool)
       case NullLit => Typed(lit(null), MNull)
-      case d: DateLit => literalDate(d)
-      case d: DateTimeLit => literalDateTime(d)
+      case d: DateLit => Typed(lit(Planner.dateValue(d)), MDate)
+      case d: DateTimeLit => Typed(lit(Planner.dateTimeValue(d)), MDateTime)
       case Unary(op, x) => buildUnary(op, resolve(x))
       case Binary(op, l, r) => buildBinary(op, resolve(l), resolve(r))
       case Like(x, p, neg) => buildLike(resolve(x), resolve(p), neg)
@@ -580,23 +598,22 @@ final class Planner(spark: SparkSession, lookup: String => Option[CatalogTable],
 
   // ----------------------------------------------------- expression build
 
-  private def containsAggregate(e: Expr): Boolean = e match {
-    case FnCall(n, _, _) if AggNames.contains(n.toUpperCase) => true
-    case FnCall(_, args, _) => args.exists(containsAggregate)
-    case Unary(_, x) => containsAggregate(x)
-    case Binary(_, l, r) => containsAggregate(l) || containsAggregate(r)
-    case Like(l, p, _) => containsAggregate(l) || containsAggregate(p)
+  /** Whether `p` holds for `e` or an operand nested in it (a
+    * subquery's own clauses are not entered). */
+  private def exists(e: Expr)(p: Expr => Boolean): Boolean = p(e) || (e match {
+    case Unary(_, x) => exists(x)(p)
+    case Binary(_, l, r) => exists(l)(p) || exists(r)(p)
+    case Like(l, pat, _) => exists(l)(p) || exists(pat)(p)
+    case FnCall(_, args, _) => args.exists(exists(_)(p))
+    case _ => false
+  })
+
+  private def containsAggregate(e: Expr): Boolean = exists(e) {
+    case FnCall(n, _, _) => AggNames.contains(n.toUpperCase)
     case _ => false
   }
 
-  private def containsId(e: Expr): Boolean = e match {
-    case _: Id => true
-    case FnCall(_, args, _) => args.exists(containsId)
-    case Unary(_, x) => containsId(x)
-    case Binary(_, l, r) => containsId(l) || containsId(r)
-    case Like(l, p, _) => containsId(l) || containsId(p)
-    case _ => false
-  }
+  private def containsId(e: Expr): Boolean = exists(e)(_.isInstanceOf[Id])
 
   /** Resolve an expression in a row context. */
   private def resolveScalar(e: Expr, scope: Scope, allowAgg: Boolean): Typed = e match {
@@ -608,8 +625,8 @@ final class Planner(spark: SparkSession, lookup: String => Option[CatalogTable],
     case StrLit(v) => Typed(lit(v), MStr(v.length, varying = true))
     case BoolLit(v) => Typed(lit(v), MBool)
     case NullLit => Typed(lit(null), MNull)
-    case d: DateLit => literalDate(d)
-    case d: DateTimeLit => literalDateTime(d)
+    case d: DateLit => Typed(lit(Planner.dateValue(d)), MDate)
+    case d: DateTimeLit => Typed(lit(Planner.dateTimeValue(d)), MDateTime)
     case Unary(op, x) => buildUnary(op, resolveScalar(x, scope, allowAgg))
     case Binary(op, l, r) =>
       buildBinary(op, resolveScalar(l, scope, allowAgg),
@@ -772,33 +789,6 @@ final class Planner(spark: SparkSession, lookup: String => Option[CatalogTable],
     }
   }
 
-  // ------------------------------------------------------------- literals
-
-  private def literalDate(d: DateLit): Typed = {
-    val (y, m, dd) = parseYmd(d.iso)
-    Typed(lit(java.time.LocalDate.of(y, m, dd)), MDate)
-  }
-
-  private def literalDateTime(d: DateTimeLit): Typed = {
-    val parts = d.iso.trim.split("[ ]+")
-    val (y, m, dd) = parseYmd(parts(0))
-    val Array(hh, mi, ss) = parts(1).split(":").map(_.toInt)
-    val instant = java.time.LocalDateTime.of(y, m, dd, hh, mi, ss)
-      .toInstant(java.time.ZoneOffset.UTC)
-    Typed(lit(instant), MDateTime)
-  }
-
-  /** Parse 'Y...Y-MM-DD' with possibly negative / >4-digit year (ref
-    * Lexer.cpp:229-267; fixtures contain -4820-04-04). */
-  private def parseYmd(s: String): (Int, Int, Int) = {
-    val body = s.trim
-    val (sign, rest) = if (body.startsWith("-")) (-1, body.drop(1)) else (1, body)
-    rest.split("-") match {
-      case Array(y, m, d) => (sign * y.toInt, m.toInt, d.toInt)
-      case _ => throw new SemaError(s"malformed date literal '$s'")
-    }
-  }
-
   /** Output name for an unaliased select item (bare column name for
     * designators, pretty-printed text otherwise). */
   private def exprName(e: Expr): String = e match {
@@ -818,5 +808,47 @@ final class Planner(spark: SparkSession, lookup: String => Option[CatalogTable],
     case Like(l, p, _) => s"(${exprName(l)} LIKE ${exprName(p)})"
     case _: QueryExpr => "(subquery)"
     case _: Star => "*"
+  }
+}
+
+/** The dialect's one date/datetime literal parser, used by SELECT,
+  * INSERT and index routing alike. It returns java.time values, not
+  * java.sql ones: Catalyst converts them proleptically, so ancient
+  * years skip the hybrid-calendar rebase. */
+object Planner {
+  import java.time.{DateTimeException, Instant, LocalDate, LocalDateTime, ZoneOffset}
+
+  // a year may be negative or longer than four digits (ref
+  // Lexer.cpp:229-267; fixtures contain -4820-04-04)
+  private val Ymd = "(-?\\d+)-(\\d{1,2})-(\\d{1,2})"
+  private val DateRe = Ymd.r
+  private val DateTimeRe = s"$Ymd +(\\d{1,2}):(\\d{1,2}):(\\d{1,2})".r
+
+  /** `d'Y-MM-DD'` as a date; it must fit Spark's Int day count. */
+  def dateValue(d: DateLit): LocalDate = parse(d.iso) {
+    case DateRe(y, m, dd) =>
+      val v = LocalDate.of(y.toInt, m.toInt, dd.toInt)
+      Math.toIntExact(v.toEpochDay)
+      v
+  }
+
+  /** `d'Y-MM-DD hh:mm:ss'` as an instant at UTC; it must fit Spark's
+    * Long microsecond count. */
+  def dateTimeValue(d: DateTimeLit): Instant = parse(d.iso) {
+    case DateTimeRe(y, m, dd, hh, mi, ss) =>
+      val v = LocalDateTime.of(y.toInt, m.toInt, dd.toInt, hh.toInt, mi.toInt, ss.toInt)
+        .toInstant(ZoneOffset.UTC)
+      Math.multiplyExact(v.getEpochSecond, 1000000L)
+      v
+  }
+
+  /** A malformed or out-of-range literal is a SemaError naming it. */
+  private def parse[T](iso: String)(f: PartialFunction[String, T]): T = {
+    def bad = new SemaError(s"invalid date literal d'$iso'")
+    try f.applyOrElse(iso.trim, (_: String) => throw bad)
+    catch {
+      case _: DateTimeException | _: NumberFormatException | _: ArithmeticException =>
+        throw bad
+    }
   }
 }

@@ -90,6 +90,70 @@ class DialectSpec extends AnyFunSuite {
       Seq(3))
   }
 
+  test("a malformed or out-of-range date literal is a SemaError in INSERT and SELECT") {
+    val s = new EngineSession(spark)
+    // the DATE key is indexed, so a SELECT also routes its literal
+    s.execute("""CREATE DATABASE lit; USE lit;
+      CREATE TABLE t (d DATE, ts DATETIME);
+      CREATE INDEX t_d ON t (d);
+      INSERT INTO t VALUES (d'-0044-03-15', d'2020-01-01 10:00:00');""")
+    val bad = Seq("d'2020-01'", "d'2020-13-01'", "d'2020-ab-01'", "d'99999999-01-01'",
+      "d'2020-01-01 25:00:00'", "d'2020-01-01 10:00'")
+    for (l <- bad) {
+      val (attr, row) = if (l.contains(' ')) ("ts", s"NULL, $l") else ("d", s"$l, NULL")
+      intercept[SemaError](s.execute(s"INSERT INTO t VALUES ($row);"))
+      intercept[SemaError](s.query(s"SELECT * FROM t WHERE $attr = $l;"))
+    }
+    assert(rows(s, "SELECT ts FROM t WHERE d = d'-0044-03-15';").flatten ==
+      Seq(java.sql.Timestamp.from(java.time.Instant.parse("2020-01-01T10:00:00Z"))))
+  }
+
+  test("a CHECK means what the same expression means in a WHERE") {
+    val s = new EngineSession(spark)
+    s.execute("CREATE DATABASE chk; USE chk;")
+    val cols = "f DOUBLE, c VARCHAR(10), d DATE"
+    val row = """1.5, "xy", d'2010-05-05'"""
+    // (CHECK on attribute a, the row inserted, Some(the INSERT is
+    // accepted) or None when CREATE TABLE is a SemaError)
+    val inputs = Seq(
+      ("a / 2 * 2 = a", s"3, $row", Some(false)),       // integer division
+      ("a / 2 * 2 = a", s"4, $row", Some(true)),
+      ("d >= d'2000-01-01'", s"3, $row", Some(true)),
+      ("d >= d'2020-01-01'", s"3, $row", Some(false)),
+      ("a > 0 AND NULL", s"3, $row", Some(true)),       // NULL passes
+      ("a > 0 AND NULL", s"-3, $row", Some(false)),
+      ("f > 0", """3, NULL, "xy", NULL""", Some(true)),
+      ("~f = 0", s"3, $row", None),
+      ("~a = -4", s"3, $row", Some(true)),
+      ("INT(c) = 1", s"3, $row", None),
+      ("INT(f) = 1", s"3, $row", Some(true)),
+      ("c LIKE \"x%\"", s"3, $row", Some(true)),
+      ("c LIKE \"y%\"", s"3, $row", Some(false)),
+      ("c .. \"z\" = \"xyz\"", s"3, $row", Some(true)),
+      ("chk.a > 3", s"3, $row", Some(false)),            // the table's own name
+      ("other.a > 0", s"3, $row", None),
+      ("SUM(a) > 0", s"3, $row", None),
+      ("a + 1", s"3, $row", None))
+    def sema[T](body: => T): Option[T] =
+      try Some(body) catch { case _: SemaError => None }
+    for ((check, values, expected) <- inputs) {
+      s.execute(s"""DROP TABLE IF EXISTS chk, twin;
+        CREATE TABLE twin (a INT(4), $cols); INSERT INTO twin VALUES ($values);""")
+      // the rows the WHERE twin of the CHECK rejects; None: sema failed
+      val rejects = sema(s.query(s"SELECT * FROM twin AS chk WHERE NOT ($check);").count())
+      val created = sema(s.execute(s"CREATE TABLE chk (a INT(4) CHECK ($check), $cols);"))
+      assert(created.isDefined == rejects.isDefined, s"CREATE vs WHERE sema: $check")
+      val inserted = created.map(_ => sema(s.execute(s"INSERT INTO chk VALUES ($values);")).isDefined)
+      assert(inserted == rejects.map(_ == 0), s"INSERT vs WHERE: $check with ($values)")
+      assert(inserted == expected, s"$check with ($values)")
+    }
+    // a subquery is the one CHECK a WHERE would accept
+    s.execute("DROP TABLE IF EXISTS chk;")
+    intercept[SemaError](s.execute(
+      s"CREATE TABLE chk (a INT(4) CHECK (a > (SELECT MIN(a) FROM twin)), $cols);"))
+    assert(s.query("SELECT * FROM twin WHERE a > (SELECT MIN(a) FROM twin);").count() == 0)
+  }
+
   test("GROUP BY expression alias referenced in SELECT and ORDER BY") {
     val s = freshSession()
     val got = rows(s,
