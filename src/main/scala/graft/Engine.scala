@@ -27,20 +27,26 @@ object Engine {
 
   /** Entries of Spark's per-JVM cache of compiled generated classes
     * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100); see
-    * [[session]] for how it was sized and why every session builder
-    * sets it. No environment override: the value must be the same in
-    * every JVM that shares a measurement. */
+    * [[session]] for how it was sized. No environment override: the
+    * value must be the same in every JVM that shares a measurement. */
   val CodegenCacheEntries: Int = 4096
 
-  def session(appName: String = "graft", master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local cores a session runs on: `SPARK_GRAFT_CPUS` if set, else
+    * the JVM's available processors. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session builder in `src`: the shell, the runners, Verify,
+    * the benchmark and the tests all run this configuration. `cpus`
+    * sets both the local master and the shuffle partition count. */
+  def session(appName: String = "graft", cpus: Int = Engine.cpus): SparkSession = {
     val spark = SparkSession.builder()
-      .master(master)
+      .master(s"local[$cpus]")
       .appName(appName)
       // the join-order research surface (DPsize/GOO/heuristic search,
-      // ref SIGMOD'23) runs in every production session
+      // ref SIGMOD'23) runs in every session
       .config("spark.sql.extensions", "graft.optimizer.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // java.time collect types: proleptic Gregorian end-to-end, so
@@ -61,12 +67,9 @@ object Engine {
       // candidate caps). The AQE threshold additionally converts an
       // SMJ to SHJ at runtime when every post-shuffle build partition
       // is under 64 MB — bounded memory at any scale since partition
-      // counts grow with input under AQE. Both env-overridable for
-      // cluster tuning.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP_MAX", "64m"))
+      // counts grow with input under AQE.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       // NEGATIVE RESULT (round 14): size-first AQE coalescing
       // (parallelismFirst=false, advisory 8m or 64m) was hypothesized
       // to fix the 8-core-beats-32-core inversion (tiny stages
@@ -78,14 +81,13 @@ object Engine {
       // 0.78 → 1.24); its only wins were a few milliseconds on
       // kilobyte-sized stages. Local stages are CPU-bound, not
       // byte-bound, so bytes are the wrong coalescing signal here.
-      // Spark defaults kept; both knobs stay env-overridable because
-      // on a REAL cluster (guide §2.2: 100 MB-1 GB reduce partitions)
-      // size-first with a large advisory is the right posture — that
-      // decision tracks per-node memory/network, not this sandbox.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
+      // Spark defaults kept. On a REAL cluster (guide §2.2: 100 MB-1 GB
+      // reduce partitions) size-first with a large advisory is the
+      // right posture — that decision tracks per-node memory/network,
+      // not one host; both are runtime SQL confs, so `spark.conf.set`
+      // overrides them per session.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       // CODEGEN CLASS CACHE. Spark compiles each whole-stage and
       // expression class with Janino (about 11-13 ms a class) and keeps
       // the compiled classes in one per-JVM cache, 100 entries by
@@ -97,12 +99,13 @@ object Engine {
       // name order, an unbounded cache, 4 vCPU): a first pass at
       // sf0.001 compiles 2,250 classes (29.5 s of compile, 118 s wall);
       // a repeat pass 252, nearly all from the streaming queries, whose
-      // generated code differs per run and never hits; a first pass at
-      // sf0.01 adds 299 and at sf0.1 309 (the same stream churn plus
-      // about 50 scale-specific literals each). Two passes at each of
-      // the three scales compile 3,626 distinct classes in all, the
-      // union this bound covers with headroom. It stays finite because
-      // a long-lived shell keeps compiling literal-specific classes.
+      // generated code differed per run and never hit (the two confs
+      // below remove most of those misses); a first pass at sf0.01
+      // adds 299 and at sf0.1 309 (the same stream churn plus about 50
+      // scale-specific literals each). Two passes at each of the three
+      // scales compile 3,626 distinct classes in all, the union this
+      // bound covers with headroom. It stays finite because a
+      // long-lived shell keeps compiling literal-specific classes.
       // Metaspace (used, after each pass, sf0.001 then sf0.01, two
       // passes each): 212-223 MB at 4,096 entries, 204-240 MB at 100
       // (that cache recompiles about 3,100 classes a pass, 35-50 s of
@@ -110,12 +113,9 @@ object Engine {
       // 229 MB unbounded after all 3,626. The cache costs no more than
       // about 20 MB of metaspace at the full working set.
       // TRAP: Spark reads the value once per JVM, in CodeGenerator's
-      // static initializer (`SQLConf.get.codegenCacheMaxEntries`),
-      // from the conf active at the JVM's first compile; a JVM whose
-      // first session lacks the setting keeps 100 entries for life.
-      // So every session builder (this one, Verify's, the tests')
-      // sets it, and it is checked by counting compiles
-      // (`Harness.codegen`), not by reading the conf.
+      // static initializer, from the conf active at the JVM's first
+      // compile. This builder is the only one, so every JVM's first
+      // session carries it.
       // Effect on the benchmark's curation cycle (seven operators at
       // sf0.1, 15 s windows, ten alternating pairs, 4 vCPU): ops/s
       // 0.359 -> 0.544, p50 2,802 -> 1,907 ms, p90 3,642 -> 2,751 ms,
@@ -123,6 +123,17 @@ object Engine {
       // compiles 0 classes (4 for dedup_containment and
       // search_tfidf_topk), 8 a cycle.
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // WARM RE-RUNS HIT THE CACHE. Spark 4.1 keys a cached class on
+      // the context class loader as well as its code, and with artifact
+      // isolation each streaming query compiled under its own loader,
+      // so every run of it missed. AQE numbers whole-stage classes in
+      // the order stages materialize, so the same code also missed
+      // under another class name. With both off, a second pass over
+      // every registered query compiles nothing but the exceptions
+      // `WorkCountSpec` names. Artifact isolation is read when the
+      // session is built.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -180,9 +191,10 @@ object Engine {
     * TIMESTAMP(MICROS) parquet across testdata generations — branch on
     * the footer type so both load to the same microsecond
     * TimestampType:
-    *  - NANOS: Spark's reader rejects it; read as raw nanos (legacy
-    *    flag) and convert with integer `div` (floor — matching
-    *    DuckDB's truncation of ns towards earlier time);
+    *  - NANOS: Spark's reader rejects it; read as raw nanos (the
+    *    legacy flag [[session]] sets) and convert with integer `div`
+    *    (floor — matching DuckDB's truncation of ns towards earlier
+    *    time);
     *  - MICROS without UTC adjustment arrives as TIMESTAMP_NTZ; the
     *    session timezone is pinned to UTC, so a cast to TimestampType
     *    is epoch-identical (no wall-clock shift). */
@@ -190,11 +202,6 @@ object Engine {
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      // idempotent guard for sessions not built by Engine.session
-      // (constant value — benign under concurrency)
-      if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-          .forall(_ != "true"))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = parquet(spark, s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case LongType =>

@@ -220,38 +220,15 @@ final class EngineSession(val spark: SparkSession,
     case InsertStmt(table, rows) =>
       val t = db().getOrElse(table.toLowerCase,
         throw new SemaError(s"no table '$table'"))
-      val schema = sparkSchema(t.fields)
-      // NOT NULL / PRIMARY KEY enforcement (ref Sema validates tuple
-      // shape; a NULL in a non-nullable attribute is a sema error)
-      val notNull: Set[String] = t.constraints.collect {
-        case (n, cs) if cs.contains(Ast.NotNull) || cs.contains(Ast.PrimaryKey) =>
-          n.toLowerCase
-      }.toSet
-      val data = rows.map { r =>
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(sparkSchema(t.fields))
+      admit(t, "INSERT", rows.map { r =>
         if (r.length != t.fields.length)
           throw new SemaError(
             s"INSERT arity ${r.length} != table arity ${t.fields.length}")
-        Row.fromSeq(r.zip(t.fields).map { case (e, (n, tp)) =>
-          val v = literalValue(e, tp)
-          if (v == null && notNull.contains(n.toLowerCase))
-            throw new SemaError(s"NULL value for NOT NULL attribute '$n'")
-          v
-        })
-      }
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-      val batch = data.map(r => toCatalyst(r).asInstanceOf[InternalRow])
-      // CHECK enforcement: every inserted row must satisfy every CHECK,
-      // evaluated over the batch alone; the filter folds into the
-      // batch's LocalRelation on the driver, so `isEmpty` runs no job
-      val newDf = GraftShim.localRelation(spark, schema, batch).alias(t.name)
-      t.constraints.foreach { case (cn, cs) =>
-        cs.collect { case Ast.Check(e) =>
-          val check = planner.check(e, t.name, t.fields, cn)
-          if (!newDf.filter(!coalesce(check, lit(true))).isEmpty)
-            throw new SemaError(s"CHECK constraint on '$cn' violated by INSERT")
-        }
-      }
-      append(t, schema, batch)
+        toCatalyst(Row.fromSeq(r.zip(t.fields).map { case (e, (_, tp)) =>
+          literalValue(e, tp)
+        })).asInstanceOf[InternalRow]
+      })
       CommandOk(s"inserted ${rows.length} rows into $table")
 
     // instructions (ref DatabaseCommand.cpp:23-48): learn_spns trains
@@ -405,15 +382,39 @@ final class EngineSession(val spark: SparkSession,
       }
       // the file is read once, here: the table keeps the rows, not the
       // file (ref DSVReader loads into the store at IMPORT time)
-      val tableSchema = sparkSchema(t.fields)
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(tableSchema)
-      append(t, tableSchema, df.select(converted: _*).collect().toSeq
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(sparkSchema(t.fields))
+      admit(t, "IMPORT", df.select(converted: _*).collect().toSeq
         .map(r => toCatalyst(r).asInstanceOf[InternalRow]))
       CommandOk(s"imported $path into $table")
   }
 
   private def sparkSchema(fields: Seq[(String, MType)]): StructType =
     StructType(fields.map { case (n, t) => StructField(n, MTypes.toSpark(t)) })
+
+  /** The one admission path of a dialect write (INSERT and IMPORT
+    * both end here): NOT NULL, which PRIMARY KEY implies, is tested on
+    * the converted rows, and each CHECK through `Planner.check`, the
+    * compiler every WHERE goes through, on the batch's own
+    * `LocalRelation`; the filter folds into that relation on the
+    * driver, so `isEmpty` runs no job. A batch that fails any test is
+    * not appended. */
+  private def admit(t: TableDef, op: String, batch: Seq[InternalRow]): Unit = {
+    t.fields.zipWithIndex.foreach { case ((n, _), i) =>
+      val cs = t.constraints.getOrElse(n, Nil)
+      if ((cs.contains(Ast.NotNull) || cs.contains(Ast.PrimaryKey)) && batch.exists(_.isNullAt(i)))
+        throw new SemaError(s"NULL value for NOT NULL attribute '$n'")
+    }
+    val schema = sparkSchema(t.fields)
+    val newDf = GraftShim.localRelation(spark, schema, batch).alias(t.name)
+    t.constraints.foreach { case (cn, cs) =>
+      cs.collect { case Ast.Check(e) =>
+        val check = planner.check(e, t.name, t.fields, cn)
+        if (!newDf.filter(!coalesce(check, lit(true))).isEmpty)
+          throw new SemaError(s"CHECK constraint on '$cn' violated by $op")
+      }
+    }
+    append(t, schema, batch)
+  }
 
   /** Append one converted batch, O(batch): a dialect table's store
     * grows by it and its plan stays one LocalRelation; an external

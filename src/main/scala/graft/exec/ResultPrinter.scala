@@ -59,11 +59,6 @@ object ResultPrinter {
         case d: java.time.LocalDate => fmtDate(d)
         case t: java.time.Instant =>
           fmtDateTime(java.time.LocalDateTime.ofInstant(t, java.time.ZoneOffset.UTC))
-        case d: java.sql.Date => fmtDate(d.toLocalDate)
-        // via the instant + explicit UTC, not toLocalDateTime (which
-        // would silently shift under a non-UTC JVM default timezone)
-        case t: java.sql.Timestamp => fmtDateTime(
-          java.time.LocalDateTime.ofInstant(t.toInstant, java.time.ZoneOffset.UTC))
         case b: java.math.BigDecimal => b.toPlainString
         case b: scala.math.BigDecimal => b.underlying.toPlainString
         case other => other.toString

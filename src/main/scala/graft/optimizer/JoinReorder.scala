@@ -1709,9 +1709,8 @@ object JoinReorderRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** SparkSessionExtensions entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.optimizer.GraftExtensions`. */
+/** SparkSessionExtensions entry point, installed by `Engine.session`
+  * through `spark.sql.extensions=graft.optimizer.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit =
     e.injectOptimizerRule(_ => JoinReorderRule)

@@ -302,11 +302,9 @@ object Indexes {
   def keyToLong(v: Any): Long = v match {
     case n: Number => n.longValue()
     case d: java.time.LocalDate => d.toEpochDay
-    case d: java.sql.Date => d.toLocalDate.toEpochDay
     case t: java.time.Instant => t.toEpochMilli
     case t: java.time.LocalDateTime =>
       t.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    case t: java.sql.Timestamp => t.getTime
     case other =>
       throw new IllegalArgumentException(s"unindexable key type: ${other.getClass}")
   }

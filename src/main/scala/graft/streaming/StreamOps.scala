@@ -32,7 +32,6 @@ object StreamOps {
     * (Engine.parquetSchema, no job) and declare the matching
     * file-source schema — both normalize to µs TimestampType. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = Engine.parquetSchema(spark, s"$dir/events.parquet")("ts").dataType
     if (tsType == LongType)
       spark.readStream.schema(rawSchema)
@@ -919,7 +918,6 @@ object StreamOps {
   def sessionizeReplay(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
     val work = Files.createTempDirectory("graft_sess_replay")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // normalize the corpus copy to the raw int64-nanos layout
     // regardless of which parquet generation shipped (nanos or µs —
     // see Engine.table): the sentinel files written below then always

@@ -53,7 +53,7 @@ object CostFixtureRecorder {
 
     def d(x: Double) = f"$x%.3f"
     println("  // recorded by graft.tools.CostFixtureRecorder " +
-      f"(1-min load $load%.2f at start), local[32]")
+      f"(1-min load $load%.2f at start), local[${Engine.cpus}]")
     println("  val scanSamples: Seq[(Double, Double)] = Seq(")
     println(scan.map { case (n, ms) => s"    ($n, ${d(ms)})" }
       .mkString(",\n") + ")")

@@ -178,20 +178,10 @@ object ScaleBench {
     val Off = 10_000_000L
 
     def nfold(name: String, copy: (DataFrame, Int) => DataFrame): Unit = {
-      val base = name match {
-        // raw read keeps events.ts in its on-disk form (int64 nanos →
-        // derived plain INT64, or µs timestamp → derived µs
-        // timestamp); Engine.table normalizes either at read time.
-        // The legacy-nanos flag is needed for the nanos generation and
-        // harmless for µs (sessions not built by Engine.session
-        // reject TIMESTAMP(NANOS) otherwise)
-        case "events" =>
-          if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-              .forall(_ != "true"))
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          Engine.parquet(spark, s"$baseDir/events.parquet")
-        case _ => Engine.parquet(spark, s"$baseDir/$name.parquet")
-      }
+      // a raw read keeps events.ts in its on-disk form (int64 nanos →
+      // derived plain INT64, or µs timestamp → derived µs timestamp);
+      // Engine.table normalizes either at read time
+      val base = Engine.parquet(spark, s"$baseDir/$name.parquet")
       (0 until copies).map(i => copy(base, i))
         .reduce(_ unionByName _)
         .write.mode("overwrite").parquet(s"$outDir/$name.parquet")

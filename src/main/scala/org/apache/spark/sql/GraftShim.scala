@@ -41,11 +41,4 @@ object GraftShim {
     * can never be recycled onto a different live session. */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
-
-  /** The optimizer rules a SparkSessionExtensions instance would
-    * inject (`buildOptimizerRules` is private[sql]); lets tests prove
-    * an extension class actually registers its rules. */
-  def optimizerRulesOf(ext: SparkSessionExtensions, spark: SparkSession)
-      : Seq[catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]] =
-    ext.buildOptimizerRules(spark)
 }

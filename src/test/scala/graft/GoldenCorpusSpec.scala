@@ -141,7 +141,7 @@ class GoldenCorpusSpec extends AnyFunSuite {
   private val refRoot = Paths.get("/root/reference/test")
   private def available: Boolean = Files.isDirectory(refRoot)
 
-  private lazy val spark = Engine.session("golden-corpus")
+  private def spark = TestSession.spark
 
   /** One template session per corpus database, built from the corpus's
     * own schema.sql (IMPORT paths rewritten to absolute); each spec

@@ -1,23 +1,45 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.optimizer.JoinReorderRule
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the production cache size: Spark reads it once per JVM, at the
-      // first compile (see Engine.session)
-      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  import org.scalatest.Assertions.assert
+
+  /** The production session (`JoinReorderRule` included) on 8 cores. */
+  lazy val spark: SparkSession = Engine.session("graft-test", cpus = 8)
+
+  /** A result's rows as sorted strings, for order-free comparison. */
+  def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.toString).sorted.toSeq
+
+  /** `body` planned without `JoinReorderRule`, the baseline a
+    * reordering test compares against: Spark's own
+    * `spark.sql.optimizer.excludedRules` drops the rule, and the
+    * optimizer reads it on every execution. The rule's global state
+    * (injected cardinalities, cost model, SPNs, `graft.*` confs)
+    * therefore steers nothing here; its `reorderCount` shows that
+    * nothing was reordered. */
+  def withoutReorderRule[T](body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val before = JoinReorderRule.reorderCount
+    spark.conf.set(key, "graft.optimizer.JoinReorderRule")
+    val r = try body finally spark.conf.unset(key)
+    assert(JoinReorderRule.reorderCount == before, "the baseline was reordered")
+    r
   }
+
+  /** Asserts that `df` (by name: each run builds and plans it anew)
+    * gives the same rows planned by `JoinReorderRule`, which reorders
+    * it, as without it. */
+  def assertReorderKeepsRows(df: => DataFrame): Unit = {
+    val base = withoutReorderRule(sortedRows(df))
+    val before = JoinReorderRule.reorderCount
+    assert(sortedRows(df) == base)
+    assert(JoinReorderRule.reorderCount > before, "the rule did not reorder")
+  }
+
   val sf: String = "/root/testdata/sf0.001"
   /** The sf0.01 corpus beside [[sf]]. */
   val sf01: String = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath

@@ -82,7 +82,7 @@ class ParquetSchemaSpec extends AnyFunSuite {
         .append("user_id", 7L).append("event_type", "view").append("value", 1.5))
     } finally writer.close()
 
-    val events = Engine.table(spark, dir.toString, "events") // sets nanosAsLong
+    val events = Engine.table(spark, dir.toString, "events")
     val path = dir.resolve("events.parquet").toString
     sameAsSpark(path)
     assert(Engine.parquetSchema(spark, path)("ts").dataType == LongType)

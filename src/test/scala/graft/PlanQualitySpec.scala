@@ -46,18 +46,16 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("join reordering keeps parquet pushdown and bounded-dim broadcasts (q3)") {
-    // production sessions run JoinReorderRule; reordering must not
-    // strand filters above the scan or lose the dim broadcasts
-    spark.experimental.extraOptimizations = Seq(graft.optimizer.JoinReorderRule)
-    try {
-      val df = SparkEntry.queries("q3_shipping_priority")(spark, sf)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters:"))
-      val df2 = SparkEntry.queries("join_5way_star")(spark, sf)
-      df2.collect()
-      assert(df2.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
-    } finally spark.experimental.extraOptimizations = Nil
+    // the session runs JoinReorderRule, as every production session
+    // does; reordering must not strand filters above the scan or lose
+    // the dim broadcasts
+    val df = SparkEntry.queries("q3_shipping_priority")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters:"))
+    val df2 = SparkEntry.queries("join_5way_star")(spark, sf)
+    df2.collect()
+    assert(df2.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
   }
 
   test("per-lang sampling's first ranking window keys on (partition, lang), not lang alone") {

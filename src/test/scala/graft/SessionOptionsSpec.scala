@@ -19,9 +19,11 @@ class SessionOptionsSpec extends AnyFunSuite {
       JoinReorderRule.HsSearchConf, JoinReorderRule.HsWeightConf,
       JoinReorderRule.HsBudgetConf).foreach(spark.conf.unset)
 
-  private def join5Results(): Seq[String] =
-    operators.Relational.join5Way(spark, sf)
-      .collect().map(_.toSeq.toString).sorted.toSeq
+  private def join5 = operators.Relational.join5Way(spark, sf)
+
+  /** Runs `body` and then unsets every component conf, also on failure:
+    * the rule plans every later query of the session. */
+  private def withConfs(body: => Unit): Unit = try body finally clearConfs()
 
   test("\\list_plan_enumerators names the full registry") {
     val s = new EngineSession(spark)
@@ -35,124 +37,104 @@ class SessionOptionsSpec extends AnyFunSuite {
   }
 
   test("\\plan_enumerator selects a named enumerator (results hold)") {
-    val base = join5Results()
-    val s = new EngineSession(spark)
-    s.execute("\\plan_enumerator DPccp;")
-    assert(spark.conf.get(JoinReorderRule.EnumeratorConf) == "DPccp")
-    spark.experimental.extraOptimizations = Seq(JoinReorderRule)
-    try {
-      val before = JoinReorderRule.reorderCount
-      assert(join5Results() == base)
-      assert(JoinReorderRule.reorderCount > before, "rule did not fire")
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      clearConfs()
+    withConfs {
+      val s = new EngineSession(spark)
+      s.execute("\\plan_enumerator DPccp;")
+      assert(spark.conf.get(JoinReorderRule.EnumeratorConf) == "DPccp")
+      assertReorderKeepsRows(join5)
     }
   }
 
   test("\\plan_enumerator HeuristicSearch with space/heuristic/search args") {
-    val base = join5Results()
-    val s = new EngineSession(spark)
-    s.execute("\\plan_enumerator HeuristicSearch topdown goo beam_search;")
-    assert(spark.conf.get(JoinReorderRule.HsSpaceConf) == "topdown")
-    assert(spark.conf.get(JoinReorderRule.HsSearchConf) == "beam_search")
-    // optional weight/budget args (ref --hs-wf / --hs-budget)
-    s.execute("\\plan_enumerator HeuristicSearch bottomup goo weighted_anytimeastar 1.5 128;")
-    assert(spark.conf.get(JoinReorderRule.HsWeightConf) == "1.5")
-    assert(spark.conf.get(JoinReorderRule.HsBudgetConf) == "128")
-    intercept[SemaError](s.execute(
-      "\\plan_enumerator HeuristicSearch bottomup goo AStar notanumber;"))
-    s.execute("\\plan_enumerator HeuristicSearch topdown goo beam_search;")
-    spark.experimental.extraOptimizations = Seq(JoinReorderRule)
-    try assert(join5Results() == base)
-    finally {
-      spark.experimental.extraOptimizations = Nil
-      clearConfs()
+    withConfs {
+      val s = new EngineSession(spark)
+      s.execute("\\plan_enumerator HeuristicSearch topdown goo beam_search;")
+      assert(spark.conf.get(JoinReorderRule.HsSpaceConf) == "topdown")
+      assert(spark.conf.get(JoinReorderRule.HsSearchConf) == "beam_search")
+      // optional weight/budget args (ref --hs-wf / --hs-budget)
+      s.execute("\\plan_enumerator HeuristicSearch bottomup goo weighted_anytimeastar 1.5 128;")
+      assert(spark.conf.get(JoinReorderRule.HsWeightConf) == "1.5")
+      assert(spark.conf.get(JoinReorderRule.HsBudgetConf) == "128")
+      intercept[SemaError](s.execute(
+        "\\plan_enumerator HeuristicSearch bottomup goo AStar notanumber;"))
+      s.execute("\\plan_enumerator HeuristicSearch topdown goo beam_search;")
+      assertReorderKeepsRows(join5)
     }
   }
 
   test("omitted weight/budget args reset stale confs (self-contained)") {
-    val s = new EngineSession(spark)
-    s.execute("\\plan_enumerator HeuristicSearch bottomup goo weighted_anytimeastar 1.5 128;")
-    assert(spark.conf.get(JoinReorderRule.HsWeightConf) == "1.5")
-    assert(spark.conf.get(JoinReorderRule.HsBudgetConf) == "128")
-    // re-selecting without weight/budget must not inherit 1.5/128
-    s.execute("\\plan_enumerator HeuristicSearch bottomup goo AStar;")
-    assert(spark.conf.getOption(JoinReorderRule.HsWeightConf).isEmpty)
-    assert(spark.conf.getOption(JoinReorderRule.HsBudgetConf).isEmpty)
-    clearConfs()
+    withConfs {
+      val s = new EngineSession(spark)
+      s.execute("\\plan_enumerator HeuristicSearch bottomup goo weighted_anytimeastar 1.5 128;")
+      assert(spark.conf.get(JoinReorderRule.HsWeightConf) == "1.5")
+      assert(spark.conf.get(JoinReorderRule.HsBudgetConf) == "128")
+      // re-selecting without weight/budget must not inherit 1.5/128
+      s.execute("\\plan_enumerator HeuristicSearch bottomup goo AStar;")
+      assert(spark.conf.getOption(JoinReorderRule.HsWeightConf).isEmpty)
+      assert(spark.conf.getOption(JoinReorderRule.HsBudgetConf).isEmpty)
+    }
   }
 
   test("non-HeuristicSearch names reject extra args") {
-    val s = new EngineSession(spark)
-    intercept[SemaError](s.execute("\\plan_enumerator DPccp garbage;"))
-    intercept[SemaError](s.execute("\\plan_enumerator auto bottomup;"))
-    // the rejected invocation stored nothing
-    assert(spark.conf.getOption(JoinReorderRule.EnumeratorConf).isEmpty)
-    assert(spark.conf.getOption(JoinReorderRule.HsSpaceConf).isEmpty)
+    withConfs {
+      val s = new EngineSession(spark)
+      intercept[SemaError](s.execute("\\plan_enumerator DPccp garbage;"))
+      intercept[SemaError](s.execute("\\plan_enumerator auto bottomup;"))
+      // the rejected invocation stored nothing
+      assert(spark.conf.getOption(JoinReorderRule.EnumeratorConf).isEmpty)
+      assert(spark.conf.getOption(JoinReorderRule.HsSpaceConf).isEmpty)
+    }
   }
 
   test("\\cardinality_estimator CartesianProduct (results hold)") {
-    val base = join5Results()
-    val s = new EngineSession(spark)
-    s.execute("\\cardinality_estimator CartesianProduct;")
-    assert(spark.conf.get(JoinReorderRule.EstimatorConf) == "CartesianProduct")
-    spark.experimental.extraOptimizations = Seq(JoinReorderRule)
-    try assert(join5Results() == base)
-    finally {
-      spark.experimental.extraOptimizations = Nil
-      clearConfs()
+    withConfs {
+      val s = new EngineSession(spark)
+      s.execute("\\cardinality_estimator CartesianProduct;")
+      assert(spark.conf.get(JoinReorderRule.EstimatorConf) == "CartesianProduct")
+      assertReorderKeepsRows(join5)
     }
   }
 
   test("unknown component names are rejected at the instruction") {
-    val s = new EngineSession(spark)
-    intercept[SemaError](s.execute("\\plan_enumerator NoSuchEnum;"))
-    intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch bottomup goo no_such_search;"))
-    intercept[SemaError](s.execute("\\cardinality_estimator NoSuchEstimator;"))
-    // per-space heuristics: avg_sel exists bottom-up only (ref
-    // hpp:2028), sqrt_sum top-down only (hpp:1790)
-    intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch topdown avg_sel;"))
-    intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch bottomup sqrt_sum;"))
-    intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch sideways goo;"))
-    // nothing leaked into the conf
-    assert(spark.conf.getOption(JoinReorderRule.EnumeratorConf).isEmpty)
-    assert(spark.conf.getOption(JoinReorderRule.EstimatorConf).isEmpty)
+    withConfs {
+      val s = new EngineSession(spark)
+      intercept[SemaError](s.execute("\\plan_enumerator NoSuchEnum;"))
+      intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch bottomup goo no_such_search;"))
+      intercept[SemaError](s.execute("\\cardinality_estimator NoSuchEstimator;"))
+      // per-space heuristics: avg_sel exists bottom-up only (ref
+      // hpp:2028), sqrt_sum top-down only (hpp:1790)
+      intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch topdown avg_sel;"))
+      intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch bottomup sqrt_sum;"))
+      intercept[SemaError](s.execute("\\plan_enumerator HeuristicSearch sideways goo;"))
+      // nothing leaked into the conf
+      assert(spark.conf.getOption(JoinReorderRule.EnumeratorConf).isEmpty)
+      assert(spark.conf.getOption(JoinReorderRule.EstimatorConf).isEmpty)
+    }
   }
 
+  /** Every message along an exception's cause chain. */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Nil
+    else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+
   test("the rule consults the conf (bad value surfaces at planning)") {
-    spark.conf.set(JoinReorderRule.EnumeratorConf, "garbage")
-    spark.experimental.extraOptimizations = Seq(JoinReorderRule)
-    try {
-      val e = intercept[Exception](join5Results())
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil
-        else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    withConfs {
+      spark.conf.set(JoinReorderRule.EnumeratorConf, "garbage")
+      val e = intercept[Exception](join5.collect())
       assert(msgs(e).exists(_.contains("no plan enumerator")), e.toString)
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      clearConfs()
     }
   }
 
   test("bad estimator conf surfaces even on 2-way joins") {
-    import TestSession._
-    spark.conf.set(JoinReorderRule.EstimatorConf, "bogus")
-    spark.experimental.extraOptimizations = Seq(JoinReorderRule)
-    try {
+    withConfs {
+      spark.conf.set(JoinReorderRule.EstimatorConf, "bogus")
       // a plain PK-FK join flattens to 2 leaves — below the reorder
       // threshold, but the estimator conf must still be validated
       val n = spark.read.parquet(s"$sf/nation.parquet")
       val r = spark.read.parquet(s"$sf/region.parquet")
       val e = intercept[Exception](
         n.join(r, n("n_regionkey") === r("r_regionkey")).count())
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil
-        else Option(t.getMessage).toSeq ++ msgs(t.getCause)
       assert(msgs(e).exists(_.contains("no cardinality estimator")), e.toString)
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      clearConfs()
     }
   }
 

@@ -250,17 +250,8 @@ class TrainedCostSpec extends AnyFunSuite {
   }
 
   test("the production rule accepts the trained cost model and preserves results") {
-    val base = operators.Relational.join5Way(spark, sf)
-      .collect().map(_.toSeq.toString).sorted
     graft.optimizer.JoinReorderRule.costModel = new TrainedCostFunction(models)
-    spark.experimental.extraOptimizations = Seq(graft.optimizer.JoinReorderRule)
-    try {
-      val reordered = operators.Relational.join5Way(spark, sf)
-        .collect().map(_.toSeq.toString).sorted
-      assert(reordered.toSeq == base.toSeq)
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      graft.optimizer.JoinReorderRule.costModel = TrainedCost.CoutModel
-    }
+    try assertReorderKeepsRows(operators.Relational.join5Way(spark, sf))
+    finally graft.optimizer.JoinReorderRule.costModel = TrainedCost.CoutModel
   }
 }

@@ -127,6 +127,38 @@ class WorkCountSpec extends AnyFunSuite {
     assert(n <= 20, s"building the clustering ran $n jobs")
   }
 
+  test("a second pass over every registered query compiles no generated class") {
+    // the queries that still compile on a warm re-run, each with the
+    // most classes it compiled in the second pass when measured (both
+    // class-name confs of Engine.session on, sf0.001, name order)
+    val allowed = Map(
+      // current_timestamp() stamps each run's rows (`ingest_ts`), and
+      // the planner inlines it as a new long literal every run
+      "docs_dedup_stream" -> 2,
+      // each run builds new typed encoders for the state rows, and the
+      // lambda variables of their collection converters take fresh ids
+      // from a JVM-wide counter (`MapObject_lambda_variable_4` in one
+      // run, `_13` in the next), so the same code misses every run
+      "events_moving_avg_stream" -> 2,
+      "docs_heavy_hitters_stream" -> 1,
+      // its second run plans two whole stages unlike its first (other
+      // grouping keys fused into the stage); a third run compiles
+      // nothing. Why the second plan differs is not known yet
+      "stats_ks_drift" -> 4)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    def pass(): Map[String, Long] = names.map { q =>
+      val n = tools.Harness.coldRun(spark, q, sf).codegen.compiles
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+      q -> n
+    }.toMap
+    val first = pass()
+    val second = pass()
+    println(s"[workcount] compiles: first pass ${first.values.sum}, second pass " +
+      second.filter(_._2 > 0).toSeq.sorted.map { case (q, n) => s"$q $n" }.mkString(", "))
+    val over = second.filter { case (q, n) => n > allowed.getOrElse(q, 0) }
+    assert(over.isEmpty, s"recompiled on the second pass: $over")
+  }
+
   test("a curation op re-run after the other six compiles no generated class") {
     // the seven ops of one benchmark curation cycle: with Spark's
     // default 100-entry class cache they evict each other, and each
